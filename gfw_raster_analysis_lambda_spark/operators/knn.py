@@ -18,6 +18,8 @@ Ties at the k-boundary break deterministically on (distance, image_id).
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
@@ -25,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import grid as G
+from ..plans.driver import local_frame, read_bounded
 
 
 def _hamming(a, b):
@@ -175,6 +178,37 @@ def query_cell_expr(grid_name: str, lon, lat):
     return F.lit(grid.index << (xb + yb)) + F.shiftleft(x, yb) + y
 
 
+KNN_DRIVER_QUERY_LIMIT = 16  # query points answered on the driver path
+_DIST_COL = {"sqdeg": "dist2", "haversine": "dist_km"}
+_R_KM = 6371.0088
+_KM_PER_DEG = math.pi * _R_KM / 180.0
+
+
+def _geo_distance(metric: str, lon, lat, c_lon, c_lat):
+    """The query-to-centroid distance Column. Both kNN paths evaluate this
+    one expression in the JVM, so their distances (and so their rankings)
+    are bit-identical."""
+    dx = lon - c_lon
+    dy = lat - c_lat
+    if metric == "sqdeg":
+        return dx * dx + dy * dy
+    qr, cr = F.radians(lat), F.radians(c_lat)
+    a = (
+        F.pow(F.sin(F.radians(dy) / 2), 2)
+        + F.cos(qr) * F.cos(cr) * F.pow(F.sin(F.radians(dx) / 2), 2)
+    )
+    return F.lit(2.0 * _R_KM) * F.asin(F.sqrt(a))
+
+
+def _ring_bound(metric: str, r: int, td: float, lat: float) -> float:
+    """Lower bound on the distance of any point outside Chebyshev ring
+    ``r`` of the query's cell (the derivation is in :func:`knn_geo`)."""
+    if metric == "sqdeg":
+        return float(r * td) ** 2
+    worst_lat = min(90.0, abs(lat) + float((r + 1) * td))
+    return float(r * td) * _KM_PER_DEG * max(0.0, math.cos(math.radians(worst_lat)))
+
+
 def knn_geo(
     images: DataFrame,  # must carry cell_id
     queries: DataFrame,  # (query_id, lon, lat)
@@ -199,7 +233,7 @@ def knn_geo(
 
     Same expanding-ring skeleton as :func:`knn_phash_pruned_auto`, but
     with geometry the ring search is EXACT-GLOBAL, not local-best: a
-    query stops only when its k-th distance is inside the ring's
+    query stops only when its k-th distance is strictly below the ring's
     distance lower bound, otherwise the ring doubles — so the result
     equals the global scan's top-k while reading only O(k) cells per
     query. The bound per metric: any point of a cell OUTSIDE Chebyshev
@@ -211,20 +245,119 @@ def knn_geo(
     Near the poles the cos factor approaches 0 and pruning degrades to
     the max_ring scan — correct, just not pruned.
 
+    Two plans run this search. Up to ``KNN_DRIVER_QUERY_LIMIT`` query
+    points take the driver path: the points are read once (one bounded
+    query), their ring cells are enumerated on the driver, and one
+    JVM-only scan reads ``image_id, cell_id`` of just those cells with
+    the distance computed in the scan. The driver picks each query's
+    top k and checks the ring bound; only queries it cannot prove are
+    scanned again, over the cells their wider ring adds. The result is a
+    ``LocalRelation``. Larger query sets take the distributed plan: a
+    broadcast ring join and a windowed top-k per round, with the pending
+    queries routed relationally between rounds.
+
     Ties at the k boundary break on (distance, image_id).
     """
-    import math
-
-    from pyspark.sql import types as T
-
     if ring < 1 or max_ring < ring:
         raise ValueError(f"need 1 <= ring <= max_ring (got {ring}, {max_ring})")
-    if metric not in ("sqdeg", "haversine"):
+    if metric not in _DIST_COL:
         raise ValueError(f"metric must be sqdeg|haversine, got {metric!r}")
+    points = read_bounded(queries, ["query_id", "lon", "lat"], KNN_DRIVER_QUERY_LIMIT)
+    if points is not None:
+        return _knn_geo_driver(images, queries, points, k, ring, max_ring, grid_name, metric)
+    return _knn_geo_distributed(images, queries, k, ring, max_ring, grid_name, metric)
+
+
+def _query_cell(grid, lon: float, lat: float) -> int:
+    """:func:`query_cell_expr` evaluated on the driver (same arithmetic)."""
+    xb, yb = G._X_BITS, G._Y_BITS
+    x = math.floor((lon + 180.0) / grid.tile_deg)
+    y = math.floor((90.0 - lat) / grid.tile_deg)
+    return (grid.index << (xb + yb)) + (x << yb) + y
+
+
+def _knn_geo_driver(images, queries, points, k, ring, max_ring, grid_name, metric):
     grid = G.get_grid(grid_name)
     td = grid.tile_deg
-    _R_KM = 6371.0088
-    _KM_PER_DEG = math.pi * _R_KM / 180.0
+    pts = [(p["query_id"], float(p["lon"]), float(p["lat"])) for p in points]
+    own = [_query_cell(grid, lon, lat) for _, lon, lat in pts]
+    seen: list = [set() for _ in pts]   # cells scanned per query
+    cand: list = [[] for _ in pts]      # (distance, image_id) per query
+    top: list = [None] * len(pts)
+    pending = list(range(len(pts)))
+    r = int(ring)
+    while pending:
+        fresh = []
+        for qi in pending:
+            cells = [c for c in G.k_ring(grid, own[qi], r).tolist() if c not in seen[qi]]
+            seen[qi].update(cells)
+            fresh.append(cells)
+        for qi, iid, d in _scan_cells(images, grid_name, metric, [pts[q] for q in pending], fresh):
+            cand[pending[qi]].append((d, iid))
+        still = []
+        for qi in pending:
+            best = sorted(cand[qi])[:k]
+            # STRICT <: the bound is the minimum possible distance of an
+            # unexplored cell, so at dk == bound an unexplored point at
+            # exactly that distance with a smaller image_id would win the
+            # (distance, image_id) tie-break
+            if r >= max_ring or (
+                len(best) >= k and best[-1][0] < _ring_bound(metric, r, td, pts[qi][2])
+            ):
+                top[qi] = best
+            else:
+                still.append(qi)
+        pending = still
+        r = min(r * 2, int(max_ring))
+    dcol = _DIST_COL[metric]
+    schema = T.StructType([
+        T.StructField("query_id", queries.schema["query_id"].dataType),
+        T.StructField("image_id", images.schema["image_id"].dataType),
+        T.StructField(dcol, T.DoubleType()),
+        T.StructField("rank", T.IntegerType()),
+    ])
+    rows = [
+        (pts[qi][0], iid, d, rank)
+        for qi in range(len(pts)) for rank, (d, iid) in enumerate(top[qi], start=1)
+    ]
+    cols = list(zip(*rows)) or [()] * len(schema)
+    return local_frame(
+        images.sparkSession, {f.name: list(c) for f, c in zip(schema, cols)}, schema
+    )
+
+
+def _scan_cells(images, grid_name, metric, pts, cells) -> list:
+    """One JVM-only scan: ``(i, image_id, distance)`` for every image in
+    ``cells[i]``, the distance measured from point ``pts[i]``. The scan is
+    pruned to the cells' literal IN set; a literal map from cell to the
+    points that want it pairs each tile with its points."""
+    by_cell: dict = {}
+    for i, cs in enumerate(cells):
+        for c in cs:
+            by_cell.setdefault(int(c), []).append(i)
+    if not by_cell:
+        return []
+    to_points = F.expr(
+        "map(" + ",".join(f"{c}L, array({','.join(map(str, ix))})" for c, ix in by_cell.items()) + ")"
+    )
+    qi = F.col("_qi")
+    lon = F.array(*[F.lit(p[1]) for p in pts])[qi]
+    lat = F.array(*[F.lit(p[2]) for p in pts])[qi]
+    c_lon, c_lat = _centroid_cols(grid_name)
+    return (
+        images.select("image_id", "cell_id")
+        .filter(F.expr(f"cell_id IN ({','.join(map(str, by_cell))})"))
+        .select("image_id", "cell_id", F.explode(to_points[F.col("cell_id")]).alias("_qi"))
+        .select("_qi", "image_id", _geo_distance(metric, lon, lat, c_lon, c_lat))
+        .collect()
+    )
+
+
+def _knn_geo_distributed(images, queries, k, ring, max_ring, grid_name, metric):
+    """The multi-round plan of :func:`knn_geo` for query sets over the
+    driver bound."""
+    grid = G.get_grid(grid_name)
+    td = grid.tile_deg
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def ring_cells(cells: pd.Series, rr: pd.Series) -> pd.Series:
@@ -233,6 +366,7 @@ def knn_geo(
             for c, r in zip(cells, rr)
         ])
 
+    dcol = _DIST_COL[metric]
     clon, clat = _centroid_cols(grid_name)
     pts = images.select("image_id", "cell_id").withColumn(
         "c_lon", clon
@@ -250,18 +384,7 @@ def knn_geo(
                 ).alias("cell_id"),
             )
         )
-        dx = F.col("lon") - F.col("c_lon")
-        dy = F.col("lat") - F.col("c_lat")
-        if metric == "sqdeg":
-            dist, dcol = dx * dx + dy * dy, "dist2"
-        else:
-            qr, cr = F.radians("lat"), F.radians("c_lat")
-            a = (
-                F.pow(F.sin(F.radians(dy) / 2), 2)
-                + F.cos(qr) * F.cos(cr) * F.pow(F.sin(F.radians(dx) / 2), 2)
-            )
-            dist = F.lit(2.0 * _R_KM) * F.asin(F.sqrt(a))
-            dcol = "dist_km"
+        dist = _geo_distance(metric, F.col("lon"), F.col("lat"), F.col("c_lon"), F.col("c_lat"))
         scored = pts.join(ringdf, "cell_id").withColumn(dcol, dist)
         w = Window.partitionBy("query_id").orderBy(F.asc(dcol), F.asc("image_id"))
         return (
@@ -270,7 +393,6 @@ def knn_geo(
             .select("query_id", "image_id", dcol, F.col("rn").alias("rank"))
         )
 
-    dcol = "dist2" if metric == "sqdeg" else "dist_km"
     pending = queries
     parts = []
     r = int(ring)
@@ -279,9 +401,8 @@ def knn_geo(
         if r >= max_ring:
             parts.append(got)
             break
-        # exact-global stop: k rows AND the k-th distance inside the ring
-        # bound (any unexplored cell is >= r*td away in Chebyshev degrees;
-        # see the docstring for the per-metric lower bound)
+        # exact-global stop: k rows AND the k-th distance strictly inside
+        # the ring bound (the Column form of _ring_bound)
         if metric == "sqdeg":
             bound = F.lit(float(r * td) ** 2)
         else:
@@ -296,10 +417,7 @@ def knn_geo(
             got.groupBy("query_id")
             .agg(F.count(F.lit(1)).alias("n"), F.max(dcol).alias("dk"))
             .join(F.broadcast(pending.select("query_id", "lat")), "query_id")
-            # STRICT <: bound is the minimum possible distance of an
-            # unexplored cell, so at dk == bound an unexplored point at
-            # exactly that distance with a smaller image_id would win the
-            # (distance, image_id) tie-break — boundary ties force one
+            # STRICT <, as on the driver path: boundary ties force one
             # more expansion round instead of stopping early
             .filter((F.col("n") >= k) & (F.col("dk") < bound))
             .select("query_id")

@@ -491,8 +491,7 @@ def polygon_pairs(
 
     Geometry re-attach degrades gracefully past the broadcast bound: the
     AOI table's row count and total WKB bytes are probed RELATIONALLY
-    first (one tiny agg job, the ``_probe_aoi_batch`` pattern — no
-    geometry crosses the wire), and a batch too large to broadcast
+    first (one tiny agg job — no geometry crosses the wire), and a batch too large to broadcast
     attaches via plain shuffle hash joins on the id instead — same
     result, two Exchanges of O(candidate pairs) rows, no driver/executor
     OOM from a multi-GB broadcast."""

@@ -36,8 +36,7 @@ loop hand-walking rays:
    whole-stage codegen — no Python in the O(px * R) hot path.
 4. **Broadcast-or-shuffle lookup.** The sample -> elevation join
    broadcasts the pixel frame when the radius disc is small enough
-   (probed RELATIONALLY with one count, the `_probe_aoi_batch`
-   pattern), else hash-joins on the lattice coordinate.
+   (probed RELATIONALLY with one count), else hash-joins on the lattice coordinate.
 5. **Map-side combined verdicts.** The per-target `max(blocked)` is a
    partial-aggregatable groupBy: O(px * R) sample rows reduce to
    O(px) verdicts before the final O(cells) zonal rollup.

@@ -16,6 +16,21 @@ size — SURVEY.md section 4):
   images scan never shuffles.
 - Large AOI batches -> shuffle hash join on cell_id with AQE skew
   splitting; optional explicit salting is in operators/spatial_join.py.
+
+Reading the AOI batch. The frame is scanned ONCE per request: one bounded
+query (:func:`plans.driver.read_bounded`) returns either all its rows or
+the verdict that the batch is over the driver bounds
+(``DRIVER_ENUM_AOI_LIMIT`` rows, ``DRIVER_ENUM_WKB_BYTES`` geometry
+bytes); over-bound geometry never reaches the driver. Within the bounds
+the driver enumerates polygon->cells itself (aborting past
+``BROADCAST_CELL_LIMIT`` AOI-cells), ships the lookup as a broadcast, and
+the result is small enough to be sorted in one task instead of through a
+range-partitioned global sort. Over any bound the request takes the
+distributed route: polygon->cells in a pandas UDF, then either a
+collected lookup (when the AOI-cells still fit) or the reference-shaped
+shuffle join, which collects nothing. Small frames the planner builds
+itself (cell lists, the salt dimension) are ``LocalRelation``s, so they
+never cost a Python job.
 """
 
 from __future__ import annotations
@@ -39,6 +54,7 @@ from ..sources.catalog import (
     MultiDerivedLayer,
     SourceLayer,
 )
+from .driver import local_frame, read_bounded
 from .ir import Aggregate, ZonalQuery
 
 BROADCAST_CELL_LIMIT = 2_000_000  # aoi-cell rows we are happy to broadcast
@@ -134,23 +150,23 @@ def run_zonal_query(
             return _finalize_pixels(out, query)
         partials = build_partials(images, cells, query, env, grid_name, broadcast_aoi)
         return finalize_partials(partials, query, env)
+    colocated = strategy == "colocated"
+    if aoi_index is not None and aoi_index.grid_name != grid_name:
+        raise ValueError(
+            f"aoi_index was prepared on grid {aoi_index.grid_name!r} but the "
+            f"query resolves to {grid_name!r}; prepare one per target grid"
+        )
+    if aoi_index is None:
+        aoi_index = prepare_aoi_index(spark, aoi_df, grid_name)
     if aoi_index is not None:
-        if aoi_index.grid_name != grid_name:
-            raise ValueError(
-                f"aoi_index was prepared on grid {aoi_index.grid_name!r} but the "
-                f"query resolves to {grid_name!r}; prepare one per target grid"
-            )
         out = build_partials_with_lookup(
-            images, aoi_index.lookup, aoi_index.salted, query, env, grid_name,
-            colocated=(strategy == "colocated"),
+            images, aoi_index.lookup, aoi_index.salted, query, env, grid_name, colocated
         )
     else:
-        out = build_partials_by_cell(
-            images, aoi_df, query, env, grid_name, colocated=(strategy == "colocated")
-        )
+        out = _build_partials_over_bound(images, aoi_df, query, env, grid_name, colocated)
     if query.select_pixels:
         return _finalize_pixels(out, query)
-    return finalize_partials(out, query, env)
+    return finalize_partials(out, query, env, bounded=aoi_index is not None)
 
 
 VALUE_ROLLUP_FUNCS = ("percentile", "mode", "count_distinct", "variance", "stddev")
@@ -392,21 +408,6 @@ DRIVER_ENUM_AOI_LIMIT = 100_000  # AOI rows enumerated driver-side
 DRIVER_ENUM_WKB_BYTES = 256 * 2**20  # total geometry bytes collected driver-side
 
 
-def _probe_aoi_batch(aoi_df: DataFrame) -> list | None:
-    """Collect the AOI batch for driver-side enumeration — or return None
-    when it must take the distributed path. The row-count AND total WKB
-    bytes are probed RELATIONALLY first (one tiny agg job, no geometry
-    crosses the wire), so a batch of million-vertex country polygons is
-    rejected before a single vertex is materialized on the driver."""
-    stats = aoi_df.select(
-        F.count("*").alias("n"),
-        F.coalesce(F.sum(F.length("geom_wkb")), F.lit(0)).alias("b"),
-    ).collect()[0]
-    if stats["n"] > DRIVER_ENUM_AOI_LIMIT or stats["b"] > DRIVER_ENUM_WKB_BYTES:
-        return None
-    return aoi_df.select("aoi_id", "geom_wkb").collect()
-
-
 def _aoi_lookup_from_aois(spark: SparkSession, rows: list, grid_name: str,
                           max_aois_per_task: int, cell_limit: int | None = None):
     """Driver-side polygon->cells enumeration — the reference's coordinator
@@ -489,12 +490,20 @@ def prepare_aoi_index(
     """Build an :class:`AoiIndex` for ``aoi_df`` on ``grid_name``; returns
     ``None`` when the batch exceeds the broadcast bound (callers then run
     the normal per-query path, which routes to the distributed
-    shuffle-join plan)."""
-    probe = _probe_aoi_batch(aoi_df)
-    if probe is None:
+    shuffle-join plan).
+
+    The AOI frame is read once: one bounded query decides the row-count
+    AND total WKB-bytes bounds and returns the rows, so a batch of
+    million-vertex country polygons is rejected without a single vertex
+    reaching the driver."""
+    rows = read_bounded(
+        aoi_df, ["aoi_id", "geom_wkb"], DRIVER_ENUM_AOI_LIMIT,
+        bytes_col="geom_wkb", max_bytes=DRIVER_ENUM_WKB_BYTES,
+    )
+    if rows is None:
         return None
     lookup, salted = _aoi_lookup_from_aois(
-        spark, probe, grid_name, max_aois_per_task, cell_limit=BROADCAST_CELL_LIMIT
+        spark, rows, grid_name, max_aois_per_task, cell_limit=BROADCAST_CELL_LIMIT
     )
     if lookup is None:
         return None
@@ -523,39 +532,44 @@ def build_partials_by_cell(
     which collects NOTHING and relies on AQE skew splitting. Both plans
     emit the identical partial schema, so callers never notice beyond the
     physical strategy."""
-    spark = images.sparkSession
-    probe = _probe_aoi_batch(aoi_df)
-    lookup = salted = None
-    if probe is not None:
-        # small batch: enumerate cells on the driver (one collect, no UDF
-        # job), aborting early if the volume exceeds the broadcast bound
-        lookup, salted = _aoi_lookup_from_aois(
-            spark, probe, grid_name, max_aois_per_task,
-            cell_limit=BROADCAST_CELL_LIMIT,
+    idx = prepare_aoi_index(images.sparkSession, aoi_df, grid_name, max_aois_per_task)
+    if idx is not None:
+        return build_partials_with_lookup(
+            images, idx.lookup, idx.salted, query, env, grid_name, colocated
         )
-        cells = None
-    else:
-        # big batch: count the aoi-cell rows DISTRIBUTED first; collect the
-        # lookup only when it provably fits the broadcast bound. The
-        # polygon->cells enumeration is the expensive part, so persist it:
-        # count, (collect | shuffle-join plan) all reuse one job's output.
-        cells = aoi_cells(aoi_df, grid_name).persist()
-        stats = cells.select(
-            F.count("*").alias("n"),
-            F.coalesce(F.sum(F.length("geom_wkb")), F.lit(0)).alias("b"),
-        ).collect()[0]
-        # collecting the lookup pulls one geometry copy PER aoi-cell row,
-        # so the byte bound applies here too — over it, never collect
-        if stats["n"] <= BROADCAST_CELL_LIMIT and stats["b"] <= DRIVER_ENUM_WKB_BYTES:
-            lookup, salted = _aoi_lookup(spark, cells, max_aois_per_task)
-            cells.unpersist()
-    if lookup is not None:
+    return _build_partials_over_bound(
+        images, aoi_df, query, env, grid_name, colocated, max_aois_per_task
+    )
+
+
+def _build_partials_over_bound(
+    images: DataFrame,
+    aoi_df: DataFrame,
+    query: ZonalQuery,
+    env: DataEnvironment,
+    grid_name: str,
+    colocated: bool,
+    max_aois_per_task: int = MAX_AOIS_PER_TASK,
+) -> DataFrame:
+    """The distributed route for an AOI batch over the driver bounds."""
+    # count the aoi-cell rows DISTRIBUTED first; collect the lookup only
+    # when it provably fits the broadcast bound. The polygon->cells
+    # enumeration is the expensive part, so persist it: count, (collect |
+    # shuffle-join plan) all reuse one job's output.
+    cells = aoi_cells(aoi_df, grid_name).persist()
+    stats = cells.select(
+        F.count("*").alias("n"),
+        F.coalesce(F.sum(F.length("geom_wkb")), F.lit(0)).alias("b"),
+    ).collect()[0]
+    # collecting the lookup pulls one geometry copy PER aoi-cell row,
+    # so the byte bound applies here too — over it, never collect
+    if stats["n"] <= BROADCAST_CELL_LIMIT and stats["b"] <= DRIVER_ENUM_WKB_BYTES:
+        lookup, salted = _aoi_lookup(images.sparkSession, cells, max_aois_per_task)
+        cells.unpersist()
         return build_partials_with_lookup(
             images, lookup, salted, query, env, grid_name, colocated
         )
     # over the broadcast bound: reference-shaped shuffle-join plan
-    if cells is None:
-        cells = aoi_cells(aoi_df, grid_name)
     builder = build_pixels if query.select_pixels else build_partials
     return builder(images, cells, query, env, grid_name, broadcast_aoi=False)
 
@@ -654,31 +668,34 @@ def _prune_cells(imgs: DataFrame, cell_ids: list) -> DataFrame:
     ranges = _gap_split_ranges(cell_ids)
     cond = " OR ".join(f"(`cell_id` BETWEEN {lo} AND {hi})" for lo, hi in ranges)
     imgs = imgs.filter(F.expr(cond))
-    spark = imgs.sparkSession
-    cells_df = spark.createDataFrame(
-        pd.DataFrame({"cell_id": np.asarray(sorted({int(c) for c in cell_ids}), dtype=np.int64)})
+    cells_df = local_frame(
+        imgs.sparkSession, {"cell_id": np.asarray(sorted({int(c) for c in cell_ids}), dtype=np.int64)}
     )
     return imgs.join(F.broadcast(cells_df), "cell_id", "left_semi")
 
 
 def _with_missing_cells(spark, imgs: DataFrame, cell_ids: list) -> DataFrame:
     """Missing-cell tolerance (S2): synthesize one null tile row for each
-    AOI cell with no stored tiles, so FROM_DATA queries count them."""
-    present = imgs.select("cell_id").distinct()
-    missing = (
-        spark.createDataFrame([(int(c),) for c in cell_ids], "cell_id long")
-        .join(F.broadcast(present), "cell_id", "left_anti")
-        .select(
-            F.lit(None).cast("string").alias("layer"),
-            F.col("cell_id"),
-            F.lit(None).cast("binary").alias("bytes"),
-            F.lit(None).cast("int").alias("w"),
-            F.lit(None).cast("int").alias("h"),
-            F.lit(None).cast("string").alias("fmt"),
-            F.col("cell_id").alias("src_cell_id"),
-        )
+    AOI cell with no stored tiles, so FROM_DATA queries count them. The
+    present cells come to the driver in one JVM-only scan of the (pruned)
+    cell column. The missing ones join the kernel's input as a one-
+    partition LocalRelation, and not at all when there are none: every
+    input partition of the kernel stage costs a Python task, even an
+    empty one."""
+    present = imgs.select("cell_id").toArrow().column(0).to_numpy()
+    missing = np.setdiff1d(np.asarray(cell_ids, dtype=np.int64), present)
+    if not missing.size:
+        return imgs
+    rows = local_frame(spark, {"cell_id": missing}).coalesce(1).select(
+        F.lit(None).cast("string").alias("layer"),
+        F.col("cell_id"),
+        F.lit(None).cast("binary").alias("bytes"),
+        F.lit(None).cast("int").alias("w"),
+        F.lit(None).cast("int").alias("h"),
+        F.lit(None).cast("string").alias("fmt"),
+        F.col("cell_id").alias("src_cell_id"),
     )
-    return imgs.unionByName(missing)
+    return imgs.unionByName(rows)
 
 
 def _dispatch_cell_plan(spark, imgs: DataFrame, salted: dict, wrapped, schema: str,
@@ -952,7 +969,7 @@ def run_zonal_queries(
     ).persist()
     out: "dict[str, DataFrame]" = {}
     for qi, (name, q) in enumerate(zip(names, exec_list)):
-        res = finalize_partials(split_multi_partials(partials, qi, q), q, env)
+        res = finalize_partials(split_multi_partials(partials, qi, q), q, env, bounded=True)
         out[name] = finishers[name](res) if name in finishers else res
     return ZonalResultSet(
         out, partials=partials, aoi_index=idx, owns_index=aoi_index is None
@@ -965,9 +982,10 @@ def _salted_cell_plan(spark, imgs: DataFrame, salted: dict, wrapped, schema: str
     cells) and fed to the kernel via applyInPandas."""
     group_keys = ["cell_id"]
     if salted:
-        salt_dim = spark.createDataFrame(
-            [(int(c), int(n)) for c, n in salted.items()], "cell_id long, _n_salt int"
-        )
+        salt_dim = local_frame(spark, {
+            "cell_id": np.fromiter(salted.keys(), dtype=np.int64, count=len(salted)),
+            "_n_salt": np.fromiter(salted.values(), dtype=np.int32, count=len(salted)),
+        })
         imgs = (
             imgs.join(F.broadcast(salt_dim), "cell_id", "left")
             .withColumn(
@@ -1129,15 +1147,22 @@ def _wrap_with_keys(kernel, with_cell: bool = True):
     return run
 
 
-def finalize_partials(partials: DataFrame, query: ZonalQuery, env: DataEnvironment) -> DataFrame:
-    return _finalize_aggregates(partials.drop("cell_id", "_ms"), query, env)
+def finalize_partials(
+    partials: DataFrame, query: ZonalQuery, env: DataEnvironment, bounded: bool = False
+) -> DataFrame:
+    """Final aggregation of partial rows. ``bounded`` says the AOI batch
+    was within the driver bounds, so the result is small (see
+    :func:`_order_and_limit`)."""
+    return _finalize_aggregates(partials.drop("cell_id", "_ms"), query, env, bounded)
 
 
 # ---------------------------------------------------------------------------
 # Final relational shell (all Catalyst)
 # ---------------------------------------------------------------------------
 
-def _finalize_aggregates(partials: DataFrame, query: ZonalQuery, env: DataEnvironment) -> DataFrame:
+def _finalize_aggregates(
+    partials: DataFrame, query: ZonalQuery, env: DataEnvironment, bounded: bool = False
+) -> DataFrame:
     group_cols = ["aoi_id"]
     for g in query.group_layers:
         if g in query.isoweek_layers:
@@ -1176,14 +1201,20 @@ def _finalize_aggregates(partials: DataFrame, query: ZonalQuery, env: DataEnviro
     # happened inside the kernel
     df = _decode_group_columns(df, query, env)
 
-    return _order_and_limit(df, query, [c for c in group_cols if c in df.columns])
+    return _order_and_limit(df, query, [c for c in group_cols if c in df.columns], bounded)
 
 
-def _order_and_limit(df: DataFrame, query: ZonalQuery, default_sort: list[str]) -> DataFrame:
+def _order_and_limit(
+    df: DataFrame, query: ZonalQuery, default_sort: list[str], bounded: bool = False
+) -> DataFrame:
     """ORDER BY / LIMIT (O1/O2). The reference runs one query per AOI, so
     LIMIT is per-AOI: a windowed top-k partitioned by aoi_id (Catalyst
     rewrites rank-filter windows to a per-partition TopK, no full sort of
-    non-surviving rows)."""
+    non-surviving rows).
+
+    The presentation order is global. For a ``bounded`` (driver-sized)
+    AOI batch the few result rows are sorted in one task, which gives the
+    same order without the range sort's sampling job and exchange."""
     order = (
         [F.col(o.column).asc() if o.ascending else F.col(o.column).desc() for o in query.order_by]
         if query.order_by
@@ -1201,7 +1232,10 @@ def _order_and_limit(df: DataFrame, query: ZonalQuery, default_sort: list[str]) 
     elif query.limit is not None:
         df = df.limit(query.limit)
     # deterministic presentation order across the whole batch
-    return df.orderBy(F.col("aoi_id"), *order) if order else df.orderBy("aoi_id")
+    keys = [F.col("aoi_id"), *order]
+    if bounded:
+        return df.coalesce(1).sortWithinPartitions(*keys)
+    return df.orderBy(*keys)
 
 
 def _decode_group_columns(df: DataFrame, query: ZonalQuery, env: DataEnvironment) -> DataFrame:

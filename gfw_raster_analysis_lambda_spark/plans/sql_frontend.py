@@ -23,8 +23,8 @@ Plan-time rewrites applied here (constant folding, SURVEY.md section 4):
 - filter literals encoded from meaning space to raw pixel space via the
   layer catalog (possibly expanding to IN-lists);
 - every referenced layer validated against the environment (unknown layer
-  -> QueryParseError, the reference's fail-fast status path,
-  test_raster_analysis.py:449-460).
+  -> UnknownLayerError, both a QueryParseError — the reference's fail-fast
+  status path, test_raster_analysis.py:449-460 — and a LayerNotFoundError).
 """
 
 from __future__ import annotations
@@ -40,6 +40,12 @@ RESERVED_SELECTORS = ("latitude", "longitude")
 
 class QueryParseError(ValueError):
     pass
+
+
+class UnknownLayerError(QueryParseError, LayerNotFoundError):
+    """The query names a layer the environment does not have."""
+
+    __str__ = BaseException.__str__  # the message, not KeyError's repr of it
 
 
 _TOKEN_RE = re.compile(
@@ -304,7 +310,7 @@ class _Parser:
         try:
             self.env.get_layer(name)
         except LayerNotFoundError:
-            raise QueryParseError(f"unknown layer {name!r}") from None
+            raise UnknownLayerError(f"unknown layer {name!r}") from None
 
     # -- assembly -------------------------------------------------------------
     def _assemble(self, base, selectors, where, groups, order, limit) -> ZonalQuery:

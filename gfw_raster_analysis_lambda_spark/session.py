@@ -11,6 +11,13 @@ knobs below are the scale-relevant ones:
   tile; at 5000x5000 uint16 a decoded tile is ~50 MB, so batches must stay
   small. The reference had the same bound as a hard 3 GB lambda cap
   (reference README.md:369); here it is a first-class config.
+
+Defaults are sized from the machine: one task thread and one shuffle
+partition per usable core, and a driver heap of a quarter of physical
+memory (1-32 GiB). In local mode that JVM runs every task, and each core
+also runs a Python worker outside the heap, so the rest of memory is left
+to those workers and the OS. ``SPARK_GRAFT_CPUS``, ``SPARK_MASTER`` and
+``SPARK_DRIVER_MEM`` override the defaults.
 """
 
 from __future__ import annotations
@@ -19,7 +26,23 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def _machine_cpus() -> int:
+    """Cores this process may run on."""
+    try:
+        n = len(os.sched_getaffinity(0))
+    except AttributeError:  # no affinity API on this platform
+        n = os.cpu_count() or 1
+    return max(1, n)
+
+
+def _machine_driver_memory() -> str:
+    """A quarter of physical memory, clamped to 1-32 GiB (see module doc)."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(32 * 1024, max(1024, phys // 4 // 2**20))}m"
+
+
+DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS") or _machine_cpus())
 
 
 def get_spark(
@@ -35,7 +58,7 @@ def get_spark(
     bound for the zonal kernel (each row carries an encoded tile that
     decodes to w*h pixels).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or _machine_cpus()
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     nshuffle = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
     builder = (
@@ -51,7 +74,7 @@ def get_spark(
             "spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch_rows)
         )
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or _machine_driver_memory())
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

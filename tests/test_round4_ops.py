@@ -307,6 +307,60 @@ def test_knn_geo_expands_ring_past_hole(spark):
     assert got == _brute_topk(pts, 10.1, 20.9, 4)
 
 
+def _centroid_points(images):
+    return [
+        (r["image_id"],
+         -180.0 + (r["cell_id"] >> 27 & (1 << 27) - 1) * GRID.tile_deg + GRID.tile_deg / 2,
+         90.0 - (r["cell_id"] & (1 << 27) - 1) * GRID.tile_deg - GRID.tile_deg / 2)
+        for r in images.select("image_id", "cell_id").collect()
+    ]
+
+
+def test_knn_geo_query_bound_edges(spark, monkeypatch):
+    """A query set exactly at KNN_DRIVER_QUERY_LIMIT runs on the driver;
+    one point over it takes the distributed plan. Same rows, ranks and
+    (bit-identical) distances either way."""
+    images = _geo_corpus(spark)
+    qs = spark.createDataFrame(
+        [("g0", 10.31, 20.52), ("g1", 10.97, 20.03)], "query_id string, lon double, lat double"
+    )
+    routes = []
+    for name in ("_knn_geo_driver", "_knn_geo_distributed"):
+        orig = getattr(knn, name)
+
+        def spy(*a, _orig=orig, _name=name, **kw):
+            routes.append(_name)
+            return _orig(*a, **kw)
+
+        monkeypatch.setattr(knn, name, spy)
+    out = {}
+    for limit in (2, 1):
+        monkeypatch.setattr(knn, "KNN_DRIVER_QUERY_LIMIT", limit)
+        rows = knn.knn_geo(images, qs, k=5, ring=1, max_ring=8, grid_name=GRID.name).collect()
+        out[limit] = sorted((r["query_id"], r["rank"], r["image_id"], r["dist2"]) for r in rows)
+    assert routes == ["_knn_geo_driver", "_knn_geo_distributed"]
+    assert len(out[2]) == 10 and out[2] == out[1]
+
+
+def test_knn_geo_just_over_query_bound(spark):
+    """One query point over the driver bound: the distributed plan's
+    answer still equals the global brute force for every point."""
+    images = _geo_corpus(spark)
+    pts = _centroid_points(images)
+    n = knn.KNN_DRIVER_QUERY_LIMIT + 1
+    qs = [(f"q{i:02d}", 10.02 + 0.96 * i / n, 20.04 + 0.92 * ((7 * i) % n) / n) for i in range(n)]
+    out = knn.knn_geo(
+        images, spark.createDataFrame(qs, "query_id string, lon double, lat double"),
+        k=3, ring=1, max_ring=8, grid_name=GRID.name,
+    ).collect()
+    by_q = {}
+    for r in sorted(out, key=lambda r: (r["query_id"], r["rank"])):
+        by_q.setdefault(r["query_id"], []).append(r["image_id"])
+    assert len(by_q) == n
+    for qid, lon, lat in qs:
+        assert by_q[qid] == _brute_topk(pts, lon, lat, 3), qid
+
+
 # ---------------------------------------------------------------------------
 # temperature sampling
 # ---------------------------------------------------------------------------

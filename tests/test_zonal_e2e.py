@@ -1397,3 +1397,149 @@ def test_resultset_materialize_parallel_parity(spark, tables, env):
     for name, exp in serial.items():
         assert_frames_match(by_cols[tuple(sorted(exp.columns))], exp)
     fused.close()
+
+
+# ---------------------------------------------------------------------------
+# interactive requests: job budget, driver bounds, typed errors
+# ---------------------------------------------------------------------------
+
+def _count_jobs(spark, fn):
+    """(fn(), number of Spark jobs fn started), counted under a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture(scope="module")
+def sorted_images(spark, tables, tmp_path_factory):
+    """The fixture images in the cell-sorted layout (colocated plan)."""
+    from gfw_raster_analysis_lambda_spark.sources.images import write_images_cell_sorted
+
+    path = str(tmp_path_factory.mktemp("sorted") / "images")
+    write_images_cell_sorted(tables[0].select(
+        "image_id", "bytes", "w", "h", "fmt", "caption", "phash"
+    ), path, n_files=4)
+    return read_images(spark, path)
+
+
+# the interactive Raster-SQL mix: a filtered grouped sum, an isoweek
+# count and a FROM data area sum, with the most Spark jobs each may run
+# from the call to the collected result
+INTERACTIVE_SQL = [
+    ("SELECT tcl_year, SUM(area__ha) AS loss_ha, COUNT(*) AS n FROM tcl_year "
+     "WHERE tcd_threshold >= 25 AND is_primary = 'true' GROUP BY tcl_year", 4),
+    ("SELECT isoweek(alert_date), COUNT(*) AS n FROM alert_date_conf GROUP BY 1", 4),
+    ("SELECT SUM(area__ha) AS ha, COUNT(*) AS n FROM data", 5),
+]
+
+
+def test_single_aoi_request_job_budget(spark, sorted_images, env):
+    """A single-AOI request over a createDataFrame(list) frame (pickled
+    Python rows: every scan of it is a Python job) scans the AOI once,
+    plans on the driver, skips the range sort, and stays within its job
+    budget — with the oracle's result."""
+    from gfw_raster_analysis_lambda_spark.api import zonal_statistics
+    from gfw_raster_analysis_lambda_spark.plans.sql_frontend import parse_raster_sql
+
+    aoi = fixtures.fixture_aois()[1]
+    for sql, budget in INTERACTIVE_SQL:
+        aoi_df = spark.createDataFrame([aoi], "aoi_id string, geom_wkb binary")
+        got, jobs = _count_jobs(spark, lambda: zonal_statistics(
+            spark, sorted_images, aoi_df, sql, env, GRID_NAME
+        ).toPandas())
+        assert jobs <= budget, (sql, jobs)
+        exp = oracle.run_oracle(parse_raster_sql(sql, env), env, [aoi])
+        assert len(exp)
+        assert_frames_match(got.reset_index(drop=True), exp)
+
+
+def _bound_value(name, aois):
+    from gfw_raster_analysis_lambda_spark.functions import geometry as geo
+    from gfw_raster_analysis_lambda_spark.functions import grid as G
+
+    if name == "DRIVER_ENUM_AOI_LIMIT":
+        return len(aois)
+    if name == "DRIVER_ENUM_WKB_BYTES":
+        return sum(len(w) for _, w in aois)
+    grid = G.get_grid(GRID_NAME)
+    return sum(len(G.polygon_to_cells(grid, geo.wkb_loads(w))) for _, w in aois)
+
+
+@pytest.mark.parametrize(
+    "bound", ["DRIVER_ENUM_AOI_LIMIT", "DRIVER_ENUM_WKB_BYTES", "BROADCAST_CELL_LIMIT"]
+)
+def test_driver_bound_edges(spark, tables, env, monkeypatch, bound):
+    """A batch exactly at a driver bound plans on the driver; one unit over
+    it takes the distributed route. Both give the same rows in the same
+    order (the bounded finalize sorts in one task, the distributed one
+    through the global range sort)."""
+    from gfw_raster_analysis_lambda_spark.plans import planner
+
+    images, _ = tables
+    aois = fixtures.fixture_aois()[:3]
+    aoi_df = spark.createDataFrame(aois, "aoi_id string, geom_wkb binary")
+    q = _parity_query()
+    routes = []
+    orig = planner._build_partials_over_bound
+
+    def spy(*a, **k):
+        routes.append("distributed")
+        return orig(*a, **k)
+
+    monkeypatch.setattr(planner, "_build_partials_over_bound", spy)
+    at = _bound_value(bound, aois)
+    out = {}
+    for limit in (at, at - 1):
+        monkeypatch.setattr(planner, bound, limit)
+        routes.clear()
+        out[limit] = run_zonal_query(
+            spark, images, aoi_df, q, env, GRID_NAME, strategy="cell"
+        ).toPandas()
+        assert routes == ([] if limit == at else ["distributed"]), (bound, limit)
+    driver, dist = out[at], out[at - 1]
+    assert len(driver) and list(driver.columns) == list(dist.columns)
+    for c in driver.columns:
+        if np.issubdtype(driver[c].dtype, np.number):
+            np.testing.assert_allclose(driver[c], dist[c], rtol=1e-9, err_msg=c)
+        else:
+            assert driver[c].tolist() == dist[c].tolist(), c
+    keys = list(zip(driver["aoi_id"], driver["tcl_year"]))
+    assert keys == sorted(keys)
+    assert_frames_match(driver, oracle.run_oracle(q, env, aois))
+
+
+def test_typed_errors_before_any_job(spark, tables, env):
+    """Bad SQL and an unknown layer fail with typed errors from the parse,
+    before the request starts a single Spark job."""
+    from gfw_raster_analysis_lambda_spark.api import zonal_statistics, zonal_statistics_multi
+    from gfw_raster_analysis_lambda_spark.plans.sql_frontend import QueryParseError
+    from gfw_raster_analysis_lambda_spark.sources.catalog import LayerNotFoundError
+
+    images, _ = tables
+    aoi_df = spark.createDataFrame(fixtures.fixture_aois()[:1], "aoi_id string, geom_wkb binary")
+    good = "SELECT SUM(area__ha) AS ha FROM data"
+    cases = [
+        ("SELECT SUM(area__ha FROM data", QueryParseError),
+        ("SELECT SUM(no_such_layer) AS s FROM data", LayerNotFoundError),
+    ]
+    for sql, err in cases:
+        calls = [
+            lambda: zonal_statistics(spark, images, aoi_df, sql, env, GRID_NAME),
+            lambda: zonal_statistics_multi(
+                spark, images, aoi_df, {"good": good, "bad": sql}, env, GRID_NAME
+            ),
+        ]
+        for call in calls:
+            def attempt():
+                with pytest.raises(err):
+                    call()
+            _, jobs = _count_jobs(spark, attempt)
+            assert jobs == 0, sql
