@@ -28,6 +28,8 @@ Scale notes:
 
 from __future__ import annotations
 
+import threading
+
 import numpy as np
 import pandas as pd
 
@@ -292,10 +294,14 @@ def make_cell_kernel(query: ZonalQuery, env_json: str, grid_name: str, aoi_looku
     return kernel
 
 
+# Module caches of the kernel. They live in each Python worker and, on the
+# planner's driver route, in the driver, where concurrent requests share
+# them: the byte-bounded insert/clear runs under a lock.
 _ENV_CACHE: dict[str, DataEnvironment] = {}
 _GEOM_CACHE: dict[bytes, tuple] = {}
 _GEOM_CACHE_BYTES = 0
-_GEOM_CACHE_MAX_BYTES = 256 << 20  # per-executor bound on cached edge arrays
+_GEOM_CACHE_MAX_BYTES = 256 << 20  # per-process bound on cached edge arrays
+_GEOM_CACHE_LOCK = threading.Lock()
 
 
 def _geom_edges(wkb: bytes):
@@ -318,11 +324,14 @@ def _geom_edges(wkb: bytes):
         hit = (geom, edges, meta)
         # meta holds 4 float64 arrays of len(edges) -> ~2x the edge bytes
         nbytes = 3 * edges.nbytes + len(wkb)
-        if _GEOM_CACHE_BYTES + nbytes > _GEOM_CACHE_MAX_BYTES:
-            _GEOM_CACHE.clear()
-            _GEOM_CACHE_BYTES = 0
-        _GEOM_CACHE[wkb] = hit
-        _GEOM_CACHE_BYTES += nbytes
+        with _GEOM_CACHE_LOCK:
+            if wkb in _GEOM_CACHE:  # another thread built it meanwhile
+                return _GEOM_CACHE[wkb]
+            if _GEOM_CACHE_BYTES + nbytes > _GEOM_CACHE_MAX_BYTES:
+                _GEOM_CACHE.clear()
+                _GEOM_CACHE_BYTES = 0
+            _GEOM_CACHE[wkb] = hit
+            _GEOM_CACHE_BYTES += nbytes
     return hit
 
 

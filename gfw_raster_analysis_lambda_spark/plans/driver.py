@@ -55,8 +55,10 @@ def read_bounded(
     return rows
 
 
-def local_frame(spark: SparkSession, columns: dict, schema=None) -> DataFrame:
+def local_frame(spark: SparkSession, columns, schema=None) -> DataFrame:
     """A ``LocalRelation`` frame from driver columns ``{name: values}``
-    (lists or numpy arrays; the Arrow type is inferred unless ``schema``,
-    a ``StructType``, is given)."""
+    (lists or numpy arrays) or a pandas frame. The Arrow types are
+    inferred, then cast to ``schema`` (a ``StructType``) when it is given;
+    a value the cast would change raises instead of falling back to a
+    pickled-row frame."""
     return spark.createDataFrame(pa.table(columns), schema)

@@ -31,6 +31,18 @@ collected lookup (when the AOI-cells still fit) or the reference-shaped
 shuffle join, which collects nothing. Small frames the planner builds
 itself (cell lists, the salt dimension) are ``LocalRelation``s, so they
 never cost a Python job.
+
+The driver route. A Python task costs a fixed ~0.3 s here whatever its
+input, so a small request runs the unchanged cell kernel on the driver
+instead (:func:`_driver_cell_plan`): one JVM-only Arrow scan of the
+pruned tile rows, the kernel per cell, and the partials handed to the
+Catalyst finalize as a one-partition ``LocalRelation`` (no exchange, one
+job). The route is taken when the strategy is auto, the query
+aggregates, the AOI batch has an :class:`AoiIndex`, and the kernel work
+(AOI-cell pairs x cell pixels) is at most ``DRIVER_KERNEL_PX_LIMIT``.
+Explicit strategies, pixel selects and bigger batches keep the
+distributed kernel plans, and so do direct callers of the
+``build_*_with_lookup`` builders.
 """
 
 from __future__ import annotations
@@ -128,6 +140,9 @@ def run_zonal_query(
       the fallback for AOI batches too large to broadcast as a lookup
       (pass ``broadcast_aoi=False`` for a plain shuffle join with AQE
       skew splitting — nothing is ever collected to the driver).
+
+    With ``strategy`` auto, a small aggregate request runs the kernel on
+    the driver instead (module docstring, "The driver route").
     """
     grid_name = resolve_target_grid(query, env, grid_name)
     if any(a.func in VALUE_ROLLUP_FUNCS for a in query.aggregates):
@@ -135,7 +150,8 @@ def run_zonal_query(
             spark, images, aoi_df, query, env, grid_name,
             strategy=strategy, aoi_index=aoi_index,
         )
-    if strategy in (None, "auto"):
+    auto = strategy in (None, "auto")
+    if auto:
         # frames read straight off a cell-sorted layout (sources.images
         # sidecar) default to the zero-shuffle colocated scan; anything
         # else takes the one-shuffle cell-clustered plan
@@ -159,8 +175,12 @@ def run_zonal_query(
     if aoi_index is None:
         aoi_index = prepare_aoi_index(spark, aoi_df, grid_name)
     if aoi_index is not None:
+        on_driver = (
+            auto and not query.select_pixels and _fits_driver_kernel(aoi_index, grid_name)
+        )
         out = build_partials_with_lookup(
-            images, aoi_index.lookup, aoi_index.salted, query, env, grid_name, colocated
+            images, aoi_index.lookup, aoi_index.salted, query, env, grid_name, colocated,
+            on_driver=on_driver,
         )
     else:
         out = _build_partials_over_bound(images, aoi_df, query, env, grid_name, colocated)
@@ -406,6 +426,24 @@ def _rollup_one(partials, a: Aggregate, vcol: str, keys: list) -> DataFrame:
 
 DRIVER_ENUM_AOI_LIMIT = 100_000  # AOI rows enumerated driver-side
 DRIVER_ENUM_WKB_BYTES = 256 * 2**20  # total geometry bytes collected driver-side
+# kernel work (AOI-cell pairs x cell pixels) an auto-strategy aggregate
+# request runs on the driver instead of in Python tasks: 32 AOI-cells of
+# 256^2 px. On a 4-core box the driver route wins clearly up to there and
+# breaks even somewhere between ~64 and ~190 AOI-cells (~7 ms per AOI-cell
+# on one core against ~0.3 s per Python task); the margin keeps long
+# serial kernels off the driver, which concurrent requests share.
+DRIVER_KERNEL_PX_LIMIT = 32 * 256 * 256
+
+
+def _fits_driver_kernel(idx: "AoiIndex", grid_name: str) -> bool:
+    """Whether ``idx``'s kernel work is within ``DRIVER_KERNEL_PX_LIMIT``."""
+    px = G.get_grid(grid_name).chunk_px ** 2
+    work = 0
+    for _, aois in idx.lookup.value.values():
+        work += len(aois) * px
+        if work > DRIVER_KERNEL_PX_LIMIT:
+            return False
+    return True
 
 
 def _aoi_lookup_from_aois(spark: SparkSession, rows: list, grid_name: str,
@@ -698,14 +736,44 @@ def _with_missing_cells(spark, imgs: DataFrame, cell_ids: list) -> DataFrame:
     return imgs.unionByName(rows)
 
 
-def _dispatch_cell_plan(spark, imgs: DataFrame, salted: dict, wrapped, schema: str,
-                        colocated: bool) -> DataFrame:
-    """Kernel-stage dispatch shared by the single and fused builders:
-    colocated zero-shuffle stream (with hot-cell diversion — a cell shared
-    by thousands of AOIs would be ONE serial AOI loop in one colocated
-    task, so cells hotter than MAX_AOIS_PER_TASK take the salted cell
-    plan while everything else streams shuffle-free) or the salted
-    cell-clustered shuffle plan."""
+def _driver_cell_plan(spark, imgs: DataFrame, fill_cells, wrapped, schema: str) -> DataFrame:
+    """The driver route's kernel stage. The pruned tile rows come over in
+    one JVM-only Arrow scan, the kernel runs once per cell right here
+    (every AOI of the cell, no salting), and the partial rows go back as a
+    one-partition ``LocalRelation``, whose finalize needs no exchange.
+    Missing cells get their null tile row from the scanned cell set, so
+    FROM data costs no extra job."""
+    tiles = imgs.toArrow().to_pandas()
+    if fill_cells is not None:
+        missing = np.setdiff1d(np.asarray(fill_cells, dtype=np.int64), tiles["cell_id"].to_numpy())
+        if missing.size:
+            # no layer: the kernel zero-fills the cell (S2)
+            tiles = pd.concat(
+                [tiles, pd.DataFrame({"cell_id": missing, "src_cell_id": missing})],
+                ignore_index=True,
+            )
+    parts = [wrapped(g) for _, g in tiles.groupby("cell_id", sort=True)]
+    ddl = T._parse_datatype_string(schema)
+    out = pd.concat(parts, ignore_index=True) if parts else pd.DataFrame(
+        {f.name: pd.Series(dtype=object) for f in ddl.fields}
+    )
+    return local_frame(spark, out, ddl).coalesce(1)
+
+
+def _dispatch_cell_plan(spark, imgs: DataFrame, fill_cells, salted: dict, wrapped,
+                        schema: str, colocated: bool, on_driver: bool) -> DataFrame:
+    """Kernel-stage dispatch shared by the single and fused builders: the
+    driver route, the colocated zero-shuffle stream (with hot-cell
+    diversion — a cell shared by thousands of AOIs would be ONE serial
+    AOI loop in one colocated task, so cells hotter than MAX_AOIS_PER_TASK
+    take the salted cell plan while everything else streams shuffle-free)
+    or the salted cell-clustered shuffle plan. ``fill_cells`` (FROM data
+    queries) are the AOI cells that get a null tile row when no tile of
+    theirs is stored."""
+    if on_driver:
+        return _driver_cell_plan(spark, imgs, fill_cells, wrapped, schema)
+    if fill_cells is not None:
+        imgs = _with_missing_cells(spark, imgs, fill_cells)
     if colocated:
         if salted:
             hot = [int(c) for c in salted]
@@ -728,10 +796,13 @@ def build_partials_with_lookup(
     env: DataEnvironment,
     grid_name: str,
     colocated: bool = False,
+    on_driver: bool = False,
 ) -> DataFrame:
     """Cell-kernel plan over an explicit AOI-cell lookup (used directly by
     the checkpoint layer, whose resume anti-join simply removes committed
-    (aoi, cell) pairs from the lookup)."""
+    (aoi, cell) pairs from the lookup). ``on_driver`` runs the kernel now,
+    on the driver (see :func:`_driver_cell_plan`); otherwise the plan is
+    lazy."""
     spark = images.sparkSession
     cell_ids = list(lookup.value.keys())
     needed = env.source_layer_names(query.layer_names())
@@ -752,8 +823,7 @@ def build_partials_with_lookup(
     else:
         imgs = imgs.withColumn("src_cell_id", F.col("cell_id"))
     imgs = _prune_cells(imgs, cell_ids)
-    if query.base_layer == FROM_DATA:
-        imgs = _with_missing_cells(spark, imgs, cell_ids)
+    fill_cells = cell_ids if query.base_layer == FROM_DATA else None
 
     kernel = zonal.make_cell_kernel(query, env.to_json(), grid_name, lookup)
     if query.select_pixels:
@@ -762,7 +832,9 @@ def build_partials_with_lookup(
     else:
         schema = "`aoi_id` string, `cell_id` long, `_ms` double, " + zonal.partial_schema_ddl(query)
         wrapped = _wrap_cell_kernel(kernel)
-    return _dispatch_cell_plan(spark, imgs, salted, wrapped, schema, colocated)
+    return _dispatch_cell_plan(
+        spark, imgs, fill_cells, salted, wrapped, schema, colocated, on_driver
+    )
 
 
 def build_multi_partials_with_lookup(
@@ -773,6 +845,7 @@ def build_multi_partials_with_lookup(
     env: DataEnvironment,
     grid_name: str,
     colocated: bool = False,
+    on_driver: bool = False,
 ) -> DataFrame:
     """FUSED cell-kernel plan: one scan + decode + per-(aoi, cell)
     rasterize serving every query of a batch (zonal.make_multi_cell_kernel).
@@ -795,8 +868,7 @@ def build_multi_partials_with_lookup(
         imgs = imgs.filter(F.col("layer").isin(union_layers))
     imgs = imgs.withColumn("src_cell_id", F.col("cell_id"))
     imgs = _prune_cells(imgs, cell_ids)
-    if any(q.base_layer == FROM_DATA for q in queries):
-        imgs = _with_missing_cells(spark, imgs, cell_ids)
+    fill_cells = cell_ids if any(q.base_layer == FROM_DATA for q in queries) else None
 
     kernel = zonal.make_multi_cell_kernel(queries, env.to_json(), grid_name, lookup)
     schema = (
@@ -804,7 +876,9 @@ def build_multi_partials_with_lookup(
         + zonal.multi_partial_schema_ddl(queries)
     )
     wrapped = _wrap_cell_kernel(kernel)
-    return _dispatch_cell_plan(spark, imgs, salted, wrapped, schema, colocated)
+    return _dispatch_cell_plan(
+        spark, imgs, fill_cells, salted, wrapped, schema, colocated, on_driver
+    )
 
 
 def split_multi_partials(partials: DataFrame, qi: int, query: ZonalQuery) -> DataFrame:
@@ -960,19 +1034,25 @@ def run_zonal_queries(
             )
             for name, q in queries.items()
         })
-    if strategy in (None, "auto"):
+    auto = strategy in (None, "auto")
+    if auto:
         colocated = bool(getattr(images, "_gfw_cell_sorted", False))
     else:
         colocated = strategy == "colocated"
+    on_driver = auto and _fits_driver_kernel(idx, target)
     partials = build_multi_partials_with_lookup(
-        images, idx.lookup, idx.salted, exec_list, env, target, colocated=colocated
-    ).persist()
+        images, idx.lookup, idx.salted, exec_list, env, target,
+        colocated=colocated, on_driver=on_driver,
+    )
+    if not on_driver:  # a driver-built frame is already local
+        partials = partials.persist()
     out: "dict[str, DataFrame]" = {}
     for qi, (name, q) in enumerate(zip(names, exec_list)):
         res = finalize_partials(split_multi_partials(partials, qi, q), q, env, bounded=True)
         out[name] = finishers[name](res) if name in finishers else res
     return ZonalResultSet(
-        out, partials=partials, aoi_index=idx, owns_index=aoi_index is None
+        out, partials=None if on_driver else partials, aoi_index=idx,
+        owns_index=aoi_index is None,
     )
 
 
@@ -1220,17 +1300,17 @@ def _order_and_limit(
         if query.order_by
         else [F.col(c) for c in default_sort if c != "aoi_id"]
     )
-    if query.limit is not None and order:
+    if query.limit is not None:
         from pyspark.sql import Window
 
-        w = Window.partitionBy("aoi_id").orderBy(*order)
+        # without an order (pixel rows, ungrouped aggregates) any rows of
+        # the AOI may survive, but never more than LIMIT per AOI
+        w = Window.partitionBy("aoi_id").orderBy(*(order or [F.col("aoi_id")]))
         df = (
             df.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") <= query.limit)
             .drop("__rn")
         )
-    elif query.limit is not None:
-        df = df.limit(query.limit)
     # deterministic presentation order across the whole batch
     keys = [F.col("aoi_id"), *order]
     if bounded:

@@ -8,11 +8,14 @@ Tolerances follow the reference's own tests: exact for counts, rel 1e-9
 here (same kernels both sides; the reference uses 1e-2 against *foreign*
 goldens)."""
 
+from unittest import mock
+
 import numpy as np
 import pandas as pd
 import pytest
 
 from gfw_raster_analysis_lambda_spark import oracle
+from gfw_raster_analysis_lambda_spark.plans import planner
 from gfw_raster_analysis_lambda_spark.plans.ir import (
     Aggregate,
     FilterAnd,
@@ -42,15 +45,26 @@ def tables(spark, corpus):
 
 
 def run_both(spark, tables, env, query, aois=None):
+    """(engine result, oracle result). The fixture batches are far below
+    the driver-kernel bound, so the engine result comes from the driver
+    route; an aggregate query runs again with the bound at 0, through the
+    distributed kernel plan, and must give the same frame."""
     images, aoi_df = tables
     aois = aois or [a for a in fixtures.fixture_aois()]
     ids = [a[0] for a in aois]
     aoi_df = aoi_df.filter(aoi_df.aoi_id.isin(ids))
-    got = (
-        run_zonal_query(spark, images, aoi_df, query, env, GRID_NAME)
-        .toPandas()
-        .reset_index(drop=True)
-    )
+
+    def run():
+        return (
+            run_zonal_query(spark, images, aoi_df, query, env, GRID_NAME)
+            .toPandas()
+            .reset_index(drop=True)
+        )
+
+    got = run()
+    if not query.select_pixels:
+        with mock.patch.object(planner, "DRIVER_KERNEL_PX_LIMIT", 0):
+            assert_frames_match(run(), got)
     exp = oracle.run_oracle(query, env, aois)
     return got, exp
 
@@ -451,6 +465,48 @@ def test_streaming_cells_regroup_unit():
     assert len(out) == 3
 
 
+def test_geom_cache_concurrent_requests(monkeypatch):
+    """The kernel's byte-bounded geometry cache is shared by concurrent
+    driver-route requests: with many threads missing the same geometries
+    at once and a short switch interval, its byte count still equals the
+    bytes of the entries it holds (a double insert or a lost update would
+    break that, and with it the bound)."""
+    import sys
+    import threading
+
+    from gfw_raster_analysis_lambda_spark.functions import geometry as geo
+    from gfw_raster_analysis_lambda_spark.operators import zonal
+
+    wkbs = [geo.wkb_dumps(geo.box(i * 0.01, 0.0, i * 0.01 + 0.5, 0.5)) for i in range(32)]
+    monkeypatch.setattr(zonal, "_GEOM_CACHE", {})
+    monkeypatch.setattr(zonal, "_GEOM_CACHE_BYTES", 0)
+    start = threading.Barrier(16)
+    errors = []
+
+    def worker():
+        try:
+            start.wait(timeout=60)
+            for w in wkbs:
+                assert zonal._geom_edges(w)[0] is not None
+        except Exception as e:  # surfaced by the assertion below
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker) for _ in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads) and not errors
+    assert len(zonal._GEOM_CACHE) == len(wkbs)
+    held = sum(3 * v[1].nbytes + len(k) for k, v in zonal._GEOM_CACHE.items())
+    assert zonal._GEOM_CACHE_BYTES == held
+
+
 # 16. generic-kernel path (NaN aggregate layer) + isoweek groups + a
 # zero-masked AOI sharing a cell with a nonzero AOI: the empty AOI's
 # column set must match the raw group names the nonzero AOIs emit
@@ -650,10 +706,15 @@ def test_colocated_hot_cell_diversion(spark, corpus, env, tmp_path, monkeypatch)
     assert_frames_match(got, exp)
 
 
-def test_auto_strategy_prefers_colocated_on_sorted_layout(spark, tables, env, tmp_path):
+def test_auto_strategy_prefers_colocated_on_sorted_layout(
+    spark, tables, env, tmp_path, monkeypatch
+):
     """strategy=None over a read_images() frame from a cell-sorted layout
     must take the zero-shuffle colocated plan (MapInPandas, no grouped
-    shuffle) and match the explicit cell strategy's results."""
+    shuffle) and match the explicit cell strategy's results. The fixture
+    batch is below the driver-kernel bound, where the kernel runs on the
+    driver and the plan has no Python stage at all; the bound is set to 0
+    to see the distributed plans."""
     from gfw_raster_analysis_lambda_spark.sources.images import (
         read_images,
         write_images_cell_sorted,
@@ -666,11 +727,16 @@ def test_auto_strategy_prefers_colocated_on_sorted_layout(spark, tables, env, tm
     ), path, n_files=5)
     sorted_images = read_images(spark, path)
     q = _parity_query()
+    ref = run_zonal_query(spark, images, aoi_df, q, env, GRID_NAME, strategy="cell").toPandas()
+    driver = run_zonal_query(spark, sorted_images, aoi_df, q, env, GRID_NAME)
+    assert not _python_nodes(driver)
+    assert_frames_match(driver.toPandas(), ref)
+
+    monkeypatch.setattr(planner, "DRIVER_KERNEL_PX_LIMIT", 0)
     auto = run_zonal_query(spark, sorted_images, aoi_df, q, env, GRID_NAME)
     plan = auto._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" in plan
     assert "FlatMapGroupsInPandas" not in plan  # no grouped-shuffle kernel
-    ref = run_zonal_query(spark, images, aoi_df, q, env, GRID_NAME, strategy="cell").toPandas()
     assert_frames_match(auto.toPandas(), ref)
     # a frame NOT read from a sorted layout keeps the cell plan
     plain = run_zonal_query(spark, images, aoi_df, q, env, GRID_NAME)
@@ -678,11 +744,12 @@ def test_auto_strategy_prefers_colocated_on_sorted_layout(spark, tables, env, tm
     assert "FlatMapGroupsInPandas" in plan2
 
 
-def test_fused_multi_query_parity(spark, tables, env):
+def test_fused_multi_query_parity(spark, tables, env, monkeypatch):
     """run_zonal_queries (one fused kernel pass for the whole query set)
     must produce bit-identical results to per-query execution, across a
     mixed set: grouped masked sum, FROM_DATA area (missing-cell union),
-    and an isoweek date query."""
+    and an isoweek date query — with the kernel on the driver and in the
+    distributed kernel stage (driver-kernel bound at 0)."""
     from gfw_raster_analysis_lambda_spark.plans.planner import run_zonal_queries
 
     images, aoi_df = tables
@@ -706,17 +773,21 @@ def test_fused_multi_query_parity(spark, tables, env):
                         Aggregate("avg", "emissions", "em_avg")),
         ),
     }
-    fused = run_zonal_queries(spark, images, aoi_df, qs, env, GRID_NAME)
-    for name, q in qs.items():
-        single = run_zonal_query(spark, images, aoi_df, q, env, GRID_NAME).toPandas()
-        got = fused[name].toPandas()
-        assert_frames_match(got, single)
-    # the fused partial frame is cached once, shared by every result, and
-    # released through the explicit handle (not a fragile DataFrame attr)
-    assert fused._partials is not None
-    assert fused._partials.storageLevel.useMemory
-    fused.close()
-    assert fused._partials is None
+    for bound in (planner.DRIVER_KERNEL_PX_LIMIT, 0):
+        monkeypatch.setattr(planner, "DRIVER_KERNEL_PX_LIMIT", bound)
+        fused = run_zonal_queries(spark, images, aoi_df, qs, env, GRID_NAME)
+        for name, q in qs.items():
+            single = run_zonal_query(spark, images, aoi_df, q, env, GRID_NAME).toPandas()
+            got = fused[name].toPandas()
+            assert_frames_match(got, single)
+        # the distributed fused partial frame is cached once, shared by
+        # every result, and released through the explicit handle (not a
+        # fragile DataFrame attr); the driver-built one is a local frame
+        if bound == 0:
+            assert fused._partials is not None
+            assert fused._partials.storageLevel.useMemory
+        fused.close()
+        assert fused._partials is None
 
 
 def test_fused_set_with_rollups_shares_kernel(spark, tables, env, monkeypatch):
@@ -771,6 +842,8 @@ def test_fused_set_with_rollups_shares_kernel(spark, tables, env, monkeypatch):
     monkeypatch.setattr(planner, "build_multi_partials_with_lookup", spy_multi)
     monkeypatch.setattr(planner, "build_partials_with_lookup", spy_single)
     monkeypatch.setattr(planner, "build_partials_by_cell", spy_single)
+    # the distributed kernel stage, whose partial frame is cached and shared
+    monkeypatch.setattr(planner, "DRIVER_KERNEL_PX_LIMIT", 0)
     fused = run_zonal_queries(spark, images, aoi_df, qs, env, GRID_NAME)
     assert fused._partials is not None  # fused path, not the fallback
     for name in qs:
@@ -923,10 +996,12 @@ def test_random_query_fuzz_vs_oracle(spark, tables, env, seed, monkeypatch):
         from gfw_raster_analysis_lambda_spark.plans.planner import run_zonal_queries
 
         images, aoi_df = tables
-        with run_zonal_queries(spark, images, aoi_df, {"q": q}, env, GRID_NAME) as res:
-            got = res["q"].toPandas().reset_index(drop=True)
         exp = oracle.run_oracle(q, env, fixtures.fixture_aois())
-        assert_frames_match(got, exp)
+        for bound in (planner.DRIVER_KERNEL_PX_LIMIT, 0):  # driver, distributed
+            monkeypatch.setattr(_pl, "DRIVER_KERNEL_PX_LIMIT", bound)
+            with run_zonal_queries(spark, images, aoi_df, {"q": q}, env, GRID_NAME) as res:
+                got = res["q"].toPandas().reset_index(drop=True)
+            assert_frames_match(got, exp)
     else:
         got, exp = run_both(spark, tables, env, q)
         assert_frames_match(got, exp)
@@ -1035,7 +1110,7 @@ def test_wkb_bytes_cap_routes_distributed(spark, tables, env, monkeypatch):
 # env.skip_corrupt_tiles the bad tile degrades to MISSING-tile semantics
 # (zero-filled), isolating the failure like the reference's per-tile
 # Lambda instead of failing the whole analysis.
-def test_corrupt_tile_tolerance(spark, env):
+def test_corrupt_tile_tolerance(spark, env, monkeypatch):
     from gfw_raster_analysis_lambda_spark.sources.catalog import DataEnvironment
     from gfw_raster_analysis_lambda_spark.sources.images import with_derived_keys
 
@@ -1063,27 +1138,29 @@ def test_corrupt_tile_tolerance(spark, env):
         group_layers=("tcl_year",),
         aggregates=(Aggregate("count", None, "n"),),
     )
-    with pytest.raises(Exception):
-        run_zonal_query(spark, images_bad, aoi_df, q, env, GRID_NAME).collect()
-
     tol_env = DataEnvironment(env.layers, skip_corrupt_tiles=True)
     # round-trips through the kernel's env_json serialization
     assert DataEnvironment.from_json(tol_env.to_json()).skip_corrupt_tiles
-    got = (
-        run_zonal_query(spark, images_bad, aoi_df, q, tol_env, GRID_NAME)
-        .toPandas().reset_index(drop=True)
-    )
     # expected = the same corpus WITHOUT the corrupt tile (missing-tile path)
     images_missing = with_derived_keys(
         spark.createDataFrame(
             [r for r in rows if r[0] != bad_id], fixtures.IMAGES_SCHEMA
         )
     )
-    exp = (
-        run_zonal_query(spark, images_missing, aoi_df, q, env, GRID_NAME)
-        .toPandas().reset_index(drop=True)
-    )
-    assert_frames_match(got, exp)
+    # the driver route, then the distributed kernel stage
+    for bound in (planner.DRIVER_KERNEL_PX_LIMIT, 0):
+        monkeypatch.setattr(planner, "DRIVER_KERNEL_PX_LIMIT", bound)
+        with pytest.raises(Exception):
+            run_zonal_query(spark, images_bad, aoi_df, q, env, GRID_NAME).collect()
+        got = (
+            run_zonal_query(spark, images_bad, aoi_df, q, tol_env, GRID_NAME)
+            .toPandas().reset_index(drop=True)
+        )
+        exp = (
+            run_zonal_query(spark, images_missing, aoi_df, q, env, GRID_NAME)
+            .toPandas().reset_index(drop=True)
+        )
+        assert_frames_match(got, exp)
 
 
 def test_mode_vs_oracle_counts(spark, tables, env):
@@ -1437,25 +1514,39 @@ INTERACTIVE_SQL = [
     ("SELECT tcl_year, SUM(area__ha) AS loss_ha, COUNT(*) AS n FROM tcl_year "
      "WHERE tcd_threshold >= 25 AND is_primary = 'true' GROUP BY tcl_year", 4),
     ("SELECT isoweek(alert_date), COUNT(*) AS n FROM alert_date_conf GROUP BY 1", 4),
-    ("SELECT SUM(area__ha) AS ha, COUNT(*) AS n FROM data", 5),
+    ("SELECT SUM(area__ha) AS ha, COUNT(*) AS n FROM data", 4),
 ]
+
+PYTHON_NODES = ("MapInPandas", "FlatMapGroupsInPandas", "ArrowEvalPython")
+
+
+def _python_nodes(df):
+    """The Python-UDF operators in ``df``'s executed plan."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return [n for n in PYTHON_NODES if n in plan]
 
 
 def test_single_aoi_request_job_budget(spark, sorted_images, env):
     """A single-AOI request over a createDataFrame(list) frame (pickled
     Python rows: every scan of it is a Python job) scans the AOI once,
-    plans on the driver, skips the range sort, and stays within its job
-    budget — with the oracle's result."""
+    runs the kernel on the driver, skips the range sort, and stays within
+    its job budget — with the oracle's result and no Python operator in
+    the returned frame's plan."""
     from gfw_raster_analysis_lambda_spark.api import zonal_statistics
     from gfw_raster_analysis_lambda_spark.plans.sql_frontend import parse_raster_sql
 
     aoi = fixtures.fixture_aois()[1]
     for sql, budget in INTERACTIVE_SQL:
         aoi_df = spark.createDataFrame([aoi], "aoi_id string, geom_wkb binary")
-        got, jobs = _count_jobs(spark, lambda: zonal_statistics(
-            spark, sorted_images, aoi_df, sql, env, GRID_NAME
-        ).toPandas())
+        frames = []
+
+        def request():
+            frames.append(zonal_statistics(spark, sorted_images, aoi_df, sql, env, GRID_NAME))
+            return frames[0].toPandas()
+
+        got, jobs = _count_jobs(spark, request)
         assert jobs <= budget, (sql, jobs)
+        assert not _python_nodes(frames[0]), sql
         exp = oracle.run_oracle(parse_raster_sql(sql, env), env, [aoi])
         assert len(exp)
         assert_frames_match(got.reset_index(drop=True), exp)
@@ -1470,40 +1561,51 @@ def _bound_value(name, aois):
     if name == "DRIVER_ENUM_WKB_BYTES":
         return sum(len(w) for _, w in aois)
     grid = G.get_grid(GRID_NAME)
-    return sum(len(G.polygon_to_cells(grid, geo.wkb_loads(w))) for _, w in aois)
+    aoi_cells = sum(len(G.polygon_to_cells(grid, geo.wkb_loads(w))) for _, w in aois)
+    if name == "DRIVER_KERNEL_PX_LIMIT":
+        return aoi_cells * grid.chunk_px ** 2
+    return aoi_cells
 
 
 @pytest.mark.parametrize(
-    "bound", ["DRIVER_ENUM_AOI_LIMIT", "DRIVER_ENUM_WKB_BYTES", "BROADCAST_CELL_LIMIT"]
+    "bound",
+    ["DRIVER_ENUM_AOI_LIMIT", "DRIVER_ENUM_WKB_BYTES", "BROADCAST_CELL_LIMIT",
+     "DRIVER_KERNEL_PX_LIMIT"],
 )
 def test_driver_bound_edges(spark, tables, env, monkeypatch, bound):
     """A batch exactly at a driver bound plans on the driver; one unit over
     it takes the distributed route. Both give the same rows in the same
     order (the bounded finalize sorts in one task, the distributed one
-    through the global range sort)."""
-    from gfw_raster_analysis_lambda_spark.plans import planner
-
+    through the global range sort). The driver-kernel bound applies to
+    auto-strategy requests: at it the kernel runs on the driver, over it
+    in the distributed kernel stage."""
     images, _ = tables
     aois = fixtures.fixture_aois()[:3]
     aoi_df = spark.createDataFrame(aois, "aoi_id string, geom_wkb binary")
     q = _parity_query()
     routes = []
-    orig = planner._build_partials_over_bound
+    for name, route in (("_build_partials_over_bound", "distributed"),
+                        ("_driver_cell_plan", "driver kernel")):
+        def spy(*a, _orig=getattr(planner, name), _route=route, **k):
+            routes.append(_route)
+            return _orig(*a, **k)
 
-    def spy(*a, **k):
-        routes.append("distributed")
-        return orig(*a, **k)
-
-    monkeypatch.setattr(planner, "_build_partials_over_bound", spy)
+        monkeypatch.setattr(planner, name, spy)
+    kernel_bound = bound == "DRIVER_KERNEL_PX_LIMIT"
+    expected = (
+        {"at": ["driver kernel"], "over": []} if kernel_bound
+        else {"at": [], "over": ["distributed"]}
+    )
     at = _bound_value(bound, aois)
     out = {}
     for limit in (at, at - 1):
         monkeypatch.setattr(planner, bound, limit)
         routes.clear()
         out[limit] = run_zonal_query(
-            spark, images, aoi_df, q, env, GRID_NAME, strategy="cell"
+            spark, images, aoi_df, q, env, GRID_NAME,
+            strategy=None if kernel_bound else "cell",
         ).toPandas()
-        assert routes == ([] if limit == at else ["distributed"]), (bound, limit)
+        assert routes == expected["at" if limit == at else "over"], (bound, limit)
     driver, dist = out[at], out[at - 1]
     assert len(driver) and list(driver.columns) == list(dist.columns)
     for c in driver.columns:
@@ -1514,6 +1616,25 @@ def test_driver_bound_edges(spark, tables, env, monkeypatch, bound):
     keys = list(zip(driver["aoi_id"], driver["tcl_year"]))
     assert keys == sorted(keys)
     assert_frames_match(driver, oracle.run_oracle(q, env, aois))
+
+
+def test_limit_without_order_is_per_aoi(spark, tables, env):
+    """LIMIT without ORDER BY keeps at most LIMIT rows per AOI, as the
+    reference's one-query-per-AOI does, not LIMIT rows of the batch: an
+    ungrouped aggregate equals the oracle exactly (both kernel routes),
+    and a pixel select keeps the oracle's row count per AOI."""
+    from gfw_raster_analysis_lambda_spark.plans.sql_frontend import parse_raster_sql
+
+    aois = fixtures.fixture_aois()[:3]
+    q = parse_raster_sql("SELECT SUM(area__ha) AS ha FROM data LIMIT 1", env)
+    got, exp = run_both(spark, tables, env, q, aois)
+    assert len(exp) == len(aois)
+    assert_frames_match(got, exp)
+
+    q = parse_raster_sql("SELECT latitude, longitude, tcl_year FROM tcl_year LIMIT 2", env)
+    got, exp = run_both(spark, tables, env, q, aois)
+    assert len(exp) == 2 * len(aois)
+    assert got.groupby("aoi_id").size().to_dict() == exp.groupby("aoi_id").size().to_dict()
 
 
 def test_typed_errors_before_any_job(spark, tables, env):

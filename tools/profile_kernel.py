@@ -1,82 +1,112 @@
-"""Profile the colocated cell kernel in-process (no Spark) over the bench
-corpus parquet, to find Python-side hotspots.
+"""Profile the fused three-query cell kernel in-process (no Spark).
 
-Usage: python tools/profile_kernel.py [n_cells]
+The input is built here the way ``perfbench/layers.py:microbenchmarks``
+builds its kernel batch, using perfbench's input generators read-only:
+the batch workload's AOI batch for ``--seed`` (272 AOIs, 68 of them on
+one hotspot cell), its AOI->cell lookup restricted to the benchmark
+corpus extent, and each cell's corpus tiles encoded by the fixture
+generator. The kernel is ``zonal.make_multi_cell_kernel`` over
+perfbench's query set, called once per cell as the planner's cell plans
+call it. Prints ms per cell, ms per AOI-cell and the slowest cell, then
+the cProfile listing of a second pass.
+
+Usage: python tools/profile_kernel.py [--seed N] [--cells N] [--top N]
 """
 
 from __future__ import annotations
 
+import argparse
 import cProfile
 import io
-import json
 import os
 import pstats
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.join(ROOT, "perfbench"))
 
-import pandas as pd
-import pyarrow.dataset as ds
+import pandas as pd  # noqa: E402
 
-import bench
-from gfw_raster_analysis_lambda_spark.functions import grid as G
-from gfw_raster_analysis_lambda_spark.operators import zonal
-from gfw_raster_analysis_lambda_spark.plans import sql_frontend
-from gfw_raster_analysis_lambda_spark.sources import fixtures
+import corpus  # noqa: E402
+import inputs  # noqa: E402
+from gfw_raster_analysis_lambda_spark.functions import geometry as geo  # noqa: E402
+from gfw_raster_analysis_lambda_spark.functions import grid as G  # noqa: E402
+from gfw_raster_analysis_lambda_spark.operators import zonal  # noqa: E402
+from gfw_raster_analysis_lambda_spark.plans.sql_frontend import parse_raster_sql  # noqa: E402
+from gfw_raster_analysis_lambda_spark.sources import fixtures  # noqa: E402
+
+
+class _Lookup:
+    """Stands in for the broadcast AOI lookup (the kernel reads ``.value``)."""
+
+    def __init__(self, value):
+        self.value = value
+
+
+def kernel_input(seed: int, max_cells: int | None):
+    """(env, kernel, [(cell_id, n_aois, tile frame)]) for the batch
+    workload's AOI batch of ``seed``, hottest cells first."""
+    env = fixtures.fixture_environment(grid=corpus.GRID_NAME)
+    grid = G.get_grid(corpus.GRID_NAME)
+    lo, hi = inputs.BATCH_SIDES
+    aois, _, _ = inputs.make_aois(
+        inputs.rng_for("batch-batch", seed), inputs.BATCH_AOIS, "batch", hi, min_side_cells=lo
+    )
+    x0, y0, nx, ny = corpus.extent()
+    by_cell: dict = {}
+    for aoi_id, wkb in aois:
+        for c in G.polygon_to_cells(grid, geo.wkb_loads(wkb)).tolist():
+            cx, cy = (int(v) for v in G.cell_to_xy(c))
+            if x0 <= cx < x0 + nx and y0 <= cy < y0 + ny:
+                by_cell.setdefault(c, []).append((aoi_id, wkb))
+    cells = sorted(by_cell, key=lambda c: (-len(by_cell[c]), c))[:max_cells]
+    lookup = _Lookup({c: (1, sorted(by_cell[c])) for c in cells})
+    queries = [parse_raster_sql(s, env) for s in inputs.QUERIES.values()]
+    kernel = zonal.make_multi_cell_kernel(queries, env.to_json(), corpus.GRID_NAME, lookup)
+    px = grid.chunk_px
+    frames = []
+    for c in cells:
+        cx, cy = (int(v) for v in G.cell_to_xy(c))
+        rows = []
+        for layer in corpus.LAYERS:
+            r = fixtures.encode_image_row(env, layer, cx, cy, px, grid=grid)
+            rows.append((layer, c, r[1], r[2], r[3], r[4], c))
+        frames.append((c, len(by_cell[c]), pd.DataFrame(
+            rows, columns=["layer", "cell_id", "bytes", "w", "h", "fmt", "src_cell_id"]
+        )))
+    return kernel, frames
 
 
 def main():
-    n_cells = int(sys.argv[1]) if len(sys.argv) > 1 else 300
-    sql = (
-        "SELECT tcl_year, SUM(area__ha) AS loss_ha, COUNT(*) AS n "
-        "FROM tcl_year WHERE tcd_threshold >= 25 AND is_primary = 'true' "
-        "GROUP BY tcl_year"
-    )
-    env = fixtures.fixture_environment(grid=bench.BGRID.name)
-    query = sql_frontend.parse_raster_sql(sql, env)
-    env_json = env.to_json()
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--seed", type=int, default=1)
+    ap.add_argument("--cells", type=int, default=None, help="hottest N cells only")
+    ap.add_argument("--top", type=int, default=30, help="profile rows to print")
+    args = ap.parse_args()
 
-    from gfw_raster_analysis_lambda_spark.functions import geometry as geo
-    aois = fixtures.bench_aois(bench.BGRID, bench.BX0, bench.BY0, bench.BNX, bench.BNY,
-                               bench.N_AOI, bench.CELLS_PER_AOI)
-    lookup = {}
-    for aoi_id, wkb in aois:
-        g = geo.wkb_loads(wkb)
-        for cell in G.polygon_to_cells(bench.BGRID, g):
-            lookup.setdefault(int(cell), []).append((aoi_id, wkb))
-
-    corpus = bench.corpus_dir()
-    dataset = ds.dataset(corpus, format="parquet")
-    tbl = dataset.to_table()
-    pdf = tbl.to_pandas()
-    print(f"corpus rows: {len(pdf)}; cells in lookup: {len(lookup)}")
-    # group to cells like the colocated scan does: sorted by cell_id
-    pdf = pdf.sort_values(["cell_id", "layer"], kind="stable").reset_index(drop=True)
-    cells = [g for _, g in pdf.groupby("cell_id", sort=True)]
-    cells = cells[:n_cells]
-
-    class _BC:
-        def __init__(self, v): self.value = v
-    lookup = {c: (1, a) for c, a in lookup.items()}
-    kernel = zonal.make_cell_kernel(query, env_json, bench.BGRID.name, _BC(lookup))
-
-    def run():
-        out = []
-        for cdf in cells:
-            out.append(kernel(cdf))
-        return pd.concat(out)
-
-    t0 = time.time(); r = run(); t1 = time.time()
-    print(f"warm run: {t1-t0:.2f}s for {len(cells)} cells -> {len(r)} partial rows")
+    kernel, frames = kernel_input(args.seed, args.cells)
+    n_pairs = sum(n for _, n, _ in frames)
+    kernel(frames[0][2])  # first call pays the imports and lookup tables
+    times = []
+    for c, n, pdf in frames:
+        t0 = time.perf_counter()
+        kernel(pdf)
+        times.append((1e3 * (time.perf_counter() - t0), c, n))
+    total = sum(t for t, _, _ in times)
+    slow_ms, slow_cell, slow_n = max(times)
+    print(f"seed {args.seed}: {len(frames)} cells, {n_pairs} AOI-cells, {total:.0f} ms")
+    print(f"  {total / len(frames):.1f} ms/cell, {total / n_pairs:.1f} ms/AOI-cell")
+    print(f"  slowest cell {slow_cell}: {slow_ms:.0f} ms for {slow_n} AOIs")
 
     pr = cProfile.Profile()
     pr.enable()
-    run()
+    for _, _, pdf in frames:
+        kernel(pdf)
     pr.disable()
     s = io.StringIO()
-    st = pstats.Stats(pr, stream=s).sort_stats("cumulative")
-    st.print_stats(35)
+    pstats.Stats(pr, stream=s).sort_stats("cumulative").print_stats(args.top)
     print(s.getvalue())
 
 
