@@ -54,7 +54,6 @@ def run_zonal_checkpointed(
     grid_name: str,
     checkpoint_dir: str,
     run_id: str | None = None,
-    broadcast_aoi: bool | None = None,
     colocated: bool = False,
 ) -> DataFrame:
     """Execute with resume: (aoi, cell) units already committed under this

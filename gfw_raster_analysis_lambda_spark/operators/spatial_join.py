@@ -344,7 +344,6 @@ def point_in_polygon_join(
     points: DataFrame,  # (..., lon double, lat double)
     aoi: DataFrame,  # (aoi_id string, geom_wkb binary)
     grid_name: str,
-    broadcast_aoi: bool = True,
 ) -> DataFrame:
     """Inner join of points to the polygons containing them.
 
@@ -356,7 +355,7 @@ def point_in_polygon_join(
     grid = G.get_grid(grid_name)
     cells = aoi_cells(aoi, grid_name)  # (aoi_id, geom_wkb, cell_id)
     pts = points.withColumn("cell_id", cell_expr(grid, F.col("lon"), F.col("lat")))
-    cand = pts.join(F.broadcast(cells) if broadcast_aoi else cells, "cell_id")
+    cand = pts.join(F.broadcast(cells), "cell_id")
 
     @F.pandas_udf(T.BooleanType())
     def contains(geom_wkb: pd.Series, lon: pd.Series, lat: pd.Series) -> pd.Series:

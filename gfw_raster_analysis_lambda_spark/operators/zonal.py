@@ -1,13 +1,13 @@
-"""The zonal kernel: per-(aoi, cell) vectorized raster statistics.
+"""The zonal kernel: per-cell vectorized raster statistics.
 
 This is the engine's one custom compute kernel — everything the reference
 does per Lambda invocation (reference lambdas/raster_analysis handler ->
-DataCube -> QueryExecutor, query_executor.py:23-134) happens here per
-``applyInPandas`` group, entirely in numpy:
+DataCube -> QueryExecutor, query_executor.py:23-134) happens here once
+per grid cell, entirely in numpy:
 
-  decode tiles -> derive layers -> AOI rasterize (P6) -> filter mask
-  (P1-P5) -> base/group NoData masks (P7/P8) -> pack group values ->
-  unique/bincount partial aggregates (A1-A5)
+  decode tiles -> derive layers -> filter mask (P1-P5) -> base/group
+  NoData masks (P7/P8) -> per AOI of the cell: rasterize (P6) -> pack
+  group values -> unique/bincount partial aggregates (A1-A5)
 
 The output is a *partial* aggregate per (aoi, cell, group-tuple); Spark's
 hash aggregation does the final merge (A6) — the two-phase distributed
@@ -15,9 +15,11 @@ aggregation the reference hand-rolls with DynamoDB partials
 (tiling.py:125-131) is Catalyst's native partial/final here.
 
 Scale notes:
-- Group key is (aoi_id, cell_id): skew-free by construction — a giant AOI
-  becomes many independent cell tasks, and a hot cell shared by many AOIs
-  becomes many independent AOI tasks.
+- One call per cell: the cell's tiles are decoded once and its AOIs are
+  looped over them (the vector side intersected per tile, as in Raptor's
+  raster-vector join). A giant AOI becomes many independent cell calls;
+  a cell shared by many AOIs is split by the planner into salted AOI
+  slices, one call each.
 - The kernel pre-aggregates 64k-25M pixels down to a handful of group rows
   before anything hits the shuffle, so shuffle volume is O(groups), not
   O(pixels).
@@ -120,52 +122,136 @@ def pixel_schema_ddl(query: ZonalQuery) -> str:
 # Kernel construction
 # ---------------------------------------------------------------------------
 
-def make_zonal_kernel(query: ZonalQuery, env_json: str, grid_name: str):
-    """Build the applyInPandas function for groupBy(aoi_id, cell_id).
+def _static_mask(q: ZonalQuery, values: dict, env: DataEnvironment) -> np.ndarray | None:
+    """The AOI-independent part of a query's pixel mask, computed once per
+    cell: base NoData (P7), the filter (P1-P5) and the group NoData / NaN
+    drop (P8, A7; pixel selects have no group layers). None: every pixel
+    passes."""
+    masks = []
+    if q.base_layer != FROM_DATA:
+        masks.append(_data_mask(values[q.base_layer], env.nodata_of(q.base_layer)))
+    if q.where is not None:
+        masks.append(_eval_filter(q.where, values))
+    for gname in q.group_layers:
+        arr = values[gname]
+        if np.issubdtype(np.asarray(arr).dtype, np.floating):
+            masks.append(~np.isnan(arr))
+        nd = env.nodata_of(gname)
+        if nd is not None and not env.keeps_nodata_groups(gname) and not _is_nan_nodata(nd):
+            masks.append(arr != nd)
+    if not masks:
+        return None
+    out = masks[0]
+    for m in masks[1:]:
+        out = out & m
+    return out
 
-    Everything the closure captures is picklable (the env ships as JSON and
-    is deserialized once per executor via a module-level cache).
-    """
-    pixel_mode = bool(query.select_pixels)
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+def _cell_body(queries: list, env_json: str, grid_name: str):
+    """The one per-cell kernel body behind :func:`make_cell_kernel` and
+    :func:`make_multi_cell_kernel`.
+
+    ``run(pdf, aois)`` takes one cell's tile rows and the cell's
+    ``[(aoi_id, wkb), ...]`` (from the broadcast lookup or from a
+    cogroup) and returns ``[(query index, block)]``: one frame per query
+    with rows, ``aoi_id`` first, then the query's partial columns (or its
+    pixel columns). The tiles are decoded once, each query's static mask
+    is built once, and each AOI is rasterized once and shared by every
+    query. An AOI that fully contains the cell has the all-True zonal
+    mask, so its part is the per-cell constant, computed once and reused
+    by every such AOI — the dominant case at scale (tiles interior to the
+    AOI).
+
+    The present-layer rule: a scan may hold none of query q's own source
+    layers in a cell (a fused scan reads the union of the queries'
+    layers; a cogroup hands over a cell with no tiles at all). q runs on
+    such a cell only when it reads FROM data, whose missing tiles are
+    zero-filled (S2); any other query would see zero-synthesized tiles
+    and emit rows (fake full-count rows for no_data=None base layers)
+    that a scan of its own layers never produces."""
+    union_names: list = []
+    for q in queries:
+        for n in q.layer_names():
+            if n not in union_names:
+                union_names.append(n)
+
+    def run(pdf: pd.DataFrame, aois) -> list:
+        if not aois:
+            return []
         env = _env_cache(env_json)
         grid = G.get_grid(grid_name)
         cell_id = int(pdf["cell_id"].iloc[0])
-        geom, g_edges, _ = _geom_edges(bytes(pdf["geom_wkb"].iloc[0]))
-
         x0, y0, ps = G.cell_affine(grid, cell_id)
         lat_c = float(G.cell_centroid_lat(grid, np.array([cell_id]))[0])
         mean_area = float(geodesy.pixel_area_ha(lat_c, ps))
-
         tile_px = grid.chunk_px
-        values = _decode_and_derive(pdf, env, query.layer_names(), grid, cell_id, mean_area)
+        present = set(pdf["layer"].dropna().astype(str))
+        values = _decode_and_derive(pdf, env, union_names, grid, cell_id, mean_area)
+        active = []  # (query index, query, static mask, aggregation context)
+        for qi, q in enumerate(queries):
+            if q.base_layer != FROM_DATA and not (set(env.source_layer_names(q.layer_names())) & present):
+                continue
+            ctx = None if q.select_pixels else _CellAggContext(q, values, mean_area, env)
+            active.append((qi, q, _static_mask(q, values, env), ctx))
+        if not active:
+            return []
 
-        # -- masks (1-D pixel columns, reference ravel semantics) ------------
-        mask = np.ravel(geo.rasterize_mask(geom, x0, y0, ps, tile_px, tile_px, edges=g_edges))
-        if query.base_layer != FROM_DATA:
-            mask &= _data_mask(values[query.base_layer], env.nodata_of(query.base_layer))
-        if query.where is not None:
-            mask &= _eval_filter(query.where, values)
+        def part_of(q, ctx, mask):
+            return ctx.run(mask) if ctx is not None else _select_pixels(q, values, mask, x0, y0, ps)
 
-        if pixel_mode:
-            return _select_pixels(query, values, mask, x0, y0, ps)
+        ids: list = [[] for _ in active]
+        lens: list = [[] for _ in active]
+        cols: list = [{} for _ in active]
+        full: list = [None] * len(active)
+        cell_rect = (x0, y0 - tile_px * ps, x0 + tile_px * ps, y0)
+        for aoi_id, wkb in aois:
+            geom, g_edges, g_meta = _geom_edges(bytes(wkb))
+            amask = None
+            if not geo.covers_rect(geom, *cell_rect, edges=g_edges, meta=g_meta):
+                amask = np.ravel(geo.rasterize_mask(geom, x0, y0, ps, tile_px, tile_px, edges=g_edges))
+            for k, (_, q, static, ctx) in enumerate(active):
+                if amask is None:
+                    if full[k] is None:
+                        m = static if static is not None else np.ones(tile_px * tile_px, dtype=bool)
+                        full[k] = part_of(q, ctx, m)
+                    part = full[k]
+                else:
+                    part = part_of(q, ctx, amask & static if static is not None else amask)
+                ids[k].append(aoi_id)
+                lens[k].append(len(next(iter(part.values()))) if part else 0)
+                for c, v in part.items():
+                    cols[k].setdefault(c, []).append(v)
 
-        # group-layer NoData drop (P8) + NaN drop (A7)
-        for gname in query.group_layers:
-            arr = values[gname]
-            if np.issubdtype(np.asarray(arr).dtype, np.floating):
-                mask &= ~np.isnan(arr)
-            nd = env.nodata_of(gname)
-            if nd is not None and not env.keeps_nodata_groups(gname) and not _is_nan_nodata(nd):
-                mask &= arr != nd
+        blocks = []
+        for k, (qi, q, _, ctx) in enumerate(active):
+            if not cols[k] or sum(lens[k]) == 0:
+                continue
+            nullable = _nullable_minmax_cols(q)
+            data = {"aoi_id": np.repeat(np.asarray(ids[k], dtype=object), lens[k])}
+            for c, parts in cols[k].items():
+                v = np.concatenate(parts)
+                data[c] = pd.array(v, dtype="Float64") if c in nullable else v
+            block = pd.DataFrame(data)
+            if q.isoweek_layers and q.group_layers and not ctx.emits_iso:
+                block = _isoweek_pushdown(block, q, env, id_cols=("aoi_id",))
+            blocks.append((qi, block))
+        return blocks
 
-        pdf = _aggregate(query, values, mask, mean_area)
-        if query.isoweek_layers and query.group_layers and not pdf.empty:
-            pdf = _isoweek_pushdown(pdf, query, env)
-        return pdf
+    return run
 
-    return kernel
+
+def _cell_aois(lookup, pdf: pd.DataFrame) -> list:
+    """The cell's AOIs from a broadcast ``{cell_id: (n_salt, [(aoi_id, wkb),
+    ...])}``. When the input carries a ``_salt`` column (planner-side skew
+    salting duplicated the tile rows), instance (cell, s) takes the
+    deterministic slice ``aois[s::n_salt]``."""
+    entry = lookup.value.get(int(pdf["cell_id"].iloc[0]))
+    if entry is None:
+        return []
+    n_salt, aois = entry
+    if "_salt" in pdf.columns:
+        return aois[int(pdf["_salt"].iloc[0])::n_salt]
+    return aois
 
 
 def _empty_partials(query: ZonalQuery) -> pd.DataFrame:
@@ -179,117 +265,26 @@ def _empty_partials(query: ZonalQuery) -> pd.DataFrame:
     return pd.DataFrame(out)
 
 
-def make_cell_kernel(query: ZonalQuery, env_json: str, grid_name: str, aoi_lookup):
-    """Per-CELL kernel (groupBy(cell_id) / colocated-scan variant).
+def make_cell_kernel(query: ZonalQuery, env_json: str, grid_name: str, aoi_lookup=None):
+    """Per-cell kernel of one query: ``kernel(pdf, aois=None)`` returns the
+    cell's wide partial rows (``aoi_id`` + ``partial_columns``) or, for a
+    pixel select, its pixel rows. A cell's tiles are decoded once per
+    call, however many AOIs the call loops (see :func:`_cell_body`); only
+    a salted hot cell is split across calls.
 
-    The per-(aoi, cell) kernel decodes a tile once per overlapping AOI and
-    ships its bytes through the shuffle once per AOI — quadratic pain on
-    hot cells (the reference never hits this because each Lambda fetches
-    from S3 by itself; on Spark the shuffle is ours to shape). This kernel
-    instead receives each tile ONCE, decodes once, precomputes the
-    AOI-independent masks (base NoData P7, filter P1-P5, group NoData P8)
-    once, and loops the cell's AOIs — only rasterize (P6) + the masked
-    bincount run per AOI.
-
-    ``aoi_lookup`` is a Broadcast of ``{cell_id: (n_salt, [(aoi_id, wkb),
-    ...])}``. When the input carries a ``_salt`` column (planner-side skew
-    salting duplicated the tile rows), instance (cell, s) processes the
-    deterministic slice ``aois[s::n_salt]``; without ``_salt`` it processes
-    every AOI of the cell.
-    """
-    pixel_mode = bool(query.select_pixels)
+    ``aois`` is the cell's ``[(aoi_id, wkb), ...]``; when omitted it comes
+    from ``aoi_lookup``, a Broadcast of ``{cell_id: (n_salt, [(aoi_id,
+    wkb), ...])}`` (see :func:`_cell_aois`). Everything the closure
+    captures is picklable (the env ships as JSON and is deserialized once
+    per process via a module-level cache)."""
+    body = _cell_body([query], env_json, grid_name)
     # built once per query (driver side): constructing an empty typed frame
     # costs ~1.4 ms in pandas, and sparse corpora return it for most cells
     empty = _empty_partials(query)
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        env = _env_cache(env_json)
-        grid = G.get_grid(grid_name)
-        cell_id = int(pdf["cell_id"].iloc[0])
-        entry = aoi_lookup.value.get(cell_id)
-        if entry is None:
-            return empty.copy()
-        n_salt, aois = entry
-        if "_salt" in pdf.columns:
-            aois = aois[int(pdf["_salt"].iloc[0])::n_salt]
-        if not aois:
-            return empty.copy()
-
-        x0, y0, ps = G.cell_affine(grid, cell_id)
-        lat_c = float(G.cell_centroid_lat(grid, np.array([cell_id]))[0])
-        mean_area = float(geodesy.pixel_area_ha(lat_c, ps))
-        tile_px = grid.chunk_px
-        values = _decode_and_derive(pdf, env, query.layer_names(), grid, cell_id, mean_area)
-
-        # AOI-independent masks, computed once per cell
-        static: np.ndarray | None = None
-        if query.base_layer != FROM_DATA:
-            static = _data_mask(values[query.base_layer], env.nodata_of(query.base_layer))
-        if query.where is not None:
-            m = _eval_filter(query.where, values)
-            static = m if static is None else static & m
-        if not pixel_mode:
-            for gname in query.group_layers:
-                arr = values[gname]
-                if np.issubdtype(np.asarray(arr).dtype, np.floating):
-                    m = ~np.isnan(arr)
-                    static = m if static is None else static & m
-                nd = env.nodata_of(gname)
-                if nd is not None and not env.keeps_nodata_groups(gname) and not _is_nan_nodata(nd):
-                    m = arr != nd
-                    static = m if static is None else static & m
-
-        if pixel_mode:
-            blocks = []
-            for aoi_id, wkb in aois:
-                geom, g_edges, _ = _geom_edges(bytes(wkb))
-                mask = np.ravel(geo.rasterize_mask(geom, x0, y0, ps, tile_px, tile_px, edges=g_edges))
-                if static is not None:
-                    mask &= static
-                out = _select_pixels(query, values, mask, x0, y0, ps)
-                out.insert(0, "aoi_id", aoi_id)
-                blocks.append(out)
-            return pd.concat(blocks, ignore_index=True)
-
-        # aggregate mode: accumulate numpy per AOI, build ONE frame per cell
-        ctx = _CellAggContext(query, values, mean_area, env)
-        ids: list = []
-        lens: list = []
-        cols: dict[str, list] = {}
-        # full-cover memo: an AOI fully containing the cell rect has the
-        # all-True zonal mask, so its result is the (static-mask-only)
-        # per-cell constant — computed once, reused by every such AOI.
-        # This is the dominant case at scale (tiles interior to the AOI).
-        cell_rect = (x0, y0 - tile_px * ps, x0 + tile_px * ps, y0)
-        full_result = None
-        for aoi_id, wkb in aois:
-            geom, g_edges, g_meta = _geom_edges(bytes(wkb))
-            if geo.covers_rect(geom, *cell_rect, edges=g_edges, meta=g_meta):
-                if full_result is None:
-                    m = static if static is not None else np.ones(tile_px * tile_px, dtype=bool)
-                    full_result = ctx.run(m)
-                part = full_result
-            else:
-                mask = np.ravel(geo.rasterize_mask(geom, x0, y0, ps, tile_px, tile_px, edges=g_edges))
-                if static is not None:
-                    mask &= static
-                part = ctx.run(mask)
-            n = len(next(iter(part.values()))) if part else 0
-            ids.append(aoi_id)
-            lens.append(n)
-            for k, v in part.items():
-                cols.setdefault(k, []).append(v)
-        if not cols or sum(lens) == 0:
-            return empty.copy()
-        nullable = _nullable_minmax_cols(query)
-        data = {"aoi_id": np.repeat(np.asarray(ids, dtype=object), lens)}
-        for k, parts in cols.items():
-            v = np.concatenate(parts)
-            data[k] = pd.array(v, dtype="Float64") if k in nullable else v
-        pdf_out = pd.DataFrame(data)
-        if query.isoweek_layers and query.group_layers and not ctx.emits_iso:
-            pdf_out = _isoweek_pushdown(pdf_out, query, env, id_cols=("aoi_id",))
-        return pdf_out
+    def kernel(pdf: pd.DataFrame, aois=None) -> pd.DataFrame:
+        blocks = body(pdf, _cell_aois(aoi_lookup, pdf) if aois is None else aois)
+        return blocks[0][1] if blocks else empty.copy()
 
     return kernel
 
@@ -490,9 +485,10 @@ def _eval_filter(node, values: dict[str, np.ndarray]) -> np.ndarray:
     raise TypeError(f"unknown filter node {type(node)}")
 
 
-def _select_pixels(query: ZonalQuery, values, mask, x0, y0, ps) -> pd.DataFrame:
+def _select_pixels(query: ZonalQuery, values, mask, x0, y0, ps) -> dict[str, np.ndarray]:
     """Pixel-row extraction (reference `_select`, query_executor.py:175-198):
-    lat/lon from the affine + raw layer values for unmasked pixels."""
+    lat/lon from the affine + raw layer values for unmasked pixels, as
+    float64 columns."""
     idx = np.flatnonzero(mask)
     tile_px = int(np.sqrt(mask.size))
     rows, cols = np.divmod(idx, tile_px)
@@ -506,7 +502,7 @@ def _select_pixels(query: ZonalQuery, values, mask, x0, y0, ps) -> pd.DataFrame:
             out[name] = np.full(len(idx), geodesy.pixel_area_ha(y0 - ps / 2, ps))
         else:
             out[name] = np.asarray(values[name], dtype=np.float64)[idx]
-    return pd.DataFrame(out, dtype=np.float64)
+    return out
 
 
 def _aggregate(query: ZonalQuery, values, mask, mean_area: float) -> pd.DataFrame:
@@ -1002,135 +998,34 @@ def multi_partial_schema_ddl(queries: list) -> str:
     return ", ".join(f"`{n}` {t}" for n, t in multi_partial_columns(queries))
 
 
-def make_multi_cell_kernel(queries: list, env_json: str, grid_name: str, aoi_lookup):
-    """Per-cell kernel evaluating EVERY query of a batch in one pass:
-    decode once, rasterize each AOI once, then run each query's
-    aggregation context against the shared masks. Aggregate-mode queries
-    only (no select_pixels)."""
+def make_multi_cell_kernel(queries: list, env_json: str, grid_name: str, aoi_lookup=None):
+    """Per-cell kernel evaluating EVERY query of a batch in one pass (the
+    shared body, :func:`_cell_body`, over all of them) and emitting the
+    narrow ``_q``/``vals`` rows of :func:`multi_partial_columns`.
+    ``kernel(pdf, aois=None)`` takes the AOIs as :func:`make_cell_kernel`
+    does. Aggregate-mode queries only (no select_pixels)."""
     if any(q.select_pixels for q in queries):
         raise ValueError("fused execution supports aggregate queries only")
-    union_names: list = []
-    for q in queries:
-        for n in q.layer_names():
-            if n not in union_names:
-                union_names.append(n)
-    def empty_frame() -> pd.DataFrame:
-        return pd.DataFrame({
-            "aoi_id": pd.Series(dtype=object),
-            "_q": pd.Series(dtype="int32"),
-            "vals": pd.Series(dtype=object),
-        })
+    body = _cell_body(queries, env_json, grid_name)
+    pcols = [[n for n, _ in partial_columns(q)] for q in queries]
+    empty = pd.DataFrame({
+        "aoi_id": pd.Series(dtype=object),
+        "_q": pd.Series(dtype="int32"),
+        "vals": pd.Series(dtype=object),
+    })
 
-    empty = empty_frame()
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        env = _env_cache(env_json)
-        grid = G.get_grid(grid_name)
-        cell_id = int(pdf["cell_id"].iloc[0])
-        entry = aoi_lookup.value.get(cell_id)
-        if entry is None:
-            return empty.copy()
-        n_salt, aois = entry
-        if "_salt" in pdf.columns:
-            aois = aois[int(pdf["_salt"].iloc[0])::n_salt]
-        if not aois:
-            return empty.copy()
-
-        x0, y0, ps = G.cell_affine(grid, cell_id)
-        lat_c = float(G.cell_centroid_lat(grid, np.array([cell_id]))[0])
-        mean_area = float(geodesy.pixel_area_ha(lat_c, ps))
-        tile_px = grid.chunk_px
-        # the fused scan reads the UNION of all queries' layers, so a cell
-        # may hold none of query q's own source layers. Serial execution
-        # filters q's scan to q's layers and never visits such a cell —
-        # match that exactly: q runs on a cell only when at least one of
-        # its source layers is present (FROM_DATA queries always run; the
-        # missing-cell union exists for them). Without this, q would see
-        # zero-synthesized tiles here and emit rows the serial plan never
-        # produces (fake full-count rows for no_data=None base layers).
-        present_layers = set(pdf["layer"].dropna().astype(str))
-        q_sources = [set(env.source_layer_names(q.layer_names())) for q in queries]
-        values = _decode_and_derive(pdf, env, union_names, grid, cell_id, mean_area)
-
-        per_query = []
-        for qi, q in enumerate(queries):
-            if q.base_layer != FROM_DATA and not (q_sources[qi] & present_layers):
-                per_query.append(None)
-                continue
-            static: np.ndarray | None = None
-            if q.base_layer != FROM_DATA:
-                static = _data_mask(values[q.base_layer], env.nodata_of(q.base_layer))
-            if q.where is not None:
-                m = _eval_filter(q.where, values)
-                static = m if static is None else static & m
-            for gname in q.group_layers:
-                arr = values[gname]
-                if np.issubdtype(np.asarray(arr).dtype, np.floating):
-                    m = ~np.isnan(arr)
-                    static = m if static is None else static & m
-                nd = env.nodata_of(gname)
-                if nd is not None and not env.keeps_nodata_groups(gname) and not _is_nan_nodata(nd):
-                    m = arr != nd
-                    static = m if static is None else static & m
-            per_query.append((static, _CellAggContext(q, values, mean_area, env)))
-
-        nq = len(queries)
-        ids: list[list] = [[] for _ in range(nq)]
-        lens: list[list] = [[] for _ in range(nq)]
-        cols: list[dict] = [{} for _ in range(nq)]
-        full_results: list = [None] * nq
-        cell_rect = (x0, y0 - tile_px * ps, x0 + tile_px * ps, y0)
-        for aoi_id, wkb in aois:
-            geom, g_edges, g_meta = _geom_edges(bytes(wkb))
-            covered = geo.covers_rect(geom, *cell_rect, edges=g_edges, meta=g_meta)
-            amask = None
-            if not covered:
-                # rasterized ONCE per (aoi, cell), shared by every query
-                amask = np.ravel(
-                    geo.rasterize_mask(geom, x0, y0, ps, tile_px, tile_px, edges=g_edges)
-                )
-            for qi in range(nq):
-                if per_query[qi] is None:
-                    continue
-                static, ctx = per_query[qi]
-                if covered:
-                    if full_results[qi] is None:
-                        m = static if static is not None else np.ones(tile_px * tile_px, dtype=bool)
-                        full_results[qi] = ctx.run(m)
-                    part = full_results[qi]
-                else:
-                    m = (amask & static) if static is not None else amask
-                    part = ctx.run(m)
-                n = len(next(iter(part.values()))) if part else 0
-                ids[qi].append(aoi_id)
-                lens[qi].append(n)
-                for k, v in part.items():
-                    cols[qi].setdefault(k, []).append(v)
-
-        blocks: list[pd.DataFrame] = []
-        for qi, q in enumerate(queries):
-            if per_query[qi] is None or not cols[qi] or sum(lens[qi]) == 0:
-                continue
-            _, ctx = per_query[qi]
-            nullable = _nullable_minmax_cols(q)
-            data = {"aoi_id": np.repeat(np.asarray(ids[qi], dtype=object), lens[qi])}
-            for k, parts in cols[qi].items():
-                v = np.concatenate(parts)
-                data[k] = pd.array(v, dtype="Float64") if k in nullable else v
-            block = pd.DataFrame(data)
-            if q.isoweek_layers and q.group_layers and not ctx.emits_iso:
-                block = _isoweek_pushdown(block, q, env, id_cols=("aoi_id",))
+    def kernel(pdf: pd.DataFrame, aois=None) -> pd.DataFrame:
+        blocks = []
+        for qi, block in body(pdf, _cell_aois(aoi_lookup, pdf) if aois is None else aois):
             # pack this query's partial values (partial_columns order) into
             # ONE array<double> per row — the persisted fused frame carries
             # only the owning query's width, not every query's. None (not
             # NaN) preserves empty-group min/max NULLs across the packing.
-            pc = [n for n, _ in partial_columns(q)]
-            obj = block[pc].astype(object)
-            packed = obj.where(pd.notna(obj), None).to_numpy().tolist()
+            obj = block[pcols[qi]].astype(object)
             blocks.append(pd.DataFrame({
                 "aoi_id": block["aoi_id"].to_numpy(),
                 "_q": np.int32(qi),
-                "vals": packed,
+                "vals": obj.where(pd.notna(obj), None).to_numpy().tolist(),
             }))
         if not blocks:
             return empty.copy()

@@ -4,18 +4,16 @@ The reference's coordinator (tile fan-out, DynamoDB partials, polling,
 merge — reference tiling.py + results_store.py) is replaced by one Spark
 plan:
 
-  aoi -> polygon_to_cells (pandas UDF, batched)     [J1: theta -> equi join]
-      -> explode -> join(images, on cell_id)        [partition-pruned scan]
-      -> groupBy(aoi_id, cell_id).applyInPandas     [the zonal kernel]
-      -> groupBy(group cols).sum                    [A6 final merge, Catalyst]
+  aoi -> polygon_to_cells                           [J1: theta -> equi join]
+      -> AOI-cell lookup per cell, salted when hot  [skew, MAX_AOIS_PER_TASK]
+      -> pruned tile scan clustered by cell_id      [partition-pruned scan]
+      -> per-cell kernel over the cell's AOIs       [operators.zonal]
+      -> groupBy(aoi_id, group cols).sum            [A6 final merge, Catalyst]
       -> decode / isoweek regroup / order / limit   [P11, F1, O1, O2]
 
-Join-strategy policy (reference has a fixed 10-way fanout; we pick by
-size — SURVEY.md section 4):
-- AOI-cell side small (the common zonal case) -> broadcast it so the
-  images scan never shuffles.
-- Large AOI batches -> shuffle hash join on cell_id with AQE skew
-  splitting; optional explicit salting is in operators/spatial_join.py.
+Every route below runs the same per-cell kernel and emits the same
+partial rows; they differ only in where the AOI-cell list lives and how
+the tile rows reach the kernel.
 
 Reading the AOI batch. The frame is scanned ONCE per request: one bounded
 query (:func:`plans.driver.read_bounded`) returns either all its rows or
@@ -25,24 +23,29 @@ bytes); over-bound geometry never reaches the driver. Within the bounds
 the driver enumerates polygon->cells itself (aborting past
 ``BROADCAST_CELL_LIMIT`` AOI-cells), ships the lookup as a broadcast, and
 the result is small enough to be sorted in one task instead of through a
-range-partitioned global sort. Over any bound the request takes the
-distributed route: polygon->cells in a pandas UDF, then either a
-collected lookup (when the AOI-cells still fit) or the reference-shaped
-shuffle join, which collects nothing. Small frames the planner builds
-itself (cell lists, the salt dimension) are ``LocalRelation``s, so they
-never cost a Python job.
+range-partitioned global sort. The kernel stage is then the salted cell
+plan (one shuffle of tile rows by cell) or the colocated stream over a
+cell-sorted layout (no shuffle of tile bytes). Small frames the planner
+builds itself (cell lists, the salt dimension) are ``LocalRelation``s, so
+they never cost a Python job.
+
+Over the bounds (:func:`_build_partials_over_bound`). Nothing is
+collected: polygon->cells runs in a pandas UDF, the AOI-cell rows are
+salted per cell by a window count, the tile rows are replicated per salt
+of their cell, and ``groupBy(cell_id, _salt).cogroup(...)`` feeds each
+cell's tiles and AOI slice to the kernel. A cell with AOIs but no tiles
+arrives with an empty tile side, which FROM data queries zero-fill.
 
 The driver route. A Python task costs a fixed ~0.3 s here whatever its
-input, so a small request runs the unchanged cell kernel on the driver
-instead (:func:`_driver_cell_plan`): one JVM-only Arrow scan of the
-pruned tile rows, the kernel per cell, and the partials handed to the
-Catalyst finalize as a one-partition ``LocalRelation`` (no exchange, one
-job). The route is taken when the strategy is auto, the query
-aggregates, the AOI batch has an :class:`AoiIndex`, and the kernel work
-(AOI-cell pairs x cell pixels) is at most ``DRIVER_KERNEL_PX_LIMIT``.
-Explicit strategies, pixel selects and bigger batches keep the
-distributed kernel plans, and so do direct callers of the
-``build_*_with_lookup`` builders.
+input, so a small request runs the cell kernel on the driver instead
+(:func:`_driver_cell_plan`): one JVM-only Arrow scan of the pruned tile
+rows, the kernel per cell, and the partials handed to the Catalyst
+finalize as a one-partition ``LocalRelation`` (no exchange, one job).
+The route is taken when the strategy is auto, the query aggregates, the
+AOI batch has an :class:`AoiIndex`, and the kernel work (AOI-cell pairs
+x cell pixels) is at most ``DRIVER_KERNEL_PX_LIMIT``. Explicit
+strategies, pixel selects and bigger batches keep the distributed kernel
+plans, and so do direct callers of the ``build_*_with_lookup`` builders.
 """
 
 from __future__ import annotations
@@ -51,7 +54,7 @@ import time
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -117,33 +120,36 @@ def run_zonal_query(
     env: DataEnvironment,
     grid_name: str | None = None,
     per_aoi: bool = True,
-    broadcast_aoi: bool | None = None,
     strategy: str | None = None,
     aoi_index: "AoiIndex | None" = None,
 ) -> DataFrame:
     """Execute a zonal query; returns the final result DataFrame with one
     block of rows per AOI (column ``aoi_id`` first when ``per_aoi``).
 
-    ``strategy`` picks the kernel-stage physical plan:
+    Every route runs the one per-cell kernel (``operators.zonal``).
+    ``strategy`` picks its physical plan while the AOI batch is within
+    the driver bounds:
 
-    - ``"cell"`` (default): one shuffle of the tile rows clustered by
-      ``cell_id``; each cell is decoded ONCE and its AOIs (from a broadcast
-      lookup) are looped in the kernel, with explicit salting (tile rows
-      duplicated per salt) for cells hotter than MAX_AOIS_PER_TASK AOIs.
+    - ``"cell"``: one shuffle of the tile rows clustered by ``cell_id``;
+      each cell is decoded ONCE and its AOIs (from a broadcast lookup) are
+      looped in the kernel, with explicit salting (tile rows duplicated
+      per salt) for cells hotter than MAX_AOIS_PER_TASK AOIs.
     - ``"colocated"``: ZERO shuffle of tile bytes — requires the images
       input to be cell-sorted on disk (sources.images.write_images_cell_sorted);
       the kernel streams over the scan with mapInPandas and regroups cells
       within each partition. Only partial-aggregate rows ever shuffle.
-    - ``"aoi_cell"``: the reference-shaped plan (one task per (aoi, cell),
-      tile bytes shuffled per overlapping AOI). Skew-free by construction
-      but maximally redundant on hot cells; kept for parity testing AND as
-      the fallback for AOI batches too large to broadcast as a lookup
-      (pass ``broadcast_aoi=False`` for a plain shuffle join with AQE
-      skew splitting — nothing is ever collected to the driver).
+      Hot cells are diverted to the salted cell plan.
+    - ``None``/``"auto"``: ``"colocated"`` for a frame read off a
+      cell-sorted layout, ``"cell"`` otherwise; a small aggregate request
+      runs the kernel on the driver instead (module docstring, "The
+      driver route").
 
-    With ``strategy`` auto, a small aggregate request runs the kernel on
-    the driver instead (module docstring, "The driver route").
+    A multigrid query always takes the cell plan. A batch over any driver
+    bound takes the cogroup route whatever the strategy (module
+    docstring, "Over the bounds").
     """
+    if strategy not in (None, "auto", "cell", "colocated"):
+        raise ValueError(f"unknown strategy {strategy!r}; use auto, cell or colocated")
     grid_name = resolve_target_grid(query, env, grid_name)
     if any(a.func in VALUE_ROLLUP_FUNCS for a in query.aggregates):
         return _run_value_rollup_query(
@@ -151,22 +157,12 @@ def run_zonal_query(
             strategy=strategy, aoi_index=aoi_index,
         )
     auto = strategy in (None, "auto")
-    if auto:
-        # frames read straight off a cell-sorted layout (sources.images
-        # sidecar) default to the zero-shuffle colocated scan; anything
-        # else takes the one-shuffle cell-clustered plan
-        strategy = "colocated" if getattr(images, "_gfw_cell_sorted", False) else "cell"
+    # frames read straight off a cell-sorted layout (sources.images
+    # sidecar) default to the zero-shuffle colocated scan
+    colocated = strategy == "colocated" or (auto and getattr(images, "_gfw_cell_sorted", False))
     needed = env.source_layer_names(query.layer_names())
-    if any(env.get_layer(n).grid != grid_name for n in needed) and strategy != "cell":
-        strategy = "cell"  # multi-grid co-registration needs the remapped plan
-    if strategy == "aoi_cell":
-        cells = aoi_cells(aoi_df, grid_name)
-        if query.select_pixels:
-            out = build_pixels(images, cells, query, env, grid_name, broadcast_aoi)
-            return _finalize_pixels(out, query)
-        partials = build_partials(images, cells, query, env, grid_name, broadcast_aoi)
-        return finalize_partials(partials, query, env)
-    colocated = strategy == "colocated"
+    if any(env.get_layer(n).grid != grid_name for n in needed):
+        colocated = False  # multi-grid co-registration needs the remapped plan
     if aoi_index is not None and aoi_index.grid_name != grid_name:
         raise ValueError(
             f"aoi_index was prepared on grid {aoi_index.grid_name!r} but the "
@@ -183,7 +179,7 @@ def run_zonal_query(
             on_driver=on_driver,
         )
     else:
-        out = _build_partials_over_bound(images, aoi_df, query, env, grid_name, colocated)
+        out = _build_partials_over_bound(images, aoi_df, query, env, grid_name)
     if query.select_pixels:
         return _finalize_pixels(out, query)
     return finalize_partials(out, query, env, bounded=aoi_index is not None)
@@ -339,8 +335,6 @@ def _join_nullsafe(l: DataFrame, r: DataFrame, keys: list) -> DataFrame:
 def _rollup_one(partials, a: Aggregate, vcol: str, keys: list) -> DataFrame:
     """One rollup selector's per-key result frame from the shared
     group-by-value counts."""
-    from pyspark.sql import Window
-
     if a.func in ("variance", "stddev"):
         # population variance from the bincount, ALL-INTEGER until the
         # final division: var = (n*s2 - s1^2) / n^2 with s1 = sum(c*v),
@@ -457,7 +451,7 @@ def _aoi_lookup_from_aois(spark: SparkSession, rows: list, grid_name: str,
 
     With ``cell_limit`` set, enumeration aborts as soon as the total
     aoi-cell count exceeds it and returns ``(None, None)`` — the caller
-    must route to the distributed shuffle-join plan instead of holding an
+    must route to the distributed cogroup plan instead of holding an
     over-bound lookup on the driver (a single ">1 billion ha" AOI, the
     reference's own envelope, would otherwise OOM here)."""
     grid = G.get_grid(grid_name)
@@ -475,10 +469,10 @@ def _aoi_lookup_from_aois(spark: SparkSession, rows: list, grid_name: str,
 
 
 def _aoi_lookup(spark: SparkSession, cells: DataFrame, max_aois_per_task: int):
-    """Collect the (small, broadcastable — same bound as the broadcast
-    join) AOI-cell list to a dict {cell_id: (n_salt, [(aoi_id, wkb)...])}
-    and ship it as a Spark broadcast variable. n_salt > 1 flags hot cells
-    whose AOI loop the planner splits across salted replicas."""
+    """Collect a (small, broadcastable) AOI-cell list to a dict
+    {cell_id: (n_salt, [(aoi_id, wkb)...])} and ship it as a Spark
+    broadcast variable. n_salt > 1 flags hot cells whose AOI loop the
+    planner splits across salted replicas."""
     rows = cells.select("cell_id", "aoi_id", "geom_wkb").collect()
     by_cell: dict[int, list] = {}
     for r in rows:
@@ -528,7 +522,7 @@ def prepare_aoi_index(
     """Build an :class:`AoiIndex` for ``aoi_df`` on ``grid_name``; returns
     ``None`` when the batch exceeds the broadcast bound (callers then run
     the normal per-query path, which routes to the distributed
-    shuffle-join plan).
+    cogroup plan).
 
     The AOI frame is read once: one bounded query decides the row-count
     AND total WKB-bytes bounds and returns the rows, so a batch of
@@ -548,35 +542,18 @@ def prepare_aoi_index(
     return AoiIndex(grid_name, lookup, salted)
 
 
-def build_partials_by_cell(
-    images: DataFrame,
-    aoi_df: DataFrame,  # (aoi_id, geom_wkb)
-    query: ZonalQuery,
-    env: DataEnvironment,
-    grid_name: str,
-    colocated: bool = False,
-    max_aois_per_task: int = MAX_AOIS_PER_TASK,
-) -> DataFrame:
-    """Partial rows via the per-cell kernel. Tile bytes cross the wire at
-    most once (``colocated=False``: one repartition by cell_id, plus salted
-    replicas of hot cells only) or never (``colocated=True``: mapInPandas
-    straight over a cell-sorted scan).
-
-    The cell-kernel plans need the AOI-cell map on the driver (it ships as
-    a broadcast). That is only safe up to ``BROADCAST_CELL_LIMIT`` aoi-cell
-    rows; beyond it — a giant AOI or a country-scale batch — this function
-    automatically falls back to the distributed shuffle-join plan
-    (``build_partials``/``build_pixels`` with ``broadcast_aoi=False``),
-    which collects NOTHING and relies on AQE skew splitting. Both plans
-    emit the identical partial schema, so callers never notice beyond the
-    physical strategy."""
-    idx = prepare_aoi_index(images.sparkSession, aoi_df, grid_name, max_aois_per_task)
-    if idx is not None:
-        return build_partials_with_lookup(
-            images, idx.lookup, idx.salted, query, env, grid_name, colocated
+def _salted_aoi_cells(aoi_df: DataFrame, grid_name: str) -> DataFrame:
+    """(aoi_id, geom_wkb, cell_id, _n_salt, _salt), computed distributed:
+    ``n_salt = ceil(AOIs of the cell / MAX_AOIS_PER_TASK)`` by a window
+    count, and each AOI's slot is the one ``aois[s::n_salt]`` gives it in
+    the broadcast lookup (the cell's AOIs sorted by id)."""
+    w = Window.partitionBy("cell_id")
+    return (
+        aoi_cells(aoi_df, grid_name)
+        .withColumn("_n_salt", F.ceil(F.count("*").over(w) / MAX_AOIS_PER_TASK).cast("int"))
+        .withColumn(
+            "_salt", ((F.row_number().over(w.orderBy("aoi_id")) - 1) % F.col("_n_salt")).cast("int")
         )
-    return _build_partials_over_bound(
-        images, aoi_df, query, env, grid_name, colocated, max_aois_per_task
     )
 
 
@@ -586,30 +563,40 @@ def _build_partials_over_bound(
     query: ZonalQuery,
     env: DataEnvironment,
     grid_name: str,
-    colocated: bool,
-    max_aois_per_task: int = MAX_AOIS_PER_TASK,
 ) -> DataFrame:
-    """The distributed route for an AOI batch over the driver bounds."""
-    # count the aoi-cell rows DISTRIBUTED first; collect the lookup only
-    # when it provably fits the broadcast bound. The polygon->cells
-    # enumeration is the expensive part, so persist it: count, (collect |
-    # shuffle-join plan) all reuse one job's output.
-    cells = aoi_cells(aoi_df, grid_name).persist()
-    stats = cells.select(
-        F.count("*").alias("n"),
-        F.coalesce(F.sum(F.length("geom_wkb")), F.lit(0)).alias("b"),
-    ).collect()[0]
-    # collecting the lookup pulls one geometry copy PER aoi-cell row,
-    # so the byte bound applies here too — over it, never collect
-    if stats["n"] <= BROADCAST_CELL_LIMIT and stats["b"] <= DRIVER_ENUM_WKB_BYTES:
-        lookup, salted = _aoi_lookup(images.sparkSession, cells, max_aois_per_task)
-        cells.unpersist()
-        return build_partials_with_lookup(
-            images, lookup, salted, query, env, grid_name, colocated
-        )
-    # over the broadcast bound: reference-shaped shuffle-join plan
-    builder = build_pixels if query.select_pixels else build_partials
-    return builder(images, cells, query, env, grid_name, broadcast_aoi=False)
+    """The route for an AOI batch over any driver bound (module docstring,
+    "Over the bounds"); nothing is collected to the driver. The AOI-cell
+    rows are salted (:func:`_salted_aoi_cells`), the tile rows are
+    replicated once per salt of their cell (cells with no AOI drop out
+    here), and a cogroup on (cell_id, _salt) hands each cell's tiles and
+    AOI slice to the same cell kernel as every other route."""
+    spark = images.sparkSession
+    cells = _salted_aoi_cells(aoi_df, grid_name)
+    tiles = (
+        _tile_rows(images, env, env.source_layer_names(query.layer_names()), grid_name)
+        .join(cells.select("cell_id", "_n_salt").distinct(), "cell_id")
+        .withColumn("_salt", F.explode(F.sequence(F.lit(0), F.col("_n_salt") - 1)))
+        .drop("_n_salt")
+    )
+    wrapped, schema = _wrapped_cell_kernel(query, env, grid_name)
+
+    def run(key, tiles_pdf, aois):
+        if tiles_pdf.empty:  # an AOI cell with no stored tile: zero-filled (S2)
+            tiles_pdf = pd.DataFrame(
+                {"cell_id": [key[0]], "src_cell_id": [key[0]]}, columns=tiles_pdf.columns
+            )
+        return wrapped(tiles_pdf, aois=list(zip(aois["aoi_id"], aois["geom_wkb"])))
+
+    # an explicit partition count, exempt from AQE's byte-based coalescing:
+    # a tile row is small on the wire and large in kernel CPU
+    n = spark.sparkContext.defaultParallelism * 3
+    keys = ["cell_id", "_salt"]
+    aoi_side = cells.select(*keys, "aoi_id", "geom_wkb").repartition(n, *keys)
+    return (
+        tiles.repartition(n, *keys).groupBy(*keys)
+        .cogroup(aoi_side.groupBy(*keys))
+        .applyInPandas(run, schema)
+    )
 
 
 def resolve_target_grid(query: ZonalQuery, env: DataEnvironment, grid_name: str | None) -> str:
@@ -803,37 +790,44 @@ def build_partials_with_lookup(
     (aoi, cell) pairs from the lookup). ``on_driver`` runs the kernel now,
     on the driver (see :func:`_driver_cell_plan`); otherwise the plan is
     lazy."""
-    spark = images.sparkSession
     cell_ids = list(lookup.value.keys())
     needed = env.source_layer_names(query.layer_names())
-
-    target = G.get_grid(grid_name)
-    multigrid = any(env.get_layer(n).grid != grid_name for n in needed)
-    if multigrid and colocated:
+    if colocated and any(env.get_layer(n).grid != grid_name for n in needed):
         raise ValueError(
             "colocated strategy requires a single-grid query (coarse-layer "
             "rows live at other cells' file positions); use strategy='cell'"
         )
-
-    imgs = images.select("layer", "cell_id", "bytes", "w", "h", "fmt")
-    if needed:
-        imgs = imgs.filter(F.col("layer").isin(needed))
-    if multigrid:
-        imgs = _regrid_images(imgs, env, needed, target)
-    else:
-        imgs = imgs.withColumn("src_cell_id", F.col("cell_id"))
-    imgs = _prune_cells(imgs, cell_ids)
+    imgs = _prune_cells(_tile_rows(images, env, needed, grid_name), cell_ids)
     fill_cells = cell_ids if query.base_layer == FROM_DATA else None
+    wrapped, schema = _wrapped_cell_kernel(query, env, grid_name, lookup)
+    return _dispatch_cell_plan(
+        images.sparkSession, imgs, fill_cells, salted, wrapped, schema, colocated, on_driver
+    )
 
+
+def _tile_rows(images: DataFrame, env: DataEnvironment, layers: list, grid_name: str) -> DataFrame:
+    """The kernel's tile rows: the column- and layer-pruned scan (Catalyst
+    pushes ``layer IN (...)`` down to the parquet/Iceberg scan), with
+    ``src_cell_id``, and coarser-grid layers remapped onto ``grid_name``'s
+    cells (:func:`_regrid_images`)."""
+    imgs = images.select("layer", "cell_id", "bytes", "w", "h", "fmt")
+    if layers:
+        imgs = imgs.filter(F.col("layer").isin(layers))
+    if any(env.get_layer(n).grid != grid_name for n in layers):
+        return _regrid_images(imgs, env, layers, G.get_grid(grid_name))
+    return imgs.withColumn("src_cell_id", F.col("cell_id"))
+
+
+def _wrapped_cell_kernel(query: ZonalQuery, env: DataEnvironment, grid_name: str, lookup=None):
+    """(wrapped one-query cell kernel, its output schema): wide partial
+    rows with ``cell_id`` and ``_ms``, or pixel rows."""
     kernel = zonal.make_cell_kernel(query, env.to_json(), grid_name, lookup)
     if query.select_pixels:
-        schema = "`aoi_id` string, " + zonal.pixel_schema_ddl(query)
-        wrapped = _wrap_cell_kernel(kernel, with_cell=False)
-    else:
-        schema = "`aoi_id` string, `cell_id` long, `_ms` double, " + zonal.partial_schema_ddl(query)
-        wrapped = _wrap_cell_kernel(kernel)
-    return _dispatch_cell_plan(
-        spark, imgs, fill_cells, salted, wrapped, schema, colocated, on_driver
+        return _wrap_cell_kernel(kernel, with_cell=False), (
+            "`aoi_id` string, " + zonal.pixel_schema_ddl(query)
+        )
+    return _wrap_cell_kernel(kernel), (
+        "`aoi_id` string, `cell_id` long, `_ms` double, " + zonal.partial_schema_ddl(query)
     )
 
 
@@ -863,11 +857,7 @@ def build_multi_partials_with_lookup(
     if any(env.get_layer(n).grid != grid_name for n in union_layers):
         raise ValueError("fused execution requires a single-grid query set")
 
-    imgs = images.select("layer", "cell_id", "bytes", "w", "h", "fmt")
-    if union_layers:
-        imgs = imgs.filter(F.col("layer").isin(union_layers))
-    imgs = imgs.withColumn("src_cell_id", F.col("cell_id"))
-    imgs = _prune_cells(imgs, cell_ids)
+    imgs = _prune_cells(_tile_rows(images, env, union_layers, grid_name), cell_ids)
     fill_cells = cell_ids if any(q.base_layer == FROM_DATA for q in queries) else None
 
     kernel = zonal.make_multi_cell_kernel(queries, env.to_json(), grid_name, lookup)
@@ -1080,10 +1070,12 @@ def _salted_cell_plan(spark, imgs: DataFrame, salted: dict, wrapped, schema: str
 
 
 def _wrap_cell_kernel(kernel, with_cell: bool = True):
-    """The cell kernel emits aoi_id itself; add cell_id + amortized _ms."""
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+    """The cell kernel emits aoi_id itself; add cell_id + amortized _ms.
+    ``aois`` is keyword-only: applyInPandas passes a grouping key to a
+    function of two positional parameters."""
+    def run(pdf, *, aois=None):
         t0 = time.perf_counter()
-        out = kernel(pdf)
+        out = kernel(pdf, aois)
         if with_cell:
             ms = (time.perf_counter() - t0) * 1000.0 / max(len(out), 1)
             out.insert(1, "_ms", ms)
@@ -1117,112 +1109,6 @@ def _streaming_cells(wrapped):
                 yield wrapped(g)
         if buf is not None and len(buf):
             yield wrapped(buf)
-
-    return run
-
-
-def _joined_tiles(
-    images: DataFrame,
-    cells: DataFrame,
-    query: ZonalQuery,
-    env: DataEnvironment,
-    broadcast_aoi: bool | None,
-) -> DataFrame:
-    needed = env.source_layer_names(query.layer_names())
-
-    # column-pruned, layer-pruned scan (Catalyst pushes layer IN (...) and
-    # the join's cell_id filter down to the parquet/Iceberg scan)
-    imgs = images.select("layer", "cell_id", "bytes", "w", "h", "fmt")
-    if needed:
-        imgs = imgs.filter(F.col("layer").isin(needed))
-
-    if broadcast_aoi is None:
-        broadcast_aoi = True  # zonal AOI sets are small; explicit override for big batches
-    cells_side = F.broadcast(cells) if broadcast_aoi else cells
-    joined = imgs.join(cells_side, "cell_id")
-
-    # Missing-tile tolerance (S2): an AOI cell with no stored tiles must
-    # still produce rows when FROM data drops the base NoData mask (the
-    # reference synthesizes zero tiles, window.py:103-119). An outer join
-    # can't broadcast its preserved side, so instead we union in the
-    # missing cells explicitly — `present` is tiny (bounded by the AOI
-    # cell list) so both joins below stay broadcast.
-    if query.base_layer == FROM_DATA:
-        present = joined.select("cell_id").distinct()
-        missing = (
-            cells.join(F.broadcast(present), "cell_id", "left_anti")
-            .withColumn("layer", F.lit(None).cast("string"))
-            .withColumn("bytes", F.lit(None).cast("binary"))
-            .withColumn("w", F.lit(None).cast("int"))
-            .withColumn("h", F.lit(None).cast("int"))
-            .withColumn("fmt", F.lit(None).cast("string"))
-        )
-        joined = joined.unionByName(missing.select(*joined.columns))
-    return joined
-
-
-def build_partials(
-    images: DataFrame,
-    cells: DataFrame,  # (aoi_id, geom_wkb, cell_id) — from aoi_cells()
-    query: ZonalQuery,
-    env: DataEnvironment,
-    grid_name: str,
-    broadcast_aoi: bool | None = None,
-) -> DataFrame:
-    """Partial-aggregate DataFrame keyed by (aoi_id, cell_id) — the unit
-    the checkpoint/lineage layer persists and resumes. Carries a ``_ms``
-    per-group kernel wall-time column for the lineage table."""
-    joined = _joined_tiles(images, cells, query, env, broadcast_aoi)
-    kernel = zonal.make_zonal_kernel(query, env.to_json(), grid_name)
-    schema = "`aoi_id` string, `cell_id` long, `_ms` double, " + zonal.partial_schema_ddl(query)
-    return _cluster_for_kernel(joined).groupBy("aoi_id", "cell_id").applyInPandas(
-        _wrap_with_keys(kernel), schema
-    )
-
-
-def build_pixels(
-    images: DataFrame,
-    cells: DataFrame,
-    query: ZonalQuery,
-    env: DataEnvironment,
-    grid_name: str,
-    broadcast_aoi: bool | None = None,
-) -> DataFrame:
-    joined = _joined_tiles(images, cells, query, env, broadcast_aoi)
-    kernel = zonal.make_zonal_kernel(query, env.to_json(), grid_name)
-    schema = "`aoi_id` string, " + zonal.pixel_schema_ddl(query)
-    return _cluster_for_kernel(joined).groupBy("aoi_id", "cell_id").applyInPandas(
-        _wrap_with_keys(kernel, with_cell=False), schema
-    )
-
-
-def _cluster_for_kernel(joined: DataFrame) -> DataFrame:
-    """Partition the joined tiles for the kernel stage with an *explicit*
-    partition count. AQE's partition coalescing sizes partitions by shuffle
-    bytes, but a tile row is tiny on the wire (compressed payload) and huge
-    in CPU (w*h decoded pixels + masks) — byte-based coalescing collapses
-    the kernel stage to a handful of tasks and idles the cluster. An
-    explicit ``repartition(n, keys)`` is exempt from AQE coalescing, and
-    because it hash-clusters on exactly the groupBy keys, the downstream
-    ``groupBy(aoi_id, cell_id)`` reuses the partitioning instead of
-    shuffling again. n = 3x parallelism balances stragglers (cells per
-    task vary with AOI overlap)."""
-    spark = joined.sparkSession
-    n = spark.sparkContext.defaultParallelism * 3
-    return joined.repartition(n, "aoi_id", "cell_id")
-
-
-def _wrap_with_keys(kernel, with_cell: bool = True):
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        t0 = time.perf_counter()
-        out = kernel(pdf)
-        if with_cell:
-            # amortize over the group's rows so SUM(_ms) = true kernel time
-            ms = (time.perf_counter() - t0) * 1000.0 / max(len(out), 1)
-            out.insert(0, "_ms", ms)
-            out.insert(0, "cell_id", np.int64(pdf["cell_id"].iloc[0]))
-        out.insert(0, "aoi_id", pdf["aoi_id"].iloc[0])
-        return out
 
     return run
 
@@ -1301,8 +1187,6 @@ def _order_and_limit(
         else [F.col(c) for c in default_sort if c != "aoi_id"]
     )
     if query.limit is not None:
-        from pyspark.sql import Window
-
         # without an order (pixel rows, ungrouped aggregates) any rows of
         # the AOI may survive, but never more than LIMIT per AOI
         w = Window.partitionBy("aoi_id").orderBy(*(order or [F.col("aoi_id")]))

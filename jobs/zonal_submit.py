@@ -13,7 +13,7 @@ single Spark job. Ships to a cluster as:
         --images /data/images_parquet --aoi /data/aoi.parquet \\
         --sql "SELECT tcl_year, SUM(area__ha) AS ha FROM tcl_year GROUP BY 1" \\
         --env /data/layers.json --grid 4/1024 --output /data/out \\
-        [--checkpoint-dir /data/ckpt] [--strategy colocated|cell|aoi_cell] \\
+        [--checkpoint-dir /data/ckpt] [--strategy auto|cell|colocated] \\
         [--format parquet|csv|json]
 
 The AOI input is parquet with (aoi_id string, geom_wkb binary). Output is
@@ -42,8 +42,8 @@ def main() -> None:
                          "print one JSON line of in-job wall seconds instead "
                          "of writing --output")
     ap.add_argument("--format", default="parquet", choices=["parquet", "csv", "json"])
-    ap.add_argument("--strategy", default=None,
-                    choices=["auto", "cell", "colocated", "aoi_cell"])
+    ap.add_argument("--strategy", default=None, choices=["auto", "cell", "colocated"],
+                    help="kernel-stage plan; default: the planner's auto choice")
     ap.add_argument("--checkpoint-dir", default=None)
     ap.add_argument("--csv-output", default=None,
                     help="also write a CSV copy (reference %%.5f float format)")
@@ -69,10 +69,6 @@ def main() -> None:
     images = read_images(spark, args.images)
     aoi = spark.read.parquet(args.aoi)
 
-    strategy = args.strategy
-    if strategy in (None, "auto"):
-        strategy = "colocated" if images_cell_sorted(args.images) else "cell"
-
     if args.bench_runs:
         # Deployment-shape scaling evidence (north rule: the SAME job via
         # spark-submit --py-files at two cluster sizes). In-job wall time
@@ -85,13 +81,13 @@ def main() -> None:
         for _ in range(args.bench_runs + 1):  # first run = warmup, not kept
             t0 = time.perf_counter()
             zonal_statistics(
-                spark, images, aoi, args.sql, env, args.grid, strategy=strategy
+                spark, images, aoi, args.sql, env, args.grid, strategy=args.strategy
             ).write.format("noop").mode("overwrite").save()
             secs.append(round(time.perf_counter() - t0, 3))
         print(json.dumps({
             "bench": "zonal_submit",
             "master": spark.sparkContext.master,
-            "strategy": strategy,
+            "strategy": args.strategy,
             "runs": secs[1:],
             "warmup": secs[0],
             "best_seconds": min(secs[1:]),
@@ -102,11 +98,14 @@ def main() -> None:
         query = parse_raster_sql(args.sql, env)
         result = run_zonal_checkpointed(
             spark, images, aoi, query, env, args.grid, args.checkpoint_dir,
-            colocated=(strategy == "colocated"),
+            colocated=(
+                args.strategy == "colocated"
+                or (args.strategy in (None, "auto") and images_cell_sorted(args.images))
+            ),
         )
     else:
         result = zonal_statistics(
-            spark, images, aoi, args.sql, env, args.grid, strategy=strategy
+            spark, images, aoi, args.sql, env, args.grid, strategy=args.strategy
         )
 
     def write_csv(df, path):

@@ -46,9 +46,11 @@ def tables(spark, corpus):
 
 def run_both(spark, tables, env, query, aois=None):
     """(engine result, oracle result). The fixture batches are far below
-    the driver-kernel bound, so the engine result comes from the driver
-    route; an aggregate query runs again with the bound at 0, through the
-    distributed kernel plan, and must give the same frame."""
+    the driver bounds, so the engine result comes from a within-bound
+    route (the driver kernel for an aggregate). Every query runs again
+    over the bounds (``BROADCAST_CELL_LIMIT`` at 0: the cogroup route),
+    and an aggregate also with the driver-kernel bound at 0 (the
+    distributed kernel plan); each must give the same frame."""
     images, aoi_df = tables
     aois = aois or [a for a in fixtures.fixture_aois()]
     ids = [a[0] for a in aois]
@@ -62,9 +64,16 @@ def run_both(spark, tables, env, query, aois=None):
         )
 
     got = run()
-    if not query.select_pixels:
-        with mock.patch.object(planner, "DRIVER_KERNEL_PX_LIMIT", 0):
-            assert_frames_match(run(), got)
+    bounds = ["BROADCAST_CELL_LIMIT"] + ([] if query.select_pixels else ["DRIVER_KERNEL_PX_LIMIT"])
+    for bound in bounds:
+        with mock.patch.object(planner, bound, 0):
+            other = run()
+        if query.select_pixels and query.limit is not None and not query.order_by:
+            # which pixel rows LIMIT keeps without an ORDER BY is unspecified
+            per_aoi = other.groupby("aoi_id").size(), got.groupby("aoi_id").size()
+            assert per_aoi[0].to_dict() == per_aoi[1].to_dict(), bound
+        else:
+            assert_frames_match(other, got)
     exp = oracle.run_oracle(query, env, aois)
     return got, exp
 
@@ -290,7 +299,8 @@ def test_compat_avg_quirk(spark, tables, env):
     assert (got["m"].to_numpy() != got2["m"].to_numpy()).any()
 
 
-# 14. strategy parity: aoi_cell / cell / salted-cell / colocated must agree
+# 14. strategy parity: cell / salted-cell / colocated agree with each
+# other and with the oracle
 def _parity_query():
     return ZonalQuery(
         base_layer="tcl_year",
@@ -306,7 +316,7 @@ def _parity_query():
 def test_strategy_parity_cell_vs_aoi_cell(spark, tables, env):
     images, aoi_df = tables
     q = _parity_query()
-    ref = run_zonal_query(spark, images, aoi_df, q, env, GRID_NAME, strategy="aoi_cell").toPandas()
+    ref = oracle.run_oracle(q, env, fixtures.fixture_aois())
     got = run_zonal_query(spark, images, aoi_df, q, env, GRID_NAME, strategy="cell").toPandas()
     assert_frames_match(got, ref)
 
@@ -347,15 +357,12 @@ def test_strategy_parity_salted(spark, tables, env):
 
     images, aoi_df = tables
     q = _parity_query()
-    ref = planner.finalize_partials(
-        planner.build_partials_by_cell(images, aoi_df, q, env, GRID_NAME), q, env
-    ).toPandas()
+    ref = run_zonal_query(spark, images, aoi_df, q, env, GRID_NAME, strategy="cell").toPandas()
     # max_aois_per_task=1 -> every multi-AOI cell gets salted replicas
-    salted = planner.finalize_partials(
-        planner.build_partials_by_cell(
-            images, aoi_df, q, env, GRID_NAME, max_aois_per_task=1
-        ),
-        q, env,
+    idx = planner.prepare_aoi_index(spark, aoi_df, GRID_NAME, max_aois_per_task=1)
+    assert idx.salted
+    salted = run_zonal_query(
+        spark, images, aoi_df, q, env, GRID_NAME, strategy="cell", aoi_index=idx
     ).toPandas()
     assert_frames_match(salted, ref)
 
@@ -388,7 +395,7 @@ def test_strategy_parity_pixel_mode(spark, tables, env):
         select_pixels=("latitude", "longitude", "tcl_year"),
         where=FilterLeaf("tcd_threshold", "in", (6, 7)),
     )
-    ref = run_zonal_query(spark, images, aoi_df, q, env, GRID_NAME, strategy="aoi_cell").toPandas()
+    ref = oracle.run_oracle(q, env, fixtures.fixture_aois())
     got = run_zonal_query(spark, images, aoi_df, q, env, GRID_NAME, strategy="cell").toPandas()
     assert_frames_match(
         got.sort_values(list(got.columns)).reset_index(drop=True),
@@ -409,8 +416,8 @@ def test_lookup_paths_agree(spark, tables):
 
 # 15. finest-grid co-registration: biomass lives on 4/512 (2x coarser);
 # querying it with 4/1024 layers must upsample it inside the kernel
-def test_multigrid_coarse_layer_upsample(spark, tables, env):
-    q = ZonalQuery(
+def _multigrid_query():
+    return ZonalQuery(
         base_layer="tcl_year",
         group_layers=("tcl_year",),
         aggregates=(
@@ -419,9 +426,27 @@ def test_multigrid_coarse_layer_upsample(spark, tables, env):
         ),
         where=FilterLeaf("biomass", ">", (50,)),
     )
-    got, exp = run_both(spark, tables, env, q)
+
+
+def test_multigrid_coarse_layer_upsample(spark, tables, env):
+    got, exp = run_both(spark, tables, env, _multigrid_query())
     assert len(got) > 10
     assert_frames_match(got, exp)
+
+
+def test_multigrid_over_bound_route(spark, tables, env, monkeypatch):
+    """Over the driver bounds a multigrid query regrids the coarse tiles
+    like every other route (an over-bound plan that joined tiles to AOI
+    cells on the raw cell id found no 4/512 tile and returned no rows)."""
+    images, aoi_df = tables
+    aois = fixtures.fixture_aois()[:3]
+    aoi_df = aoi_df.filter(aoi_df.aoi_id.isin([a[0] for a in aois]))
+    q = _multigrid_query()
+    monkeypatch.setattr(planner, "BROADCAST_CELL_LIMIT", 0)
+    got = run_zonal_query(spark, images, aoi_df, q, env, GRID_NAME).toPandas()
+    exp = oracle.run_oracle(q, env, aois)
+    assert len(exp) > 10
+    assert_frames_match(got.reset_index(drop=True), exp)
 
 
 def test_multigrid_target_grid_resolution(spark, tables, env):
@@ -530,10 +555,7 @@ def test_generic_path_isoweek_zero_masked_aoi(spark, tables, env):
         run_zonal_query(spark, images, aoi_df, q, env, GRID_NAME, strategy="cell")
         .toPandas().reset_index(drop=True)
     )
-    exp = (
-        run_zonal_query(spark, images, aoi_df, q, env, GRID_NAME, strategy="aoi_cell")
-        .toPandas().reset_index(drop=True)
-    )
+    exp = oracle.run_oracle(q, env, [normal, sliver])
     assert set(got["aoi_id"]) == {"aoi_norm"}  # sliver legitimately empty
     assert_frames_match(got, exp)
 
@@ -583,7 +605,7 @@ def test_colocated_split_safe_guard(spark, corpus, env, tmp_path):
         assert cells_spanning_tasks(spark.read.parquet(path)) > 0
 
         # read_images applies the guard: confs bumped, no cell splits,
-        # and the colocated result matches the shuffle-join plan
+        # and the colocated result matches the oracle
         images = read_images(spark, path)
         assert _parse_bytes(spark.conf.get(keys[0])) > 65536
         assert _parse_bytes(spark.conf.get(keys[1])) > 0
@@ -601,20 +623,15 @@ def test_colocated_split_safe_guard(spark, corpus, env, tmp_path):
                             strategy="colocated")
             .toPandas().reset_index(drop=True)
         )
-        exp = (
-            run_zonal_query(spark, images, aoi_df, q, env, GRID_NAME,
-                            strategy="aoi_cell")
-            .toPandas().reset_index(drop=True)
-        )
-        assert_frames_match(got, exp)
+        assert_frames_match(got, oracle.run_oracle(q, env, aois))
     finally:
         for k, v in saved.items():
             spark.conf.set(k, v)
 
 
 # 18. broadcast-volume guard: an AOI batch whose aoi-cell map exceeds
-# BROADCAST_CELL_LIMIT must take the distributed shuffle-join plan —
-# nothing collected to the driver — and agree with the broadcast plan
+# BROADCAST_CELL_LIMIT must take the distributed cogroup plan — nothing
+# collected to the driver — and agree with the broadcast plan
 def test_auto_fallback_over_broadcast_limit(spark, tables, env, monkeypatch):
     from gfw_raster_analysis_lambda_spark.plans import planner
 
@@ -633,33 +650,45 @@ def test_auto_fallback_over_broadcast_limit(spark, tables, env, monkeypatch):
 
     monkeypatch.setattr(planner, "BROADCAST_CELL_LIMIT", 2)  # force over-bound
     took = {}
-    orig = planner.build_partials
+    orig = planner._build_partials_over_bound
 
-    def spy(images_, cells_, query_, env_, grid_name_, broadcast_aoi=None):
-        took["shuffle_plan"] = True
-        assert broadcast_aoi is False
-        return orig(images_, cells_, query_, env_, grid_name_, broadcast_aoi)
+    def spy(*a, **k):
+        took["cogroup_plan"] = True
+        return orig(*a, **k)
 
-    monkeypatch.setattr(planner, "build_partials", spy)
+    monkeypatch.setattr(planner, "_build_partials_over_bound", spy)
 
     def no_collect(*a, **k):
         raise AssertionError("over-bound batch collected the cell map to the driver")
 
-    monkeypatch.setattr(planner, "_aoi_lookup", no_collect)
-    got = (
-        run_zonal_query(spark, images, aoi_df, q, env, GRID_NAME, strategy="cell")
-        .toPandas().reset_index(drop=True)
-    )
-    assert took.get("shuffle_plan")
+    for name in ("_aoi_lookup", "_with_missing_cells", "_driver_cell_plan"):
+        monkeypatch.setattr(planner, name, no_collect)
+    df = run_zonal_query(spark, images, aoi_df, q, env, GRID_NAME, strategy="cell")
+    got = df.toPandas().reset_index(drop=True)
+    assert took.get("cogroup_plan")
+    assert "FlatMapCoGroupsInPandas" in df._jdf.queryExecution().executedPlan().toString()
     assert_frames_match(got, exp)
 
 
 # 19. colocated hot-cell diversion: a cell stacked with hundreds of AOIs
 # must not serialize into one colocated task — it takes the salted cell
 # plan while cold cells keep the zero-shuffle stream; results must match
-# the reference-shaped aoi_cell plan exactly
-def test_colocated_hot_cell_diversion(spark, corpus, env, tmp_path, monkeypatch):
+# the oracle
+def _hot_cell_aois():
+    """300 tiny AOIs stacked inside ONE cell (lon 10..10.25, lat
+    20.75..21) -> n_salt = ceil(300/64) = 5 salted slices; plus two
+    normal AOIs."""
     from gfw_raster_analysis_lambda_spark.functions import geometry as geo
+
+    rows = []
+    for i in range(300):
+        lon = 10.01 + (i % 20) * 0.011
+        lat = 20.76 + (i // 20) * 0.015
+        rows.append((f"hot_{i:03d}", geo.wkb_dumps(geo.box(lon, lat, lon + 0.009, lat + 0.012))))
+    return rows + [(a, w) for a, w in fixtures.fixture_aois()[:2]]
+
+
+def test_colocated_hot_cell_diversion(spark, corpus, env, tmp_path, monkeypatch):
     from gfw_raster_analysis_lambda_spark.plans import planner
     from gfw_raster_analysis_lambda_spark.sources.images import (
         read_images,
@@ -670,14 +699,7 @@ def test_colocated_hot_cell_diversion(spark, corpus, env, tmp_path, monkeypatch)
     write_images_cell_sorted(spark.read.parquet(corpus["images"]), path)
     images = read_images(spark, path)
 
-    # 300 tiny AOIs stacked inside ONE cell (lon 10..10.25, lat 20.75..21)
-    # -> n_salt = ceil(300/64) = 5 salted slices; plus two normal AOIs
-    rows = []
-    for i in range(300):
-        lon = 10.01 + (i % 20) * 0.011
-        lat = 20.76 + (i // 20) * 0.015
-        rows.append((f"hot_{i:03d}", geo.wkb_dumps(geo.box(lon, lat, lon + 0.009, lat + 0.012))))
-    rows += [(a, w) for a, w in fixtures.fixture_aois()[:2]]
+    rows = _hot_cell_aois()
     aoi_df = spark.createDataFrame(rows, "aoi_id string, geom_wkb binary")
 
     q = ZonalQuery(
@@ -699,11 +721,47 @@ def test_colocated_hot_cell_diversion(spark, corpus, env, tmp_path, monkeypatch)
         .toPandas().reset_index(drop=True)
     )
     assert took["salted"] and max(took["salted"].values()) >= 5  # diverted + salted
-    exp = (
-        run_zonal_query(spark, images, aoi_df, q, env, GRID_NAME, strategy="aoi_cell")
-        .toPandas().reset_index(drop=True)
+    assert_frames_match(got, oracle.run_oracle(q, env, rows))
+
+
+# 19b. the same hot cell over the driver bounds: the cogroup route salts
+# it by a window count into the slices the broadcast lookup would give
+# (aois[s::n_salt] of the cell's AOIs sorted by id); results match the
+# oracle
+def test_hot_cell_over_bound_salting(spark, tables, env, monkeypatch):
+    from pyspark.sql import functions as F
+
+    from gfw_raster_analysis_lambda_spark.functions import geometry as geo
+    from gfw_raster_analysis_lambda_spark.functions import grid as G
+
+    images, _ = tables
+    rows = _hot_cell_aois()
+    aoi_df = spark.createDataFrame(rows, "aoi_id string, geom_wkb binary")
+    q = ZonalQuery(
+        base_layer="tcl_year",
+        group_layers=("tcl_year",),
+        aggregates=(Aggregate("count", None, "n"),),
     )
-    assert_frames_match(got, exp)
+    salted = []
+    orig = planner._salted_aoi_cells
+
+    def spy(*a, **k):
+        salted.append(orig(*a, **k))
+        return salted[-1]
+
+    monkeypatch.setattr(planner, "_salted_aoi_cells", spy)
+    monkeypatch.setattr(planner, "BROADCAST_CELL_LIMIT", 0)
+    got = run_zonal_query(spark, images, aoi_df, q, env, GRID_NAME).toPandas()
+    assert len(salted) == 1
+    (hot,) = G.polygon_to_cells(fixtures.GRID, geo.wkb_loads(rows[0][1])).tolist()
+    slots = (
+        salted[0].filter(F.col("cell_id") == hot).select("aoi_id", "_n_salt", "_salt")
+        .toPandas().sort_values("aoi_id")
+    )
+    n_salt = int(slots["_n_salt"].iloc[0])
+    assert n_salt >= 5 and slots["_salt"].nunique() == n_salt
+    assert slots["_salt"].tolist() == [i % n_salt for i in range(len(slots))]
+    assert_frames_match(got.reset_index(drop=True), oracle.run_oracle(q, env, rows))
 
 
 def test_auto_strategy_prefers_colocated_on_sorted_layout(
@@ -841,7 +899,7 @@ def test_fused_set_with_rollups_shares_kernel(spark, tables, env, monkeypatch):
 
     monkeypatch.setattr(planner, "build_multi_partials_with_lookup", spy_multi)
     monkeypatch.setattr(planner, "build_partials_with_lookup", spy_single)
-    monkeypatch.setattr(planner, "build_partials_by_cell", spy_single)
+    monkeypatch.setattr(planner, "_build_partials_over_bound", spy_single)
     # the distributed kernel stage, whose partial frame is cached and shared
     monkeypatch.setattr(planner, "DRIVER_KERNEL_PX_LIMIT", 0)
     fused = run_zonal_queries(spark, images, aoi_df, qs, env, GRID_NAME)
