@@ -5,7 +5,8 @@ gfw-raster-analysis-lambda ("Raster SQL" zonal statistics) as idiomatic
 PySpark: the relational shell (filters, group-by, partial+final aggregation,
 order/limit) rides Catalyst; the spatial layer (cell grid, polygon
 rasterization, geodesic pixel area, image tile codecs) is custom vectorized
-numpy kernels carried by Arrow-batched pandas UDFs.
+numpy kernels carried by Arrow-batched UDFs (the zonal kernel through
+Spark's Arrow APIs, the others as pandas UDFs).
 
 Reference semantics studied at /root/reference (see SURVEY.md for the
 operator-by-operator mapping with file:line citations). No code is copied
@@ -14,18 +15,36 @@ from the reference; this package targets Spark's execution model directly.
 
 __version__ = "0.1.0"
 
-from .api import (  # noqa: E402,F401
-    aoi_from_geojson,
-    zonal_statistics,
-    zonal_statistics_batch,
-    zonal_statistics_multi,
-)
-from .checkpoint import run_zonal_checkpointed  # noqa: E402,F401
-from .plans.planner import ZonalResultSet, prepare_aoi_index  # noqa: E402,F401
-from .session import get_spark  # noqa: E402,F401
-from .sources.catalog import (  # noqa: E402,F401
-    DataEnvironment,
-    DerivedLayer,
-    MultiDerivedLayer,
-    SourceLayer,
-)
+import importlib
+
+# The public names load on first use (PEP 562), so importing the package
+# does not import pyspark: ``worker_daemon`` runs as a submodule and must
+# filter the worker's path before pyspark is imported.
+_EXPORTS = {
+    "aoi_from_geojson": ".api",
+    "zonal_statistics": ".api",
+    "zonal_statistics_batch": ".api",
+    "zonal_statistics_multi": ".api",
+    "run_zonal_checkpointed": ".checkpoint",
+    "ZonalResultSet": ".plans.planner",
+    "prepare_aoi_index": ".plans.planner",
+    "get_spark": ".session",
+    "DataEnvironment": ".sources.catalog",
+    "DerivedLayer": ".sources.catalog",
+    "MultiDerivedLayer": ".sources.catalog",
+    "SourceLayer": ".sources.catalog",
+}
+__all__ = sorted(_EXPORTS)
+
+
+def __getattr__(name: str):
+    module = _EXPORTS.get(name)
+    if module is None:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    value = getattr(importlib.import_module(module, __name__), name)
+    globals()[name] = value
+    return value
+
+
+def __dir__():
+    return sorted(set(globals()) | set(_EXPORTS))

@@ -26,14 +26,20 @@ Scale notes:
 - Arrow batches are bounded by ``spark.sql.execution.arrow.maxRecordsPerBatch``
   (tiles per batch) — the per-task memory bound replacing the reference's
   3 GB lambda cap.
+- The output of a cell is one ``pyarrow.RecordBatch`` built from the
+  kernel's numpy columns, which the planner hands to Spark through its
+  Arrow UDF APIs: no pandas object and no per-value Python object sits
+  between the kernel and the JVM.
 """
 
 from __future__ import annotations
 
 import threading
+import time
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from ..functions import codecs, geodesy
 from ..functions import geometry as geo
@@ -110,14 +116,6 @@ def partial_columns(query: ZonalQuery) -> list[tuple[str, str]]:
     return cols
 
 
-def partial_schema_ddl(query: ZonalQuery) -> str:
-    return ", ".join(f"`{n}` {t}" for n, t in partial_columns(query))
-
-
-def pixel_schema_ddl(query: ZonalQuery) -> str:
-    return ", ".join(f"`{n}` double" for n in query.select_pixels)
-
-
 # ---------------------------------------------------------------------------
 # Kernel construction
 # ---------------------------------------------------------------------------
@@ -147,20 +145,33 @@ def _static_mask(q: ZonalQuery, values: dict, env: DataEnvironment) -> np.ndarra
     return out
 
 
+def _columns(tiles) -> dict:
+    """A tile input as ``{column: list of values}``: a pandas frame, a
+    ``pyarrow.RecordBatch`` or a ``pyarrow.Table``."""
+    if isinstance(tiles, pd.DataFrame):
+        return {c: tiles[c].tolist() for c in tiles.columns}
+    return tiles.to_pydict()
+
+
+def _is_null(v) -> bool:
+    return v is None or (isinstance(v, float) and np.isnan(v))
+
+
 def _cell_body(queries: list, env_json: str, grid_name: str):
     """The one per-cell kernel body behind :func:`make_cell_kernel` and
     :func:`make_multi_cell_kernel`.
 
-    ``run(pdf, aois)`` takes one cell's tile rows and the cell's
-    ``[(aoi_id, wkb), ...]`` (from the broadcast lookup or from a
-    cogroup) and returns ``[(query index, block)]``: one frame per query
-    with rows, ``aoi_id`` first, then the query's partial columns (or its
-    pixel columns). The tiles are decoded once, each query's static mask
-    is built once, and each AOI is rasterized once and shared by every
-    query. An AOI that fully contains the cell has the all-True zonal
-    mask, so its part is the per-cell constant, computed once and reused
-    by every such AOI — the dominant case at scale (tiles interior to the
-    AOI).
+    ``run(cols, aois)`` takes one cell's tile rows (:func:`_columns`) and
+    the cell's ``[(aoi_id, wkb), ...]`` (from the broadcast lookup or from
+    a cogroup) and returns ``[(query index, rows, columns)]``: per query,
+    the index into ``aois`` of each output row and the query's partial
+    columns (or its pixel columns) as numpy arrays, NaN where an empty
+    group has no MIN/MAX. The tiles are decoded once, each query's static
+    mask is built once, and each AOI is rasterized once and shared by
+    every query. An AOI that fully contains the cell has the all-True
+    zonal mask, so its part is the per-cell constant, computed once and
+    reused by every such AOI — the dominant case at scale (tiles interior
+    to the AOI).
 
     The present-layer rule: a scan may hold none of query q's own source
     layers in a cell (a fused scan reads the union of the queries'
@@ -175,18 +186,18 @@ def _cell_body(queries: list, env_json: str, grid_name: str):
             if n not in union_names:
                 union_names.append(n)
 
-    def run(pdf: pd.DataFrame, aois) -> list:
+    def run(cols: dict, aois) -> list:
         if not aois:
             return []
         env = _env_cache(env_json)
         grid = G.get_grid(grid_name)
-        cell_id = int(pdf["cell_id"].iloc[0])
+        cell_id = int(cols["cell_id"][0])
         x0, y0, ps = G.cell_affine(grid, cell_id)
         lat_c = float(G.cell_centroid_lat(grid, np.array([cell_id]))[0])
         mean_area = float(geodesy.pixel_area_ha(lat_c, ps))
         tile_px = grid.chunk_px
-        present = set(pdf["layer"].dropna().astype(str))
-        values = _decode_and_derive(pdf, env, union_names, grid, cell_id, mean_area)
+        present = {str(v) for v in cols["layer"] if not _is_null(v)}
+        values = _decode_and_derive(cols, env, union_names, grid, cell_id, mean_area)
         active = []  # (query index, query, static mask, aggregation context)
         for qi, q in enumerate(queries):
             if q.base_layer != FROM_DATA and not (set(env.source_layer_names(q.layer_names())) & present):
@@ -199,12 +210,11 @@ def _cell_body(queries: list, env_json: str, grid_name: str):
         def part_of(q, ctx, mask):
             return ctx.run(mask) if ctx is not None else _select_pixels(q, values, mask, x0, y0, ps)
 
-        ids: list = [[] for _ in active]
         lens: list = [[] for _ in active]
-        cols: list = [{} for _ in active]
+        parts: list = [{} for _ in active]
         full: list = [None] * len(active)
         cell_rect = (x0, y0 - tile_px * ps, x0 + tile_px * ps, y0)
-        for aoi_id, wkb in aois:
+        for _, wkb in aois:
             geom, g_edges, g_meta = _geom_edges(bytes(wkb))
             amask = None
             if not geo.covers_rect(geom, *cell_rect, edges=g_edges, meta=g_meta):
@@ -217,76 +227,155 @@ def _cell_body(queries: list, env_json: str, grid_name: str):
                     part = full[k]
                 else:
                     part = part_of(q, ctx, amask & static if static is not None else amask)
-                ids[k].append(aoi_id)
                 lens[k].append(len(next(iter(part.values()))) if part else 0)
                 for c, v in part.items():
-                    cols[k].setdefault(c, []).append(v)
+                    parts[k].setdefault(c, []).append(v)
 
         blocks = []
         for k, (qi, q, _, ctx) in enumerate(active):
-            if not cols[k] or sum(lens[k]) == 0:
+            if not parts[k] or sum(lens[k]) == 0:
                 continue
-            nullable = _nullable_minmax_cols(q)
-            data = {"aoi_id": np.repeat(np.asarray(ids[k], dtype=object), lens[k])}
-            for c, parts in cols[k].items():
-                v = np.concatenate(parts)
-                data[c] = pd.array(v, dtype="Float64") if c in nullable else v
-            block = pd.DataFrame(data)
+            rows = np.repeat(np.arange(len(aois)), lens[k])
+            out = {c: np.concatenate(v) for c, v in parts[k].items()}
             if q.isoweek_layers and q.group_layers and not ctx.emits_iso:
-                block = _isoweek_pushdown(block, q, env, id_cols=("aoi_id",))
-            blocks.append((qi, block))
+                block = _isoweek_pushdown(pd.DataFrame({"_row": rows, **out}), q, env, id_cols=("_row",))
+                rows = block["_row"].to_numpy()
+                out = {c: block[c].to_numpy() for c in block.columns if c != "_row"}
+            blocks.append((qi, rows, out))
         return blocks
 
     return run
 
 
-def _cell_aois(lookup, pdf: pd.DataFrame) -> list:
+def _cell_aois(lookup, cols: dict) -> list:
     """The cell's AOIs from a broadcast ``{cell_id: (n_salt, [(aoi_id, wkb),
     ...])}``. When the input carries a ``_salt`` column (planner-side skew
     salting duplicated the tile rows), instance (cell, s) takes the
     deterministic slice ``aois[s::n_salt]``."""
-    entry = lookup.value.get(int(pdf["cell_id"].iloc[0]))
+    entry = lookup.value.get(int(cols["cell_id"][0]))
     if entry is None:
         return []
     n_salt, aois = entry
-    if "_salt" in pdf.columns:
-        return aois[int(pdf["_salt"].iloc[0])::n_salt]
+    if "_salt" in cols:
+        return aois[int(cols["_salt"][0])::n_salt]
     return aois
 
 
-def _empty_partials(query: ZonalQuery) -> pd.DataFrame:
-    out = {"aoi_id": pd.Series(dtype=object)}
+# ---------------------------------------------------------------------------
+# Kernel output: one Arrow record batch per cell
+# ---------------------------------------------------------------------------
+
+_ARROW_TYPES = {"long": pa.int64(), "double": pa.float64()}
+# Spark's Arrow form of array<double> (its element field is "element")
+_VALS_TYPE = pa.list_(pa.field("element", pa.float64()))
+
+
+def _out_columns(query: ZonalQuery) -> list[tuple[str, str]]:
+    """(name, spark_type) of one query's kernel columns after the keys."""
     if query.select_pixels:
-        for n in query.select_pixels:
-            out[n] = pd.Series(dtype="float64")
+        return [(n, "double") for n in query.select_pixels]
+    return partial_columns(query)
+
+
+def kernel_schema(queries: list, packed: bool) -> pa.Schema:
+    """The Arrow schema of a kernel's output: ``aoi_id``, ``cell_id`` and
+    ``_ms`` (the cell's kernel time per output row), then either the one
+    query's columns (:func:`_out_columns`) or, ``packed``, a NARROW
+    tagged union: ``_q`` selects the query and ``vals`` packs exactly that
+    query's partial values (``partial_columns(q)`` order) as one
+    array<double>. A packed row carries only its own query's values — an
+    all-queries-wide frame would store width = sum(all queries' widths)
+    nulls per row, and caching that width measurably cost back part of
+    the fusion win. Long partials are integral doubles (< 2^53 per tile
+    by construction) cast back at split time; empty-group min/max NULLs
+    are element nulls."""
+    fields = [pa.field("aoi_id", pa.string()), pa.field("cell_id", pa.int64()),
+              pa.field("_ms", pa.float64())]
+    if packed:
+        fields += [pa.field("_q", pa.int32()), pa.field("vals", _VALS_TYPE)]
     else:
-        for n, t in _pd_types(query):
-            out[n] = pd.Series(dtype=t)
-    return pd.DataFrame(out)
+        fields += [pa.field(n, _ARROW_TYPES[t]) for n, t in _out_columns(queries[0])]
+    return pa.schema(fields)
+
+
+def _arrow_builder(queries: list, packed: bool):
+    """``(schema, build)``: ``build(cell_id, aoi_ids, blocks, ms)`` turns
+    :func:`_cell_body`'s blocks into one record batch of ``schema``
+    (:func:`kernel_schema`). NaN becomes null, as a pandas UDF's output
+    conversion makes it: an empty group's MIN/MAX is NaN here. Packed,
+    ``vals`` is a list array over one flat float64 buffer: each row holds
+    its own query's partial values in ``partial_columns`` order."""
+    schema = kernel_schema(queries, packed)
+    names = [[n for n, _ in _out_columns(q)] for q in queries]
+    empty = pa.RecordBatch.from_pylist([], schema=schema)
+
+    def build(cell_id: int, aoi_ids: list, blocks: list, ms: float) -> pa.RecordBatch:
+        if not blocks:
+            return empty
+        rows = np.concatenate([r for _, r, _ in blocks])
+        n = len(rows)
+        arrays = [
+            pa.array(aoi_ids, pa.string()).take(rows),
+            pa.array(np.full(n, cell_id, dtype=np.int64)),
+            pa.array(np.full(n, ms / n)),
+        ]
+        if packed:
+            flat, null, lengths, tags = [], [], [], []
+            for qi, r, cols in blocks:
+                m = np.column_stack([np.asarray(cols[c], dtype=np.float64) for c in names[qi]])
+                flat.append(m.ravel())
+                null.append(np.isnan(m).ravel())
+                lengths.append(np.full(len(r), m.shape[1], dtype=np.int32))
+                tags.append(np.full(len(r), qi, dtype=np.int32))
+            offsets = np.zeros(n + 1, dtype=np.int32)
+            np.cumsum(np.concatenate(lengths), out=offsets[1:])
+            values = pa.array(np.concatenate(flat), mask=np.concatenate(null))
+            arrays += [
+                pa.array(np.concatenate(tags)),
+                pa.ListArray.from_arrays(pa.array(offsets), values, type=_VALS_TYPE),
+            ]
+        else:
+            (_, _, cols), = blocks
+            for c, f in zip(names[0], schema.types[3:]):
+                v = np.asarray(cols[c], dtype=f.to_pandas_dtype())
+                arrays.append(pa.array(v, f, mask=np.isnan(v) if v.dtype.kind == "f" else None))
+        return pa.RecordBatch.from_arrays(arrays, schema=schema)
+
+    return schema, build
+
+
+def _make_kernel(queries: list, env_json: str, grid_name: str, aoi_lookup, packed: bool):
+    body = _cell_body(queries, env_json, grid_name)
+    schema, build = _arrow_builder(queries, packed)
+
+    def kernel(tiles, aois=None) -> pa.RecordBatch:
+        t0 = time.perf_counter()
+        cols = _columns(tiles)
+        if aois is None:
+            aois = _cell_aois(aoi_lookup, cols)
+        blocks = body(cols, aois)
+        ms = (time.perf_counter() - t0) * 1000.0
+        return build(int(cols["cell_id"][0]), [a for a, _ in aois], blocks, ms)
+
+    kernel.schema = schema
+    return kernel
 
 
 def make_cell_kernel(query: ZonalQuery, env_json: str, grid_name: str, aoi_lookup=None):
-    """Per-cell kernel of one query: ``kernel(pdf, aois=None)`` returns the
-    cell's wide partial rows (``aoi_id`` + ``partial_columns``) or, for a
-    pixel select, its pixel rows. A cell's tiles are decoded once per
-    call, however many AOIs the call loops (see :func:`_cell_body`); only
-    a salted hot cell is split across calls.
+    """Per-cell kernel of one query: ``kernel(tiles, aois=None)`` returns
+    one ``pyarrow.RecordBatch`` (schema ``kernel.schema``, see
+    :func:`kernel_schema`) with the cell's wide partial rows or, for a
+    pixel select, its pixel rows. ``tiles`` is one cell's tile rows as a
+    pandas frame or an Arrow batch or table. A cell's tiles are decoded
+    once per call, however many AOIs the call loops (see
+    :func:`_cell_body`); only a salted hot cell is split across calls.
 
     ``aois`` is the cell's ``[(aoi_id, wkb), ...]``; when omitted it comes
     from ``aoi_lookup``, a Broadcast of ``{cell_id: (n_salt, [(aoi_id,
     wkb), ...])}`` (see :func:`_cell_aois`). Everything the closure
     captures is picklable (the env ships as JSON and is deserialized once
     per process via a module-level cache)."""
-    body = _cell_body([query], env_json, grid_name)
-    # built once per query (driver side): constructing an empty typed frame
-    # costs ~1.4 ms in pandas, and sparse corpora return it for most cells
-    empty = _empty_partials(query)
-
-    def kernel(pdf: pd.DataFrame, aois=None) -> pd.DataFrame:
-        blocks = body(pdf, _cell_aois(aoi_lookup, pdf) if aois is None else aois)
-        return blocks[0][1] if blocks else empty.copy()
-
-    return kernel
+    return _make_kernel([query], env_json, grid_name, aoi_lookup, packed=False)
 
 
 # Module caches of the kernel. They live in each Python worker and, on the
@@ -339,23 +428,22 @@ def _env_cache(env_json: str) -> DataEnvironment:
 
 
 def _decode_and_derive(
-    pdf: pd.DataFrame, env: DataEnvironment, names: list, grid, cell_id: int,
-    mean_area: float
+    cols: dict, env: DataEnvironment, names: list, grid, cell_id: int, mean_area: float
 ) -> dict[str, np.ndarray]:
     """Decode present tiles, synthesize zeros for missing ones (S2
     missing-tile tolerance, reference window.py:103-119), co-register
     layers stored on a coarser grid onto the target (finest) grid
     (reference query.py:196-210 / window.py:96-101), evaluate derived
-    layers, and ravel everything to 1-D pixel columns."""
+    layers, and ravel everything to 1-D pixel columns. ``cols`` is the
+    cell's tile rows as :func:`_columns` gives them."""
     tile_px = grid.chunk_px
-    has_src = "src_cell_id" in pdf.columns
+    has_src = "src_cell_id" in cols
     present: dict[str, np.ndarray] = {}
-    src_cells = pdf["src_cell_id"].to_numpy() if has_src else np.zeros(len(pdf))
+    src_cells = cols["src_cell_id"] if has_src else [0] * len(cols["cell_id"])
     for lval, b, w, h, fmt, src_cell in zip(
-        pdf["layer"].to_numpy(), pdf["bytes"].to_numpy(), pdf["w"].to_numpy(),
-        pdf["h"].to_numpy(), pdf["fmt"].to_numpy(), src_cells,
+        cols["layer"], cols["bytes"], cols["w"], cols["h"], cols["fmt"], src_cells
     ):
-        if lval is None or (isinstance(lval, float) and pd.isna(lval)):
+        if _is_null(lval):
             continue  # left-join null: AOI cell with no tiles at all
         lname = str(lval)
         try:
@@ -505,17 +593,18 @@ def _select_pixels(query: ZonalQuery, values, mask, x0, y0, ps) -> dict[str, np.
     return out
 
 
-def _aggregate(query: ZonalQuery, values, mask, mean_area: float) -> pd.DataFrame:
+def _aggregate(query: ZonalQuery, values, mask, mean_area: float) -> dict[str, np.ndarray]:
     """Masked (grouped) partial aggregation — the reference's
     ravel_multi_index/unique/bincount hash aggregate (A1-A5,
-    query_executor.py:52-134), emitted as partial rows."""
+    query_executor.py:52-134), emitted as partial columns under the raw
+    group-layer names."""
     masked_idx = np.flatnonzero(mask)
     n_masked = len(masked_idx)
     out: dict[str, np.ndarray] = {}
 
     if query.group_layers:
         if n_masked == 0:
-            return pd.DataFrame({n: pd.Series(dtype=t) for n, t in _pd_types(query)})
+            return _empty_columns(query, query.group_layers)
         cols = [np.asarray(values[g])[masked_idx] for g in query.group_layers]
         uniq_cols, inverse, ngroups = _group_key_inverse(cols)
         for k, g in enumerate(query.group_layers):
@@ -526,12 +615,20 @@ def _aggregate(query: ZonalQuery, values, mask, mean_area: float) -> pd.DataFram
 
     for a in query.aggregates:
         _one_aggregate(a, query, values, masked_idx, inverse, ngroups, mean_area, n_masked, out)
+    return out
 
-    pdf = pd.DataFrame(out)
-    # drop all-zero rows only in the ungrouped empty case
-    if not query.group_layers and n_masked == 0:
-        return pdf  # single zero row is the correct ungrouped result
-    return pdf
+
+def _empty_columns(q: ZonalQuery, group_names, long_names=()) -> dict[str, np.ndarray]:
+    """Zero-row partial columns: ``group_names`` (double, or long when in
+    ``long_names``) and every aggregate's partial names."""
+    out: dict[str, np.ndarray] = {}
+    for g in group_names:
+        out[g] = np.empty(0, dtype=np.int64 if g in long_names else np.float64)
+    for a in q.aggregates:
+        for n in _agg_partial_names(a, q):
+            is_long = a.func == "count" or n.endswith("__cnt")
+            out[n] = np.empty(0, dtype=np.int64 if is_long else np.float64)
+    return out
 
 
 def _group_key_inverse(cols: list[np.ndarray]):
@@ -617,20 +714,16 @@ def _one_aggregate(
     elif a.func == "min":
         acc = np.full(ngroups, np.inf)
         np.minimum.at(acc, inv, d)
-        # emit nulls (not NaN) for empty groups: Spark treats NaN as the
-        # greatest double, which would poison the final F.max/F.min merge
-        out[a.alias] = pd.array(np.where(np.isfinite(acc), acc, np.nan), dtype="Float64")
+        # NaN marks an empty group; the Arrow builder turns it into a null
+        # (Spark treats NaN as the greatest double, which would poison the
+        # final F.max/F.min merge)
+        out[a.alias] = np.where(np.isfinite(acc), acc, np.nan)
     elif a.func == "max":
         acc = np.full(ngroups, -np.inf)
         np.maximum.at(acc, inv, d)
-        out[a.alias] = pd.array(np.where(np.isfinite(acc), acc, np.nan), dtype="Float64")
+        out[a.alias] = np.where(np.isfinite(acc), acc, np.nan)
     else:
         raise ValueError(f"unsupported aggregate {a.func}")
-
-
-def _pd_types(query: ZonalQuery):
-    for n, t in partial_columns(query):
-        yield n, ("int64" if t == "long" else "float64")
 
 
 class _CellAggContext:
@@ -642,12 +735,13 @@ class _CellAggContext:
     ``flatnonzero(mask)`` + ``bincount``(s) — no per-AOI unique/LUT, no
     per-AOI dtype conversions, no per-AOI pandas objects.
 
-    isoweek group layers (F1) are folded into the PIXEL key here (decode
-    the tile's unique raw dates once, broadcast (isoyear, isoweek) back to
-    pixels): the bincount then groups by week directly, the group domain
-    shrinks from O(distinct dates) to O(distinct weeks), and the per-cell
-    ``_isoweek_pushdown`` regroup disappears from the hot path entirely —
-    it was ~half the kernel's wall time on alert-date queries."""
+    isoweek group layers (F1) are folded into the PIXEL key here (one
+    gather through a cached LUT maps each raw date to ``isoyear * 64 +
+    isoweek``, :func:`_iso_key_of_raw`): the bincount then groups by week
+    directly, the group domain shrinks from O(distinct dates) to
+    O(distinct weeks), and the per-cell ``_isoweek_pushdown`` regroup
+    disappears from the hot path entirely — it was ~half the kernel's wall
+    time on alert-date queries."""
 
     def __init__(self, query: ZonalQuery, values: dict, mean_area: float,
                  env: DataEnvironment | None = None):
@@ -668,31 +762,22 @@ class _CellAggContext:
             self.fast = True
             return
         ints: list[np.ndarray] = []
-        names: list[str] = []
-        iso_names: set = set()
+        keys: list[tuple[str, bool]] = []  # (group layer, is an isoweek key)
         for g in q.group_layers:
             c = np.asarray(values[g])
-            as_int = None
-            if c.dtype.kind in "uib":
-                as_int = c.astype(np.int64)
-            else:
+            if c.dtype.kind not in "uib":
                 f = c.astype(np.float64)
-                if np.all(np.isfinite(f)) and np.array_equal(f, np.floor(f)):
-                    as_int = f.astype(np.int64)
-                else:
+                if not (np.all(np.isfinite(f)) and np.array_equal(f, np.floor(f))):
                     return  # non-integer group values -> generic path
-            if g in q.isoweek_layers and env is not None:
-                iy, iw = _iso_year_week_of_raw(as_int, env.get_layer(g))
-                ints.append(iy)
-                names.append(f"{g}__isoyear")
-                ints.append(iw)
-                names.append(f"{g}__isoweek")
-                iso_names.update(names[-2:])
-            else:
-                ints.append(as_int)
-                names.append(g)
-        self.out_group_names = names
-        self.iso_out_names = iso_names
+                c = f.astype(np.int64)
+            is_iso = g in q.isoweek_layers and env is not None
+            ints.append(_iso_key_of_raw(c, env.get_layer(g)) if is_iso else c)
+            keys.append((g, is_iso))
+        self.keys = keys
+        self.iso_out_names = {f"{g}__iso{p}" for g, iso in keys if iso for p in ("year", "week")}
+        self.out_group_names = [
+            n for g, iso in keys for n in ((f"{g}__isoyear", f"{g}__isoweek") if iso else (g,))
+        ]
         # emits_iso only flips once the fast path is certain — a later
         # bail-out (domain overflow) must leave the generic+pushdown flow
         mins = [int(c.min()) for c in ints]
@@ -702,9 +787,12 @@ class _CellAggContext:
             total *= d
         if total > (1 << 20):  # keep the per-AOI bincount table <= 8 MB
             return
-        packed = ints[0] - mins[0]
-        for c, m, d in zip(ints[1:], mins[1:], dims[1:]):
-            packed = packed * d + (c - m)
+        packed = None
+        for c, m, d in zip(ints, mins, dims):
+            # offsets in the column's own width where it is small (8 and
+            # 16-bit rasters are the norm): a quarter of the int64 traffic
+            off = c.astype(np.int32 if c.dtype.itemsize <= 2 else np.int64) - m
+            packed = off if packed is None else packed * d + off
         # smallest dtype that fits: the per-AOI gather traffic scales with
         # the packed array's width (uint8 vs int64 = 8x less memory moved)
         for dt in (np.uint8, np.uint16, np.uint32):
@@ -719,44 +807,14 @@ class _CellAggContext:
         """Partial aggregate columns (raw group names) for one AOI mask."""
         q = self.query
         if not self.fast:
-            if q.group_layers and not mask.any():
-                # normalize the empty result to RAW group-layer names: the
-                # generic _aggregate would emit plan-schema names (e.g. the
-                # g__isoyear/g__isoweek pushdown pair) here, which must not
-                # mix with the raw names nonzero AOIs of the same cell emit
-                # (the per-cell frame is assembled column-wise; mixed keys
-                # crash pd.DataFrame with unequal column lengths)
-                out: dict[str, np.ndarray] = {}
-                for g in q.group_layers:
-                    out[g] = np.empty(0, dtype=np.float64)
-                for a in q.aggregates:
-                    for n in _agg_partial_names(a, q):
-                        is_long = a.func == "count" or n.endswith("__cnt")
-                        out[n] = np.empty(0, dtype=np.int64 if is_long else np.float64)
-                return out
-            pdf = _aggregate(q, self.values, mask, self.mean_area)
-            return {
-                c: (
-                    pdf[c].to_numpy(dtype="float64", na_value=np.nan)
-                    if str(pdf[c].dtype) == "Float64"
-                    else pdf[c].to_numpy()
-                )
-                for c in pdf.columns
-            }
+            return _aggregate(q, self.values, mask, self.mean_area)
         idx = np.flatnonzero(mask)
         n_masked = len(idx)
         out: dict[str, np.ndarray] = {}
 
         if q.group_layers:
             if n_masked == 0:
-                for g in self.out_group_names:
-                    is_iso = g in self.iso_out_names
-                    out[g] = np.empty(0, dtype=np.int64 if is_iso else np.float64)
-                for a in q.aggregates:
-                    for n in _agg_partial_names(a, q):
-                        is_long = a.func == "count" or n.endswith("__cnt")
-                        out[n] = np.empty(0, dtype=np.int64 if is_long else np.float64)
-                return out
+                return _empty_columns(q, self.out_group_names, self.iso_out_names)
             pk = self.packed[idx]
             counts = np.bincount(pk, minlength=self.total)
             nz = np.flatnonzero(counts)
@@ -767,9 +825,11 @@ class _CellAggContext:
                 ucols.append(rem % d + m)
                 rem = rem // d
             ucols.reverse()
-            for k, g in enumerate(self.out_group_names):
-                c = ucols[k]
-                out[g] = c if g in self.iso_out_names else c.astype(np.float64)
+            for c, (g, is_iso) in zip(ucols, self.keys):
+                if is_iso:
+                    out[f"{g}__isoyear"], out[f"{g}__isoweek"] = c >> 6, c & 63
+                else:
+                    out[g] = c.astype(np.float64)
         else:
             pk = None
             nz = np.array([0])
@@ -831,10 +891,6 @@ def _agg_partial_names(a: Aggregate, q: ZonalQuery) -> list[str]:
     return [a.alias]
 
 
-def _nullable_minmax_cols(q: ZonalQuery) -> set:
-    return {a.alias for a in q.aggregates if a.func in ("min", "max")}
-
-
 def _iso_of_values(vals: np.ndarray, decode_src) -> tuple[np.ndarray, np.ndarray]:
     """ISO-8601 (year, week) of raw int64 values after date decode. ISO
     math in pure numpy: classify each date by the Thursday of its week
@@ -852,7 +908,39 @@ def _iso_of_values(vals: np.ndarray, decode_src) -> tuple[np.ndarray, np.ndarray
     return iso_year, iso_week
 
 
-_ISO_LUT_CACHE: dict[str, tuple[np.ndarray, np.ndarray]] = {}
+_ISO_LUT_CACHE: dict[str, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
+
+
+def _iso_lut(raw: np.ndarray, decode_src) -> tuple | None:
+    """The cached (isoyear, isoweek, isoyear * 64 + isoweek) LUTs over
+    ``0..max(raw)``, or None when ``raw`` is not a small non-negative
+    integer domain (raster date codes are uint16 day offsets)."""
+    if not (raw.size and raw.dtype.kind in "ui"):
+        return None
+    rmin, rmax = int(raw.min()), int(raw.max())
+    if rmin < 0 or rmax > (1 << 20):
+        return None
+    key = decode_src or "__days__"
+    lut = _ISO_LUT_CACHE.get(key)
+    if lut is None or len(lut[0]) <= rmax:
+        if len(_ISO_LUT_CACHE) >= 64:  # long-lived executor hygiene
+            _ISO_LUT_CACHE.clear()
+        dom = np.arange(max(rmax, 4095) + 1, dtype=np.int64)
+        iy, iw = _iso_of_values(dom, decode_src)
+        _ISO_LUT_CACHE[key] = lut = (iy, iw, iy * 64 + iw)
+    return lut
+
+
+def _iso_key_of_raw(raw: np.ndarray, layer) -> np.ndarray:
+    """``isoyear * 64 + isoweek`` (int64) of RAW group values: one LUT
+    gather per pixel; ``key >> 6`` and ``key & 63`` recover the pair
+    (ISO weeks are 1..53)."""
+    raw = np.asarray(raw)
+    lut = _iso_lut(raw, getattr(layer, "decode_expression", None))
+    if lut is not None:
+        return lut[2][raw]
+    iy, iw = _iso_year_week_of_raw(raw, layer)
+    return iy * 64 + iw
 
 
 def _iso_year_week_of_raw(raw: np.ndarray, layer) -> tuple[np.ndarray, np.ndarray]:
@@ -861,22 +949,14 @@ def _iso_year_week_of_raw(raw: np.ndarray, layer) -> tuple[np.ndarray, np.ndarra
     so the per-pixel path is two gathers through a cached decode LUT over
     ``0..max`` — no 65k-element sort per tile (np.unique's argsort was the
     kernel's top cost on alert-date queries). Values outside the LUT-able
-    domain fall back to unique+inverse. Shared by the per-pixel fast path
-    (_CellAggContext) and the per-group pushdown (_isoweek_pushdown)."""
+    domain fall back to unique+inverse. Serves the per-group pushdown
+    (_isoweek_pushdown); the per-pixel fast path gathers the same LUT's
+    packed key (:func:`_iso_key_of_raw`)."""
     raw = np.asarray(raw)
     decode_src = getattr(layer, "decode_expression", None)
-    if raw.size and raw.dtype.kind in "ui":
-        rmin, rmax = int(raw.min()), int(raw.max())
-        if rmin >= 0 and rmax <= (1 << 20):
-            key = decode_src or "__days__"
-            lut = _ISO_LUT_CACHE.get(key)
-            if lut is None or len(lut[0]) <= rmax:
-                if len(_ISO_LUT_CACHE) >= 64:  # long-lived executor hygiene
-                    _ISO_LUT_CACHE.clear()
-                dom = np.arange(max(rmax, 4095) + 1, dtype=np.int64)
-                _ISO_LUT_CACHE[key] = lut = _iso_of_values(dom, decode_src)
-            a = raw.astype(np.int64) if raw.dtype != np.int64 else raw
-            return lut[0][a], lut[1][a]
+    lut = _iso_lut(raw, decode_src)
+    if lut is not None:
+        return lut[0][raw], lut[1][raw]
     uniq, inv = np.unique(raw, return_inverse=True)
     iy, iw = _iso_of_values(uniq.astype(np.int64), decode_src)
     return iy[inv], iw[inv]
@@ -981,54 +1061,13 @@ def _regroup(pdf: pd.DataFrame, group_cols: list, aggmap: dict) -> pd.DataFrame:
 # every query in the set)
 # ---------------------------------------------------------------------------
 
-def multi_partial_columns(queries: list) -> list[tuple[str, str]]:
-    """NARROW tagged-union schema: ``_q`` selects the query and ``vals``
-    packs exactly that query's partial values (``partial_columns(q)``
-    order) as one array<double>. A row carries only its own query's
-    values — the earlier all-queries-wide flat frame stored width =
-    sum(all queries' widths) nulls per row, and caching that width
-    measurably cost back part of the fusion win. Long partials are
-    integral doubles (< 2^53 per tile by construction) cast back at
-    split time; empty-group min/max NULLs survive as array-element
-    nulls (never coerced to NaN)."""
-    return [("_q", "int"), ("vals", "array<double>")]
-
-
-def multi_partial_schema_ddl(queries: list) -> str:
-    return ", ".join(f"`{n}` {t}" for n, t in multi_partial_columns(queries))
-
-
 def make_multi_cell_kernel(queries: list, env_json: str, grid_name: str, aoi_lookup=None):
     """Per-cell kernel evaluating EVERY query of a batch in one pass (the
     shared body, :func:`_cell_body`, over all of them) and emitting the
-    narrow ``_q``/``vals`` rows of :func:`multi_partial_columns`.
-    ``kernel(pdf, aois=None)`` takes the AOIs as :func:`make_cell_kernel`
-    does. Aggregate-mode queries only (no select_pixels)."""
+    narrow ``_q``/``vals`` rows of :func:`kernel_schema` as one record
+    batch. ``kernel(tiles, aois=None)`` takes its input as
+    :func:`make_cell_kernel` does. Aggregate-mode queries only (no
+    select_pixels)."""
     if any(q.select_pixels for q in queries):
         raise ValueError("fused execution supports aggregate queries only")
-    body = _cell_body(queries, env_json, grid_name)
-    pcols = [[n for n, _ in partial_columns(q)] for q in queries]
-    empty = pd.DataFrame({
-        "aoi_id": pd.Series(dtype=object),
-        "_q": pd.Series(dtype="int32"),
-        "vals": pd.Series(dtype=object),
-    })
-
-    def kernel(pdf: pd.DataFrame, aois=None) -> pd.DataFrame:
-        blocks = []
-        for qi, block in body(pdf, _cell_aois(aoi_lookup, pdf) if aois is None else aois):
-            # pack this query's partial values (partial_columns order) into
-            # ONE array<double> per row — the persisted fused frame carries
-            # only the owning query's width, not every query's. None (not
-            # NaN) preserves empty-group min/max NULLs across the packing.
-            obj = block[pcols[qi]].astype(object)
-            blocks.append(pd.DataFrame({
-                "aoi_id": block["aoi_id"].to_numpy(),
-                "_q": np.int32(qi),
-                "vals": obj.where(pd.notna(obj), None).to_numpy().tolist(),
-            }))
-        if not blocks:
-            return empty.copy()
-        return pd.concat([empty] + blocks, ignore_index=True)
-
-    return kernel
+    return _make_kernel(queries, env_json, grid_name, aoi_lookup, packed=True)

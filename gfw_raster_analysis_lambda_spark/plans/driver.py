@@ -57,8 +57,10 @@ def read_bounded(
 
 def local_frame(spark: SparkSession, columns, schema=None) -> DataFrame:
     """A ``LocalRelation`` frame from driver columns ``{name: values}``
-    (lists or numpy arrays) or a pandas frame. The Arrow types are
-    inferred, then cast to ``schema`` (a ``StructType``) when it is given;
-    a value the cast would change raises instead of falling back to a
-    pickled-row frame."""
-    return spark.createDataFrame(pa.table(columns), schema)
+    (lists or numpy arrays), a pandas frame or an Arrow table. The Arrow
+    types are inferred, then cast to ``schema`` (a ``StructType``) when it
+    is given; a value the cast would change raises instead of falling back
+    to a pickled-row frame. The table goes over as one record batch:
+    PySpark 4.1.2's ``createDataFrame`` drops every row after a zero-row
+    batch that follows a non-empty one."""
+    return spark.createDataFrame(pa.table(columns).combine_chunks(), schema)

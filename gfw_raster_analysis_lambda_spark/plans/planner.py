@@ -36,11 +36,15 @@ of their cell, and ``groupBy(cell_id, _salt).cogroup(...)`` feeds each
 cell's tiles and AOI slice to the kernel. A cell with AOIs but no tiles
 arrives with an empty tile side, which FROM data queries zero-fill.
 
-The driver route. A Python task costs a fixed ~0.3 s here whatever its
-input, so a small request runs the cell kernel on the driver instead
-(:func:`_driver_cell_plan`): one JVM-only Arrow scan of the pruned tile
-rows, the kernel per cell, and the partials handed to the Catalyst
-finalize as a one-partition ``LocalRelation`` (no exchange, one job).
+The driver route. A job of Python tasks costs ~0.2 s on a 4-core box
+whatever its input (a JVM-only job ~0.1 s), plus ~0.07 s of a core per
+task. That is with ``worker_daemon`` keeping Spark's archives off the
+workers' path; before, each task's ``importlib.invalidate_caches()``
+re-read them, ~0.25 s per task. So a small request runs the cell kernel
+on the driver instead (:func:`_driver_cell_plan`): one JVM-only Arrow
+scan of the pruned tile rows, the kernel per cell, and the partials
+handed to the Catalyst finalize as a one-partition ``LocalRelation`` (no
+exchange, one job).
 The route is taken when the strategy is auto, the query aggregates, the
 AOI batch has an :class:`AoiIndex`, and the kernel work (AOI-cell pairs
 x cell pixels) is at most ``DRIVER_KERNEL_PX_LIMIT``. Explicit
@@ -50,13 +54,13 @@ plans, and so do direct callers of the ``build_*_with_lookup`` builders.
 
 from __future__ import annotations
 
-import time
-
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..functions import geometry as geo
 from ..functions import grid as G
@@ -136,7 +140,7 @@ def run_zonal_query(
       per salt) for cells hotter than MAX_AOIS_PER_TASK AOIs.
     - ``"colocated"``: ZERO shuffle of tile bytes — requires the images
       input to be cell-sorted on disk (sources.images.write_images_cell_sorted);
-      the kernel streams over the scan with mapInPandas and regroups cells
+      the kernel streams over the scan with mapInArrow and regroups cells
       within each partition. Only partial-aggregate rows ever shuffle.
       Hot cells are diverted to the salted cell plan.
     - ``None``/``"auto"``: ``"colocated"`` for a frame read off a
@@ -422,10 +426,12 @@ DRIVER_ENUM_AOI_LIMIT = 100_000  # AOI rows enumerated driver-side
 DRIVER_ENUM_WKB_BYTES = 256 * 2**20  # total geometry bytes collected driver-side
 # kernel work (AOI-cell pairs x cell pixels) an auto-strategy aggregate
 # request runs on the driver instead of in Python tasks: 32 AOI-cells of
-# 256^2 px. On a 4-core box the driver route wins clearly up to there and
-# breaks even somewhere between ~64 and ~190 AOI-cells (~7 ms per AOI-cell
-# on one core against ~0.3 s per Python task); the margin keeps long
-# serial kernels off the driver, which concurrent requests share.
+# 256^2 px. On a 4-core box (median of 5 warm requests per size and
+# route) the driver route wins at every size up to 64 AOI-cells and
+# breaks even between ~64 and ~128 (~3-4 ms per AOI-cell on one core
+# against ~0.07 s per Python task with worker_daemon; it was ~64-190
+# against ~0.3 s per task before). The margin keeps long serial kernels
+# off the driver, which concurrent requests share.
 DRIVER_KERNEL_PX_LIMIT = 32 * 256 * 256
 
 
@@ -578,14 +584,13 @@ def _build_partials_over_bound(
         .withColumn("_salt", F.explode(F.sequence(F.lit(0), F.col("_n_salt") - 1)))
         .drop("_n_salt")
     )
-    wrapped, schema = _wrapped_cell_kernel(query, env, grid_name)
+    kernel, schema = _cell_kernel(query, env, grid_name)
 
-    def run(key, tiles_pdf, aois):
-        if tiles_pdf.empty:  # an AOI cell with no stored tile: zero-filled (S2)
-            tiles_pdf = pd.DataFrame(
-                {"cell_id": [key[0]], "src_cell_id": [key[0]]}, columns=tiles_pdf.columns
-            )
-        return wrapped(tiles_pdf, aois=list(zip(aois["aoi_id"], aois["geom_wkb"])))
+    def run(tiles, aois):
+        aoi_list = list(zip(aois.column("aoi_id").to_pylist(), aois.column("geom_wkb").to_pylist()))
+        if not tiles.num_rows:  # an AOI cell with no stored tile: zero-filled (S2)
+            tiles = _null_tile_rows(tiles.schema, aois.column("cell_id").to_numpy()[:1])
+        return pa.Table.from_batches([kernel(tiles, aois=aoi_list)])
 
     # an explicit partition count, exempt from AQE's byte-based coalescing:
     # a tile row is small on the wire and large in kernel CPU
@@ -595,7 +600,7 @@ def _build_partials_over_bound(
     return (
         tiles.repartition(n, *keys).groupBy(*keys)
         .cogroup(aoi_side.groupBy(*keys))
-        .applyInPandas(run, schema)
+        .applyInArrow(run, schema)
     )
 
 
@@ -723,32 +728,46 @@ def _with_missing_cells(spark, imgs: DataFrame, cell_ids: list) -> DataFrame:
     return imgs.unionByName(rows)
 
 
-def _driver_cell_plan(spark, imgs: DataFrame, fill_cells, wrapped, schema: str) -> DataFrame:
+def _null_tile_rows(schema: pa.Schema, cell_ids) -> pa.Table:
+    """One tile row per cell with only ``cell_id`` and ``src_cell_id``
+    set: the kernel zero-fills such a cell (S2)."""
+    ids = pa.array(np.asarray(cell_ids, dtype=np.int64))
+    return pa.table(
+        [ids if f.name in ("cell_id", "src_cell_id") else pa.nulls(len(ids), f.type) for f in schema],
+        schema=schema,
+    )
+
+
+def _cell_runs(table: pa.Table):
+    """``(complete runs, trailing run)`` of a table sorted or clustered by
+    ``cell_id``: one slice per cell, the last cell's rows held back."""
+    ids = table.column("cell_id").to_numpy()
+    bounds = [0, *(np.flatnonzero(ids[1:] != ids[:-1]) + 1).tolist(), len(ids)]
+    runs = [table.slice(a, b - a) for a, b in zip(bounds[:-2], bounds[1:-1])]
+    return runs, table.slice(bounds[-2])
+
+
+def _driver_cell_plan(spark, imgs: DataFrame, fill_cells, kernel, schema) -> DataFrame:
     """The driver route's kernel stage. The pruned tile rows come over in
     one JVM-only Arrow scan, the kernel runs once per cell right here
-    (every AOI of the cell, no salting), and the partial rows go back as a
-    one-partition ``LocalRelation``, whose finalize needs no exchange.
+    (every AOI of the cell, no salting), and its record batches go back as
+    a one-partition ``LocalRelation``, whose finalize needs no exchange.
     Missing cells get their null tile row from the scanned cell set, so
     FROM data costs no extra job."""
-    tiles = imgs.toArrow().to_pandas()
+    tiles = imgs.toArrow()
     if fill_cells is not None:
-        missing = np.setdiff1d(np.asarray(fill_cells, dtype=np.int64), tiles["cell_id"].to_numpy())
+        missing = np.setdiff1d(np.asarray(fill_cells, dtype=np.int64), tiles.column("cell_id").to_numpy())
         if missing.size:
-            # no layer: the kernel zero-fills the cell (S2)
-            tiles = pd.concat(
-                [tiles, pd.DataFrame({"cell_id": missing, "src_cell_id": missing})],
-                ignore_index=True,
-            )
-    parts = [wrapped(g) for _, g in tiles.groupby("cell_id", sort=True)]
-    ddl = T._parse_datatype_string(schema)
-    out = pd.concat(parts, ignore_index=True) if parts else pd.DataFrame(
-        {f.name: pd.Series(dtype=object) for f in ddl.fields}
-    )
-    return local_frame(spark, out, ddl).coalesce(1)
+            tiles = pa.concat_tables([tiles, _null_tile_rows(tiles.schema, missing)])
+    batches = []
+    if tiles.num_rows:
+        runs, last = _cell_runs(tiles.sort_by("cell_id"))
+        batches = [kernel(t) for t in (*runs, last)]
+    return local_frame(spark, pa.Table.from_batches(batches, kernel.schema), schema).coalesce(1)
 
 
-def _dispatch_cell_plan(spark, imgs: DataFrame, fill_cells, salted: dict, wrapped,
-                        schema: str, colocated: bool, on_driver: bool) -> DataFrame:
+def _dispatch_cell_plan(spark, imgs: DataFrame, fill_cells, salted: dict, kernel,
+                        schema, colocated: bool, on_driver: bool) -> DataFrame:
     """Kernel-stage dispatch shared by the single and fused builders: the
     driver route, the colocated zero-shuffle stream (with hot-cell
     diversion — a cell shared by thousands of AOIs would be ONE serial
@@ -758,21 +777,21 @@ def _dispatch_cell_plan(spark, imgs: DataFrame, fill_cells, salted: dict, wrappe
     queries) are the AOI cells that get a null tile row when no tile of
     theirs is stored."""
     if on_driver:
-        return _driver_cell_plan(spark, imgs, fill_cells, wrapped, schema)
+        return _driver_cell_plan(spark, imgs, fill_cells, kernel, schema)
     if fill_cells is not None:
         imgs = _with_missing_cells(spark, imgs, fill_cells)
     if colocated:
         if salted:
             hot = [int(c) for c in salted]
-            cold_part = imgs.filter(~_in_long_set("cell_id", hot)).mapInPandas(
-                _streaming_cells(wrapped), schema
+            cold_part = imgs.filter(~_in_long_set("cell_id", hot)).mapInArrow(
+                _streaming_cells(kernel), schema
             )
             hot_part = _salted_cell_plan(
-                spark, imgs.filter(_in_long_set("cell_id", hot)), salted, wrapped, schema
+                spark, imgs.filter(_in_long_set("cell_id", hot)), salted, kernel, schema
             )
             return cold_part.unionByName(hot_part)
-        return imgs.mapInPandas(_streaming_cells(wrapped), schema)
-    return _salted_cell_plan(spark, imgs, salted, wrapped, schema)
+        return imgs.mapInArrow(_streaming_cells(kernel), schema)
+    return _salted_cell_plan(spark, imgs, salted, kernel, schema)
 
 
 def build_partials_with_lookup(
@@ -799,9 +818,9 @@ def build_partials_with_lookup(
         )
     imgs = _prune_cells(_tile_rows(images, env, needed, grid_name), cell_ids)
     fill_cells = cell_ids if query.base_layer == FROM_DATA else None
-    wrapped, schema = _wrapped_cell_kernel(query, env, grid_name, lookup)
+    kernel, schema = _cell_kernel(query, env, grid_name, lookup)
     return _dispatch_cell_plan(
-        images.sparkSession, imgs, fill_cells, salted, wrapped, schema, colocated, on_driver
+        images.sparkSession, imgs, fill_cells, salted, kernel, schema, colocated, on_driver
     )
 
 
@@ -818,17 +837,12 @@ def _tile_rows(images: DataFrame, env: DataEnvironment, layers: list, grid_name:
     return imgs.withColumn("src_cell_id", F.col("cell_id"))
 
 
-def _wrapped_cell_kernel(query: ZonalQuery, env: DataEnvironment, grid_name: str, lookup=None):
-    """(wrapped one-query cell kernel, its output schema): wide partial
-    rows with ``cell_id`` and ``_ms``, or pixel rows."""
+def _cell_kernel(query: ZonalQuery, env: DataEnvironment, grid_name: str, lookup=None):
+    """(one-query cell kernel, its output schema as a Spark ``StructType``):
+    wide partial rows, or pixel rows, after ``aoi_id``, ``cell_id`` and
+    ``_ms``."""
     kernel = zonal.make_cell_kernel(query, env.to_json(), grid_name, lookup)
-    if query.select_pixels:
-        return _wrap_cell_kernel(kernel, with_cell=False), (
-            "`aoi_id` string, " + zonal.pixel_schema_ddl(query)
-        )
-    return _wrap_cell_kernel(kernel), (
-        "`aoi_id` string, `cell_id` long, `_ms` double, " + zonal.partial_schema_ddl(query)
-    )
+    return kernel, from_arrow_schema(kernel.schema)
 
 
 def build_multi_partials_with_lookup(
@@ -861,13 +875,9 @@ def build_multi_partials_with_lookup(
     fill_cells = cell_ids if any(q.base_layer == FROM_DATA for q in queries) else None
 
     kernel = zonal.make_multi_cell_kernel(queries, env.to_json(), grid_name, lookup)
-    schema = (
-        "`aoi_id` string, `cell_id` long, `_ms` double, "
-        + zonal.multi_partial_schema_ddl(queries)
-    )
-    wrapped = _wrap_cell_kernel(kernel)
     return _dispatch_cell_plan(
-        spark, imgs, fill_cells, salted, wrapped, schema, colocated, on_driver
+        spark, imgs, fill_cells, salted, kernel, from_arrow_schema(kernel.schema),
+        colocated, on_driver,
     )
 
 
@@ -1046,10 +1056,10 @@ def run_zonal_queries(
     )
 
 
-def _salted_cell_plan(spark, imgs: DataFrame, salted: dict, wrapped, schema: str) -> DataFrame:
+def _salted_cell_plan(spark, imgs: DataFrame, salted: dict, kernel, schema) -> DataFrame:
     """The shuffle-clustered cell-kernel stage: tile rows repartitioned by
     cell (plus a salt replica per MAX_AOIS_PER_TASK-sized AOI slice of hot
-    cells) and fed to the kernel via applyInPandas."""
+    cells) and fed to the kernel via applyInArrow."""
     group_keys = ["cell_id"]
     if salted:
         salt_dim = local_frame(spark, {
@@ -1065,50 +1075,40 @@ def _salted_cell_plan(spark, imgs: DataFrame, salted: dict, wrapped, schema: str
             .drop("_n_salt")
         )
         group_keys = ["cell_id", "_salt"]
+
+    def run(tiles):
+        return pa.Table.from_batches([kernel(tiles)])
+
     n = spark.sparkContext.defaultParallelism * 3
-    return imgs.repartition(n, *group_keys).groupBy(*group_keys).applyInPandas(wrapped, schema)
+    return imgs.repartition(n, *group_keys).groupBy(*group_keys).applyInArrow(run, schema)
 
 
-def _wrap_cell_kernel(kernel, with_cell: bool = True):
-    """The cell kernel emits aoi_id itself; add cell_id + amortized _ms.
-    ``aois`` is keyword-only: applyInPandas passes a grouping key to a
-    function of two positional parameters."""
-    def run(pdf, *, aois=None):
-        t0 = time.perf_counter()
-        out = kernel(pdf, aois)
-        if with_cell:
-            ms = (time.perf_counter() - t0) * 1000.0 / max(len(out), 1)
-            out.insert(1, "_ms", ms)
-            out.insert(1, "cell_id", np.int64(pdf["cell_id"].iloc[0]))
-        return out
-
-    return run
-
-
-def _streaming_cells(wrapped):
-    """mapInPandas adapter: regroup a cell-sorted row stream into per-cell
-    kernel calls. Correct whenever each cell's rows are contiguous within
-    the partition's stream (guaranteed by write_images_cell_sorted:
-    repartitionByRange(cell_id) makes files disjoint in cell ranges and
-    sortWithinPartitions makes cells contiguous within each file; Arrow
-    scan batches preserve file row order). The trailing run of each batch
-    is buffered in case the same cell continues in the next batch."""
+def _streaming_cells(kernel):
+    """mapInArrow adapter: regroup a cell-sorted batch stream into
+    per-cell kernel calls. Correct whenever each cell's rows are
+    contiguous within the partition's stream (guaranteed by
+    write_images_cell_sorted: repartitionByRange(cell_id) makes files
+    disjoint in cell ranges and sortWithinPartitions makes cells
+    contiguous within each file; Arrow scan batches preserve file row
+    order). The trailing run of each batch is held back in case the same
+    cell continues in the next batch."""
     def run(batches):
         buf = None
-        for pdf in batches:
-            if buf is not None and len(buf):
-                pdf = pd.concat([buf, pdf], ignore_index=True)
-                buf = None
-            if not len(pdf):
+        for batch in batches:
+            table = pa.Table.from_batches([batch])
+            if buf is not None:
+                table = pa.concat_tables([buf, table])
+            if not table.num_rows:
                 continue
-            ids = pdf["cell_id"].to_numpy()
-            nonlast = np.flatnonzero(ids != ids[-1])
-            k = int(nonlast.max() + 1) if len(nonlast) else 0
-            complete, buf = pdf.iloc[:k], pdf.iloc[k:].reset_index(drop=True)
-            for _, g in complete.groupby("cell_id", sort=False):
-                yield wrapped(g)
-        if buf is not None and len(buf):
-            yield wrapped(buf)
+            runs, buf = _cell_runs(table)
+            for t in runs:
+                out = kernel(t)
+                if out.num_rows:
+                    yield out
+        if buf is not None and buf.num_rows:
+            out = kernel(buf)
+            if out.num_rows:
+                yield out
 
     return run
 
@@ -1237,4 +1237,4 @@ def _decode_group_columns(df: DataFrame, query: ZonalQuery, env: DataEnvironment
 
 
 def _finalize_pixels(df: DataFrame, query: ZonalQuery) -> DataFrame:
-    return _order_and_limit(df, query, [])
+    return _order_and_limit(df.drop("cell_id", "_ms"), query, [])

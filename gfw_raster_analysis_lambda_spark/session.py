@@ -6,7 +6,7 @@ knobs below are the scale-relevant ones:
 
 - AQE on (runtime coalesce + skew-join splitting — the engine's spatial
   joins can produce skewed cell keys when many AOIs overlap hot cells).
-- Arrow exchange on (every raster kernel is an Arrow-batched pandas UDF).
+- Arrow exchange on (every raster kernel is an Arrow-batched UDF).
 - ``maxRecordsPerBatch`` bounds per-task memory: one record is one image
   tile; at 5000x5000 uint16 a decoded tile is ~50 MB, so batches must stay
   small. The reference had the same bound as a hard 3 GB lambda cap
@@ -18,6 +18,18 @@ memory (1-32 GiB). In local mode that JVM runs every task, and each core
 also runs a Python worker outside the heap, so the rest of memory is left
 to those workers and the OS. ``SPARK_GRAFT_CPUS``, ``SPARK_MASTER`` and
 ``SPARK_DRIVER_MEM`` override the defaults.
+
+Two settings cut the fixed cost at the Python boundary:
+
+- ``spark.python.daemon.module`` is the engine's ``worker_daemon``, which
+  takes Spark's archives off the Python workers' path before they import
+  pyspark (see that module). Only a local master whose workers can import
+  this package from their cwd or PYTHONPATH gets it; elsewhere the
+  package may arrive through ``--py-files`` only after the daemon starts,
+  so Spark's default daemon stays.
+- ``spark.python.sql.dataFrameDebugging.enabled`` is off: with it on,
+  every ``F.*`` or ``Column`` call on the driver also reads a conf, sets
+  and clears the JVM call-site origin and walks the Python stack.
 """
 
 from __future__ import annotations
@@ -43,6 +55,23 @@ def _machine_driver_memory() -> str:
 
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS") or _machine_cpus())
+WORKER_DAEMON = "gfw_raster_analysis_lambda_spark.worker_daemon"
+
+
+def _worker_daemon_conf(master: str, conf: dict) -> dict:
+    """``spark.python.daemon.module`` for a local master whose workers can
+    import this package (module doc): ``python -m`` puts the cwd first on
+    a worker's path, and the worker's PYTHONPATH is the driver's plus
+    ``spark.executorEnv.PYTHONPATH``."""
+    if not master.startswith("local"):
+        return {}
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = [os.getcwd()]
+    for value in (os.environ.get("PYTHONPATH", ""), conf.get("spark.executorEnv.PYTHONPATH", "")):
+        paths += [p for p in value.split(os.pathsep) if p]
+    if root not in {os.path.abspath(p) for p in paths}:
+        return {}
+    return {"spark.python.daemon.module": WORKER_DAEMON}
 
 
 def get_spark(
@@ -75,7 +104,9 @@ def get_spark(
         )
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or _machine_driver_memory())
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = {**_worker_daemon_conf(master, extra_conf or {}), **(extra_conf or {})}
+    for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -468,26 +468,43 @@ def test_streaming_cells_regroup_unit():
     """_streaming_cells must reassemble cells that span Arrow batch
     boundaries (incl. one cell spanning 3 batches) and call the kernel
     exactly once per cell with all its rows."""
-    import pandas as pd
+    import pyarrow as pa
 
     from gfw_raster_analysis_lambda_spark.plans.planner import _streaming_cells
 
     calls = []
 
-    def fake_kernel(pdf):
-        calls.append((int(pdf["cell_id"].iloc[0]), len(pdf)))
-        return pd.DataFrame({"cell_id": [int(pdf["cell_id"].iloc[0])], "n": [len(pdf)]})
+    def fake_kernel(tiles):
+        cell = tiles.column("cell_id")[0].as_py()
+        calls.append((cell, tiles.num_rows))
+        return pa.record_batch({"cell_id": [cell], "n": [tiles.num_rows]})
 
     def batches():
         # cell 1 (2 rows) | cell 2 spans 3 batches (1+2+1) | cell 3 (1 row)
-        yield pd.DataFrame({"cell_id": [1, 1, 2]})
-        yield pd.DataFrame({"cell_id": [2, 2]})
-        yield pd.DataFrame({"cell_id": [2, 3]})
-        yield pd.DataFrame({"cell_id": []}).astype({"cell_id": "int64"})
+        yield pa.record_batch({"cell_id": pa.array([1, 1, 2], pa.int64())})
+        yield pa.record_batch({"cell_id": pa.array([2, 2], pa.int64())})
+        yield pa.record_batch({"cell_id": pa.array([2, 3], pa.int64())})
+        yield pa.record_batch({"cell_id": pa.array([], pa.int64())})
 
     out = list(_streaming_cells(fake_kernel)(batches()))
     assert calls == [(1, 2), (2, 4), (3, 1)]
     assert len(out) == 3
+
+
+def test_local_frame_keeps_rows_after_empty_batch(spark):
+    """The driver route hands its per-cell record batches, empty ones
+    included, to ``local_frame``; createDataFrame alone drops the rows
+    after a zero-row batch that follows a non-empty one."""
+    import pyarrow as pa
+
+    from gfw_raster_analysis_lambda_spark.plans.driver import local_frame
+
+    schema = pa.schema([("a", pa.int64())])
+    table = pa.Table.from_batches(
+        [pa.record_batch([pa.array(v, pa.int64())], schema=schema) for v in ([1], [], [2, 3])],
+        schema,
+    )
+    assert sorted(r.a for r in local_frame(spark, table).collect()) == [1, 2, 3]
 
 
 def test_geom_cache_concurrent_requests(monkeypatch):
@@ -666,7 +683,7 @@ def test_auto_fallback_over_broadcast_limit(spark, tables, env, monkeypatch):
     df = run_zonal_query(spark, images, aoi_df, q, env, GRID_NAME, strategy="cell")
     got = df.toPandas().reset_index(drop=True)
     assert took.get("cogroup_plan")
-    assert "FlatMapCoGroupsInPandas" in df._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapCoGroupsInArrow" in df._jdf.queryExecution().executedPlan().toString()
     assert_frames_match(got, exp)
 
 
@@ -768,7 +785,7 @@ def test_auto_strategy_prefers_colocated_on_sorted_layout(
     spark, tables, env, tmp_path, monkeypatch
 ):
     """strategy=None over a read_images() frame from a cell-sorted layout
-    must take the zero-shuffle colocated plan (MapInPandas, no grouped
+    must take the zero-shuffle colocated plan (MapInArrow, no grouped
     shuffle) and match the explicit cell strategy's results. The fixture
     batch is below the driver-kernel bound, where the kernel runs on the
     driver and the plan has no Python stage at all; the bound is set to 0
@@ -793,13 +810,13 @@ def test_auto_strategy_prefers_colocated_on_sorted_layout(
     monkeypatch.setattr(planner, "DRIVER_KERNEL_PX_LIMIT", 0)
     auto = run_zonal_query(spark, sorted_images, aoi_df, q, env, GRID_NAME)
     plan = auto._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan
-    assert "FlatMapGroupsInPandas" not in plan  # no grouped-shuffle kernel
+    assert "MapInArrow" in plan
+    assert "FlatMapGroupsIn" not in plan  # no grouped-shuffle kernel
     assert_frames_match(auto.toPandas(), ref)
     # a frame NOT read from a sorted layout keeps the cell plan
     plain = run_zonal_query(spark, images, aoi_df, q, env, GRID_NAME)
     plan2 = plain._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInPandas" in plan2
+    assert "FlatMapGroupsInArrow" in plan2
 
 
 def test_fused_multi_query_parity(spark, tables, env, monkeypatch):
@@ -846,6 +863,86 @@ def test_fused_multi_query_parity(spark, tables, env, monkeypatch):
             assert fused._partials.storageLevel.useMemory
         fused.close()
         assert fused._partials is None
+
+
+def test_minmax_empty_groups_are_null(spark, tables, sorted_images, env, monkeypatch):
+    """MIN/MAX over a group with no valid value in some cells (``em_north``
+    is NaN south of the corpus's middle latitude) or in every cell
+    (``em_high`` is NaN below 50, so band 0 never has one): the kernel
+    hands Spark NULL partials, never NaN (NaN is Spark's greatest double
+    and would win every MAX merge), and the result is NULL exactly where
+    the oracle has no value and equal to it elsewhere — on the driver,
+    cell, colocated and cogroup routes, single and fused."""
+    from gfw_raster_analysis_lambda_spark.functions import geodesy
+    from gfw_raster_analysis_lambda_spark.functions import grid as G
+    from gfw_raster_analysis_lambda_spark.plans.planner import run_zonal_queries
+    from gfw_raster_analysis_lambda_spark.sources.catalog import DerivedLayer
+
+    grid = G.get_grid(GRID_NAME)
+    cells = G.cell_from_xy(
+        grid,
+        np.repeat(np.arange(fixtures.X0, fixtures.X0 + fixtures.NX), fixtures.NY),
+        np.tile(np.arange(fixtures.Y0, fixtures.Y0 + fixtures.NY), fixtures.NX),
+    )
+    areas = np.unique(geodesy.pixel_area_ha(
+        G.cell_centroid_lat(grid, cells), G.cell_affine(grid, int(cells[0]))[2]
+    ))
+    cut = float(areas[len(areas) // 2 - 1] + areas[len(areas) // 2]) / 2
+    genv = DataEnvironment(list(env.layers) + [
+        DerivedLayer("em_band", source_layer="emissions", calc="floor(A / 50)", no_data=None),
+        DerivedLayer(
+            "em_north", source_layer="emissions", calc=f"where(area > {cut!r}, A, nan)",
+            no_data=float("nan"),
+        ),
+        DerivedLayer(
+            "em_high", source_layer="emissions", calc="where(A >= 50, A, nan)", no_data=float("nan")
+        ),
+    ])
+    q = ZonalQuery(
+        base_layer="emissions",
+        group_layers=("em_band",),
+        aggregates=(
+            Aggregate("min", "em_north", "lo"),
+            Aggregate("max", "em_north", "hi"),
+            Aggregate("max", "em_high", "top"),
+            Aggregate("count", None, "n"),
+        ),
+    )
+    images, aoi_df = tables
+    aois = fixtures.fixture_aois()
+    aoi_df = aoi_df.filter(aoi_df.aoi_id.isin([a[0] for a in aois]))
+    exp = oracle.run_oracle(q, genv, aois)
+    assert exp["top"].isna().any() and exp["top"].notna().any()
+    idx = planner.prepare_aoi_index(spark, aoi_df, GRID_NAME)
+    lo = [r["lo"] for r in planner.build_partials_with_lookup(
+        images, idx.lookup, idx.salted, q, genv, GRID_NAME
+    ).collect()]
+    # em_north's groups are empty in some cells only: NULL partials, no NaN
+    assert None in lo and any(v is not None for v in lo)
+    assert not any(isinstance(v, float) and np.isnan(v) for v in lo)
+
+    def check(df, route):
+        rows = df.collect()
+        for c in ("lo", "hi", "top"):
+            assert not any(isinstance(r[c], float) and np.isnan(r[c]) for r in rows), (route, c)
+        got = pd.DataFrame([r.asDict() for r in rows], columns=df.columns)
+        assert_frames_match(got, exp)  # NaN in got is a NULL: same places as the oracle's
+
+    def single(imgs, **kw):
+        return run_zonal_query(spark, imgs, aoi_df, q, genv, GRID_NAME, **kw)
+
+    check(single(images), "driver")
+    check(single(images, strategy="cell"), "cell")
+    check(single(sorted_images, strategy="colocated"), "colocated")
+    with mock.patch.object(planner, "BROADCAST_CELL_LIMIT", 0):
+        check(single(images), "cogroup")
+    other = ZonalQuery(base_layer="tcl_year", aggregates=(Aggregate("count", None, "n"),))
+    for bound in (planner.DRIVER_KERNEL_PX_LIMIT, 0):
+        monkeypatch.setattr(planner, "DRIVER_KERNEL_PX_LIMIT", bound)
+        with run_zonal_queries(
+            spark, sorted_images, aoi_df, {"gaps": q, "other": other}, genv, GRID_NAME
+        ) as fused:
+            check(fused["gaps"], f"fused, driver bound {bound}")
 
 
 def test_fused_set_with_rollups_shares_kernel(spark, tables, env, monkeypatch):
@@ -1575,7 +1672,9 @@ INTERACTIVE_SQL = [
     ("SELECT SUM(area__ha) AS ha, COUNT(*) AS n FROM data", 4),
 ]
 
-PYTHON_NODES = ("MapInPandas", "FlatMapGroupsInPandas", "ArrowEvalPython")
+PYTHON_NODES = (
+    "MapInPandas", "FlatMapGroupsInPandas", "MapInArrow", "FlatMapGroupsInArrow", "ArrowEvalPython",
+)
 
 
 def _python_nodes(df):

@@ -7,8 +7,10 @@ one hotspot cell), its AOI->cell lookup restricted to the benchmark
 corpus extent, and each cell's corpus tiles encoded by the fixture
 generator. The kernel is ``zonal.make_multi_cell_kernel`` over
 perfbench's query set, called once per cell as the planner's cell plans
-call it. Prints ms per cell, ms per AOI-cell and the slowest cell, then
-the cProfile listing of a second pass.
+call it. Prints ms per cell, split between the cell body (decode, masks,
+aggregation: ``zonal._cell_body``) and the output assembly (the Arrow
+record batch), ms per AOI-cell and the slowest cell, then the cProfile
+listing of a second pass.
 
 Usage: python tools/profile_kernel.py [--seed N] [--cells N] [--top N]
 """
@@ -46,8 +48,9 @@ class _Lookup:
 
 
 def kernel_input(seed: int, max_cells: int | None):
-    """(env, kernel, [(cell_id, n_aois, tile frame)]) for the batch
-    workload's AOI batch of ``seed``, hottest cells first."""
+    """(kernel, body, [(cell_id, n_aois, tile frame)]) for the batch
+    workload's AOI batch of ``seed``, hottest cells first. ``body(frame)``
+    runs only the kernel's cell body on the frame's cell."""
     env = fixtures.fixture_environment(grid=corpus.GRID_NAME)
     grid = G.get_grid(corpus.GRID_NAME)
     lo, hi = inputs.BATCH_SIDES
@@ -65,6 +68,12 @@ def kernel_input(seed: int, max_cells: int | None):
     lookup = _Lookup({c: (1, sorted(by_cell[c])) for c in cells})
     queries = [parse_raster_sql(s, env) for s in inputs.QUERIES.values()]
     kernel = zonal.make_multi_cell_kernel(queries, env.to_json(), corpus.GRID_NAME, lookup)
+    cell_body = zonal._cell_body(queries, env.to_json(), corpus.GRID_NAME)
+
+    def body(pdf):
+        cols = zonal._columns(pdf)
+        return cell_body(cols, zonal._cell_aois(lookup, cols))
+
     px = grid.chunk_px
     frames = []
     for c in cells:
@@ -76,7 +85,7 @@ def kernel_input(seed: int, max_cells: int | None):
         frames.append((c, len(by_cell[c]), pd.DataFrame(
             rows, columns=["layer", "cell_id", "bytes", "w", "h", "fmt", "src_cell_id"]
         )))
-    return kernel, frames
+    return kernel, body, frames
 
 
 def main():
@@ -86,7 +95,7 @@ def main():
     ap.add_argument("--top", type=int, default=30, help="profile rows to print")
     args = ap.parse_args()
 
-    kernel, frames = kernel_input(args.seed, args.cells)
+    kernel, body, frames = kernel_input(args.seed, args.cells)
     n_pairs = sum(n for _, n, _ in frames)
     kernel(frames[0][2])  # first call pays the imports and lookup tables
     times = []
@@ -95,9 +104,24 @@ def main():
         kernel(pdf)
         times.append((1e3 * (time.perf_counter() - t0), c, n))
     total = sum(t for t, _, _ in times)
+    # the split, from a second pass with every cache warm: the cell body
+    # alone, then the whole kernel, cell by cell
+    body_s = kernel_s = 0.0
+    for _, _, pdf in frames:
+        t0 = time.perf_counter()
+        body(pdf)
+        t1 = time.perf_counter()
+        kernel(pdf)
+        body_s += t1 - t0
+        kernel_s += time.perf_counter() - t1
     slow_ms, slow_cell, slow_n = max(times)
-    print(f"seed {args.seed}: {len(frames)} cells, {n_pairs} AOI-cells, {total:.0f} ms")
-    print(f"  {total / len(frames):.1f} ms/cell, {total / n_pairs:.1f} ms/AOI-cell")
+    n_cells = len(frames)
+    print(f"seed {args.seed}: {n_cells} cells, {n_pairs} AOI-cells, {total:.0f} ms")
+    print(f"  {total / n_cells:.1f} ms/cell, {total / n_pairs:.1f} ms/AOI-cell")
+    print(
+        f"  warm pass: {1e3 * kernel_s / n_cells:.1f} ms/cell = {1e3 * body_s / n_cells:.1f} cell body"
+        f" + {1e3 * (kernel_s - body_s) / n_cells:.1f} output assembly"
+    )
     print(f"  slowest cell {slow_cell}: {slow_ms:.0f} ms for {slow_n} AOIs")
 
     pr = cProfile.Profile()
