@@ -45,6 +45,21 @@ def _try_read(spark: SparkSession, path: str) -> DataFrame | None:
         return None
 
 
+def _new_partials(images: DataFrame, todo: DataFrame, query: ZonalQuery,
+                  env: DataEnvironment, grid_name: str, run_id: str) -> DataFrame:
+    """The partials of the AOI-cell frame ``todo``, in the query's wide
+    partial columns (the on-disk layout), tagged with the Spark partition
+    and ``run_id``. They come from the planner's cogroup route, which
+    collects nothing to the driver however large the batch."""
+    return (
+        planner.split_multi_partials(
+            planner._build_partials_over_bound(images, todo, [query], env, grid_name), 0, query
+        )
+        .withColumn("_pid", F.spark_partition_id())
+        .withColumn("run_id", F.lit(run_id))
+    )
+
+
 def run_zonal_checkpointed(
     spark: SparkSession,
     images: DataFrame,
@@ -54,12 +69,11 @@ def run_zonal_checkpointed(
     grid_name: str,
     checkpoint_dir: str,
     run_id: str | None = None,
-    colocated: bool = False,
 ) -> DataFrame:
     """Execute with resume: (aoi, cell) units already committed under this
-    query fingerprint are anti-joined away and only the remainder runs
-    (on the per-cell kernel plan — resume just drops committed pairs from
-    the broadcast lookup). Returns the finalized result over *all*
+    query fingerprint are anti-joined out of the AOI-cell frame and only
+    the remainder runs, through the cogroup route
+    (:func:`_new_partials`). Returns the finalized result over *all*
     partials (old + new)."""
     if query.select_pixels:
         raise ValueError("checkpointing applies to aggregate queries (partials)")
@@ -78,14 +92,7 @@ def run_zonal_checkpointed(
     )
 
     if not todo.isEmpty():
-        lookup, salted = planner._aoi_lookup(spark, todo, planner.MAX_AOIS_PER_TASK)
-        new_partials = (
-            planner.build_partials_with_lookup(
-                images, lookup, salted, query, env, grid_name, colocated
-            )
-            .withColumn("_pid", F.spark_partition_id())
-            .withColumn("run_id", F.lit(run_id))
-        )
+        new_partials = _new_partials(images, todo, query, env, grid_name, run_id)
         new_partials.write.mode("append").parquet(pdir)
         # done markers AFTER the partials commit (see module docstring)
         todo.select("aoi_id", "cell_id").withColumn("run_id", F.lit(run_id)).write.mode(
@@ -131,7 +138,6 @@ def run_zonal_checkpointed_snapshot(
     grid_name: str,
     table_dir: str,
     run_id: str | None = None,
-    colocated: bool = False,
 ) -> DataFrame:
     """The snapshot-native form of :func:`run_zonal_checkpointed`: the
     module docstring's promise — "on a real deployment ... the two-phase
@@ -180,14 +186,7 @@ def run_zonal_checkpointed_snapshot(
     )
 
     if not todo.isEmpty():
-        lookup, salted = planner._aoi_lookup(spark, todo, planner.MAX_AOIS_PER_TASK)
-        new_partials = (
-            planner.build_partials_with_lookup(
-                images, lookup, salted, query, env, grid_name, colocated
-            )
-            .withColumn("_pid", F.spark_partition_id())
-            .withColumn("run_id", F.lit(run_id))
-        )
+        new_partials = _new_partials(images, todo, query, env, grid_name, run_id)
         markers = (
             todo.select("aoi_id", "cell_id")
             .withColumn("run_id", F.lit(run_id))

@@ -6,13 +6,17 @@ DataCube -> QueryExecutor, query_executor.py:23-134) happens here once
 per grid cell, entirely in numpy:
 
   decode tiles -> derive layers -> filter mask (P1-P5) -> base/group
-  NoData masks (P7/P8) -> per AOI of the cell: rasterize (P6) -> pack
-  group values -> unique/bincount partial aggregates (A1-A5)
+  NoData masks (P7/P8) -> encode group keys (isoweek folded in) ->
+  per AOI of the cell: rasterize (P6) -> bincount partial aggregates
+  (A1-A5)
 
 The output is a *partial* aggregate per (aoi, cell, group-tuple); Spark's
 hash aggregation does the final merge (A6) — the two-phase distributed
 aggregation the reference hand-rolls with DynamoDB partials
-(tiling.py:125-131) is Catalyst's native partial/final here.
+(tiling.py:125-131) is Catalyst's native partial/final here. One kernel
+(:func:`make_multi_cell_kernel`) serves a whole query set, a single query
+being a one-member set, and emits one layout (:data:`KERNEL_SCHEMA`);
+one aggregation path (:class:`_CellAggContext`) serves every query.
 
 Scale notes:
 - One call per cell: the cell's tiles are decoded once and its AOIs are
@@ -34,6 +38,7 @@ Scale notes:
 
 from __future__ import annotations
 
+import math
 import threading
 import time
 
@@ -102,9 +107,9 @@ def partial_columns(query: ZonalQuery) -> list[tuple[str, str]]:
     for a in query.aggregates:
         if a.func not in ("count", "sum", "avg", "min", "max"):
             # percentile/mode/count_distinct are PLAN REWRITES
-            # (planner._run_value_rollup_query);
-            # they must never reach the partial/kernel machinery, which would
-            # silently treat them as sums
+            # (planner._rollup_plan); they must never reach the
+            # partial/kernel machinery, which would silently treat them as
+            # sums
             raise ValueError(f"aggregate {a.func!r} has no partial form")
         if a.func == "count":
             cols.append((a.alias, "long"))
@@ -158,8 +163,7 @@ def _is_null(v) -> bool:
 
 
 def _cell_body(queries: list, env_json: str, grid_name: str):
-    """The one per-cell kernel body behind :func:`make_cell_kernel` and
-    :func:`make_multi_cell_kernel`.
+    """The per-cell kernel body behind :func:`make_multi_cell_kernel`.
 
     ``run(cols, aois)`` takes one cell's tile rows (:func:`_columns`) and
     the cell's ``[(aoi_id, wkb), ...]`` (from the broadcast lookup or from
@@ -231,18 +235,11 @@ def _cell_body(queries: list, env_json: str, grid_name: str):
                 for c, v in part.items():
                     parts[k].setdefault(c, []).append(v)
 
-        blocks = []
-        for k, (qi, q, _, ctx) in enumerate(active):
-            if not parts[k] or sum(lens[k]) == 0:
-                continue
-            rows = np.repeat(np.arange(len(aois)), lens[k])
-            out = {c: np.concatenate(v) for c, v in parts[k].items()}
-            if q.isoweek_layers and q.group_layers and not ctx.emits_iso:
-                block = _isoweek_pushdown(pd.DataFrame({"_row": rows, **out}), q, env, id_cols=("_row",))
-                rows = block["_row"].to_numpy()
-                out = {c: block[c].to_numpy() for c in block.columns if c != "_row"}
-            blocks.append((qi, rows, out))
-        return blocks
+        return [
+            (qi, np.repeat(np.arange(len(aois)), lens[k]), {c: np.concatenate(v) for c, v in parts[k].items()})
+            for k, (qi, _, _, _) in enumerate(active)
+            if parts[k] and sum(lens[k])
+        ]
 
     return run
 
@@ -265,88 +262,88 @@ def _cell_aois(lookup, cols: dict) -> list:
 # Kernel output: one Arrow record batch per cell
 # ---------------------------------------------------------------------------
 
-_ARROW_TYPES = {"long": pa.int64(), "double": pa.float64()}
 # Spark's Arrow form of array<double> (its element field is "element")
 _VALS_TYPE = pa.list_(pa.field("element", pa.float64()))
 
+# The Arrow schema of every kernel's output: ``aoi_id``, ``cell_id`` and
+# ``_ms`` (the cell's kernel time per output row), then a NARROW tagged
+# union: ``_q`` selects the query and ``vals`` packs exactly that query's
+# values (:func:`_out_columns` order) as one array<double>. A row carries
+# only its own query's values: an all-queries-wide frame would store
+# width = sum(all queries' widths) nulls per row, and caching that width
+# measurably cost back part of the fusion win. Long partials are integral
+# doubles (< 2^53 per tile by construction) cast back at split time;
+# empty-group min/max NULLs are element nulls.
+KERNEL_SCHEMA = pa.schema([
+    pa.field("aoi_id", pa.string()), pa.field("cell_id", pa.int64()),
+    pa.field("_ms", pa.float64()), pa.field("_q", pa.int32()), pa.field("vals", _VALS_TYPE),
+])
+
 
 def _out_columns(query: ZonalQuery) -> list[tuple[str, str]]:
-    """(name, spark_type) of one query's kernel columns after the keys."""
+    """(name, spark_type) of one query's kernel values: its partial
+    columns, or its selected pixel columns."""
     if query.select_pixels:
         return [(n, "double") for n in query.select_pixels]
     return partial_columns(query)
 
 
-def kernel_schema(queries: list, packed: bool) -> pa.Schema:
-    """The Arrow schema of a kernel's output: ``aoi_id``, ``cell_id`` and
-    ``_ms`` (the cell's kernel time per output row), then either the one
-    query's columns (:func:`_out_columns`) or, ``packed``, a NARROW
-    tagged union: ``_q`` selects the query and ``vals`` packs exactly that
-    query's partial values (``partial_columns(q)`` order) as one
-    array<double>. A packed row carries only its own query's values — an
-    all-queries-wide frame would store width = sum(all queries' widths)
-    nulls per row, and caching that width measurably cost back part of
-    the fusion win. Long partials are integral doubles (< 2^53 per tile
-    by construction) cast back at split time; empty-group min/max NULLs
-    are element nulls."""
-    fields = [pa.field("aoi_id", pa.string()), pa.field("cell_id", pa.int64()),
-              pa.field("_ms", pa.float64())]
-    if packed:
-        fields += [pa.field("_q", pa.int32()), pa.field("vals", _VALS_TYPE)]
-    else:
-        fields += [pa.field(n, _ARROW_TYPES[t]) for n, t in _out_columns(queries[0])]
-    return pa.schema(fields)
-
-
-def _arrow_builder(queries: list, packed: bool):
-    """``(schema, build)``: ``build(cell_id, aoi_ids, blocks, ms)`` turns
-    :func:`_cell_body`'s blocks into one record batch of ``schema``
-    (:func:`kernel_schema`). NaN becomes null, as a pandas UDF's output
-    conversion makes it: an empty group's MIN/MAX is NaN here. Packed,
-    ``vals`` is a list array over one flat float64 buffer: each row holds
-    its own query's partial values in ``partial_columns`` order."""
-    schema = kernel_schema(queries, packed)
+def _arrow_builder(queries: list):
+    """``build(cell_id, aoi_ids, blocks, ms)`` turns :func:`_cell_body`'s
+    blocks into one record batch of :data:`KERNEL_SCHEMA`. ``vals`` is a
+    list array over one flat float64 buffer, each row holding its own
+    query's values in :func:`_out_columns` order. NaN becomes null, as a
+    pandas UDF's output conversion makes it: an empty group's MIN/MAX is
+    NaN here."""
     names = [[n for n, _ in _out_columns(q)] for q in queries]
-    empty = pa.RecordBatch.from_pylist([], schema=schema)
+    empty = pa.RecordBatch.from_pylist([], schema=KERNEL_SCHEMA)
 
     def build(cell_id: int, aoi_ids: list, blocks: list, ms: float) -> pa.RecordBatch:
         if not blocks:
             return empty
         rows = np.concatenate([r for _, r, _ in blocks])
         n = len(rows)
-        arrays = [
+        flat, null, lengths, tags = [], [], [], []
+        for qi, r, cols in blocks:
+            m = np.column_stack([np.asarray(cols[c], dtype=np.float64) for c in names[qi]])
+            flat.append(m.ravel())
+            null.append(np.isnan(m).ravel())
+            lengths.append(np.full(len(r), m.shape[1], dtype=np.int32))
+            tags.append(np.full(len(r), qi, dtype=np.int32))
+        offsets = np.zeros(n + 1, dtype=np.int32)
+        np.cumsum(np.concatenate(lengths), out=offsets[1:])
+        values = pa.array(np.concatenate(flat), mask=np.concatenate(null))
+        return pa.RecordBatch.from_arrays([
             pa.array(aoi_ids, pa.string()).take(rows),
             pa.array(np.full(n, cell_id, dtype=np.int64)),
             pa.array(np.full(n, ms / n)),
-        ]
-        if packed:
-            flat, null, lengths, tags = [], [], [], []
-            for qi, r, cols in blocks:
-                m = np.column_stack([np.asarray(cols[c], dtype=np.float64) for c in names[qi]])
-                flat.append(m.ravel())
-                null.append(np.isnan(m).ravel())
-                lengths.append(np.full(len(r), m.shape[1], dtype=np.int32))
-                tags.append(np.full(len(r), qi, dtype=np.int32))
-            offsets = np.zeros(n + 1, dtype=np.int32)
-            np.cumsum(np.concatenate(lengths), out=offsets[1:])
-            values = pa.array(np.concatenate(flat), mask=np.concatenate(null))
-            arrays += [
-                pa.array(np.concatenate(tags)),
-                pa.ListArray.from_arrays(pa.array(offsets), values, type=_VALS_TYPE),
-            ]
-        else:
-            (_, _, cols), = blocks
-            for c, f in zip(names[0], schema.types[3:]):
-                v = np.asarray(cols[c], dtype=f.to_pandas_dtype())
-                arrays.append(pa.array(v, f, mask=np.isnan(v) if v.dtype.kind == "f" else None))
-        return pa.RecordBatch.from_arrays(arrays, schema=schema)
+            pa.array(np.concatenate(tags)),
+            pa.ListArray.from_arrays(pa.array(offsets), values, type=_VALS_TYPE),
+        ], schema=KERNEL_SCHEMA)
 
-    return schema, build
+    return build
 
 
-def _make_kernel(queries: list, env_json: str, grid_name: str, aoi_lookup, packed: bool):
+def make_multi_cell_kernel(queries: list, env_json: str, grid_name: str, aoi_lookup=None):
+    """The per-cell kernel of a query set (batch request shape: one AOI
+    list, many analyses — the reference runs its query set serially per
+    request; here every query shares the scan, the decode and the
+    per-(aoi, cell) rasterize). A single query is a one-member set.
+
+    ``kernel(tiles, aois=None)`` returns one ``pyarrow.RecordBatch`` of
+    :data:`KERNEL_SCHEMA` (also ``kernel.schema``): per query, its partial
+    rows or, for a pixel select, its pixel rows. ``tiles`` is one cell's
+    tile rows as a pandas frame or an Arrow batch or table. A cell's tiles
+    are decoded once per call, however many AOIs the call loops (see
+    :func:`_cell_body`); only a salted hot cell is split across calls.
+
+    ``aois`` is the cell's ``[(aoi_id, wkb), ...]``; when omitted it comes
+    from ``aoi_lookup``, a Broadcast of ``{cell_id: (n_salt, [(aoi_id,
+    wkb), ...])}`` (see :func:`_cell_aois`). Everything the closure
+    captures is picklable (the env ships as JSON and is deserialized once
+    per process via a module-level cache)."""
     body = _cell_body(queries, env_json, grid_name)
-    schema, build = _arrow_builder(queries, packed)
+    build = _arrow_builder(queries)
 
     def kernel(tiles, aois=None) -> pa.RecordBatch:
         t0 = time.perf_counter()
@@ -357,25 +354,8 @@ def _make_kernel(queries: list, env_json: str, grid_name: str, aoi_lookup, packe
         ms = (time.perf_counter() - t0) * 1000.0
         return build(int(cols["cell_id"][0]), [a for a, _ in aois], blocks, ms)
 
-    kernel.schema = schema
+    kernel.schema = KERNEL_SCHEMA
     return kernel
-
-
-def make_cell_kernel(query: ZonalQuery, env_json: str, grid_name: str, aoi_lookup=None):
-    """Per-cell kernel of one query: ``kernel(tiles, aois=None)`` returns
-    one ``pyarrow.RecordBatch`` (schema ``kernel.schema``, see
-    :func:`kernel_schema`) with the cell's wide partial rows or, for a
-    pixel select, its pixel rows. ``tiles`` is one cell's tile rows as a
-    pandas frame or an Arrow batch or table. A cell's tiles are decoded
-    once per call, however many AOIs the call loops (see
-    :func:`_cell_body`); only a salted hot cell is split across calls.
-
-    ``aois`` is the cell's ``[(aoi_id, wkb), ...]``; when omitted it comes
-    from ``aoi_lookup``, a Broadcast of ``{cell_id: (n_salt, [(aoi_id,
-    wkb), ...])}`` (see :func:`_cell_aois`). Everything the closure
-    captures is picklable (the env ships as JSON and is deserialized once
-    per process via a module-level cache)."""
-    return _make_kernel([query], env_json, grid_name, aoi_lookup, packed=False)
 
 
 # Module caches of the kernel. They live in each Python worker and, on the
@@ -593,31 +573,6 @@ def _select_pixels(query: ZonalQuery, values, mask, x0, y0, ps) -> dict[str, np.
     return out
 
 
-def _aggregate(query: ZonalQuery, values, mask, mean_area: float) -> dict[str, np.ndarray]:
-    """Masked (grouped) partial aggregation — the reference's
-    ravel_multi_index/unique/bincount hash aggregate (A1-A5,
-    query_executor.py:52-134), emitted as partial columns under the raw
-    group-layer names."""
-    masked_idx = np.flatnonzero(mask)
-    n_masked = len(masked_idx)
-    out: dict[str, np.ndarray] = {}
-
-    if query.group_layers:
-        if n_masked == 0:
-            return _empty_columns(query, query.group_layers)
-        cols = [np.asarray(values[g])[masked_idx] for g in query.group_layers]
-        uniq_cols, inverse, ngroups = _group_key_inverse(cols)
-        for k, g in enumerate(query.group_layers):
-            out[g] = uniq_cols[k]
-    else:
-        ngroups = 1
-        inverse = np.zeros(n_masked, dtype=np.int64)
-
-    for a in query.aggregates:
-        _one_aggregate(a, query, values, masked_idx, inverse, ngroups, mean_area, n_masked, out)
-    return out
-
-
 def _empty_columns(q: ZonalQuery, group_names, long_names=()) -> dict[str, np.ndarray]:
     """Zero-row partial columns: ``group_names`` (double, or long when in
     ``long_names``) and every aggregate's partial names."""
@@ -631,187 +586,110 @@ def _empty_columns(q: ZonalQuery, group_names, long_names=()) -> dict[str, np.nd
     return out
 
 
-def _group_key_inverse(cols: list[np.ndarray]):
-    """(unique group tuples, inverse index, ngroups) for the masked group
-    columns — the reference's dictionary-encoded hash aggregate
-    (ravel_multi_index + unique, query_executor.py:52-98), done O(n):
-    integer-valued columns are offset-packed into one int64 key and
-    histogrammed with ``bincount`` + a lookup table (no sort at all).
-    Float-valued or huge-domain keys fall back to lexicographic
-    ``np.unique``."""
-    ints: list[np.ndarray] | None = []
-    for c in cols:
-        if c.dtype.kind in "uib":
-            ints.append(c.astype(np.int64))
-        else:
-            f = np.asarray(c, dtype=np.float64)
-            if np.all(np.isfinite(f)) and np.array_equal(f, np.floor(f)):
-                ints.append(f.astype(np.int64))
-            else:
-                ints = None
-                break
-    if ints is not None:
-        mins = [int(c.min()) for c in ints]
-        dims = [int(c.max()) - m + 1 for c, m in zip(ints, mins)]
-        total = 1
-        for d in dims:
-            total *= d
-        if total <= 1 << 24:  # bincount table stays small (16M slots max)
-            packed = ints[0] - mins[0]
-            for c, m, d in zip(ints[1:], mins[1:], dims[1:]):
-                packed = packed * d + (c - m)
-            counts = np.bincount(packed, minlength=total)
-            uniq_packed = np.flatnonzero(counts)
-            lut = np.empty(total, dtype=np.int64)
-            lut[uniq_packed] = np.arange(len(uniq_packed))
-            inverse = lut[packed]
-            uniq_cols: list[np.ndarray] = []
-            rem = uniq_packed
-            for m, d in zip(reversed(mins), reversed(dims)):
-                uniq_cols.append((rem % d + m).astype(np.float64))
-                rem = rem // d
-            uniq_cols.reverse()
-            return uniq_cols, inverse, len(uniq_packed)
-    key = np.stack([np.asarray(c, dtype=np.float64) for c in cols], axis=1)
-    uniq, inverse = np.unique(key, axis=0, return_inverse=True)
-    return [uniq[:, k] for k in range(uniq.shape[1])], inverse, len(uniq)
-
-
-def _one_aggregate(
-    a: Aggregate, query, values, masked_idx, inverse, ngroups, mean_area, n_masked, out
-):
-    if a.func == "count":
-        out[a.alias] = np.bincount(inverse, minlength=ngroups).astype(np.int64)
-        return
-    if a.layer == AREA_HA:
-        counts = np.bincount(inverse, minlength=ngroups)
-        if a.func == "sum":
-            out[a.alias] = counts * mean_area
-        elif a.func == "avg":
-            if query.compat_avg:
-                out[a.alias] = counts * mean_area / max(n_masked, 1)
-            else:
-                out[f"{a.alias}__sum"] = counts * mean_area
-                out[f"{a.alias}__cnt"] = counts.astype(np.int64)
-        return
-    src = np.asarray(values[a.layer])
-    if src.dtype.kind == "f":
-        data = src[masked_idx].astype(np.float64, copy=False)
-        finite = ~np.isnan(data)  # NaN exclusion inside aggregation (A7)
-        d, inv = data[finite], inverse[finite]
-    else:  # integer layers can't hold NaN — skip two full-array passes
-        d, inv = src[masked_idx].astype(np.float64, copy=False), inverse
-    if a.func == "sum":
-        out[a.alias] = np.bincount(inv, weights=d, minlength=ngroups)
-    elif a.func == "avg":
-        sums = np.bincount(inv, weights=d, minlength=ngroups)
-        if query.compat_avg:
-            # reference quirk (A3): divide by the tile's total masked count
-            out[a.alias] = sums / max(n_masked, 1)
-        else:
-            out[f"{a.alias}__sum"] = sums
-            out[f"{a.alias}__cnt"] = np.bincount(inv, minlength=ngroups).astype(np.int64)
-    elif a.func == "min":
-        acc = np.full(ngroups, np.inf)
-        np.minimum.at(acc, inv, d)
-        # NaN marks an empty group; the Arrow builder turns it into a null
-        # (Spark treats NaN as the greatest double, which would poison the
-        # final F.max/F.min merge)
-        out[a.alias] = np.where(np.isfinite(acc), acc, np.nan)
-    elif a.func == "max":
-        acc = np.full(ngroups, -np.inf)
-        np.maximum.at(acc, inv, d)
-        out[a.alias] = np.where(np.isfinite(acc), acc, np.nan)
-    else:
-        raise ValueError(f"unsupported aggregate {a.func}")
-
-
 class _CellAggContext:
-    """Per-cell precomputation for the cell kernel's AOI loop.
+    """One query's masked (grouped) partial aggregation over one cell —
+    the reference's ravel_multi_index/unique/bincount hash aggregate
+    (A1-A5, query_executor.py:52-134), emitted as partial columns under
+    the raw group-layer names.
 
-    Group keys are offset-packed into one int64 per pixel ONCE per cell
-    (same dictionary-encoding as _group_key_inverse) and aggregate inputs
-    are float64-converted once, so the per-AOI work collapses to
-    ``flatnonzero(mask)`` + ``bincount``(s) — no per-AOI unique/LUT, no
-    per-AOI dtype conversions, no per-AOI pandas objects.
+    The group keys are encoded into one small integer per pixel ONCE per
+    cell and the aggregate inputs are float64-converted once, so the
+    per-AOI work (:meth:`run`) collapses to ``flatnonzero(mask)`` +
+    ``bincount``(s). Integer-valued keys are offset-packed while the
+    packed domain stays within 2^20 slots (a per-AOI bincount table of at
+    most 8 MB); non-integer values, or a larger domain, are dictionary-
+    encoded by one ``np.unique`` over the cell's group tuples.
 
-    isoweek group layers (F1) are folded into the PIXEL key here (one
-    gather through a cached LUT maps each raw date to ``isoyear * 64 +
-    isoweek``, :func:`_iso_key_of_raw`): the bincount then groups by week
-    directly, the group domain shrinks from O(distinct dates) to
-    O(distinct weeks), and the per-cell ``_isoweek_pushdown`` regroup
-    disappears from the hot path entirely — it was ~half the kernel's wall
-    time on alert-date queries."""
+    isoweek group layers (F1) are folded into the PIXEL key: one gather
+    through a cached LUT maps each raw date to ``isoyear * 64 + isoweek``
+    (:func:`_iso_key_of_raw`), so the bincount groups by week directly and
+    the group domain shrinks from O(distinct dates) to O(distinct weeks).
 
-    def __init__(self, query: ZonalQuery, values: dict, mean_area: float,
-                 env: DataEnvironment | None = None):
-        self.query = query
-        self.values = values
+    NaN in a float aggregate layer is excluded inside aggregation (A7): the
+    layer's finite mask filters that aggregate's gather only."""
+
+    def __init__(self, query: ZonalQuery, values: dict, mean_area: float, env: DataEnvironment):
+        self.query = q = query
         self.mean_area = mean_area
-        self.fast = False
-        self.emits_iso = False
-        q = query
         self.data: dict[str, np.ndarray] = {}
+        self.finite: dict[str, np.ndarray] = {}
         for a in q.aggregates:
             if a.func != "count" and a.layer is not None and a.layer != AREA_HA:
                 d = np.asarray(values[a.layer])
-                if d.dtype.kind == "f" and np.isnan(d).any():
-                    return  # NaN exclusion differs per group -> generic path
                 self.data[a.layer] = d.astype(np.float64)
-        if not q.group_layers:
-            self.fast = True
-            return
-        ints: list[np.ndarray] = []
-        keys: list[tuple[str, bool]] = []  # (group layer, is an isoweek key)
+                if d.dtype.kind == "f" and np.isnan(d).any():
+                    self.finite[a.layer] = ~np.isnan(d)
+        cols: list[np.ndarray] = []
+        self.keys: list[tuple[str, bool]] = []  # (group layer, is an isoweek key)
+        integral = True
         for g in q.group_layers:
             c = np.asarray(values[g])
-            if c.dtype.kind not in "uib":
+            is_iso = g in q.isoweek_layers
+            if is_iso:
+                raw = c if c.dtype.kind in "ui" else np.nan_to_num(c).astype(np.int64)
+                c = _iso_key_of_raw(raw, env.get_layer(g))
+            elif c.dtype.kind not in "uib":
                 f = c.astype(np.float64)
-                if not (np.all(np.isfinite(f)) and np.array_equal(f, np.floor(f))):
-                    return  # non-integer group values -> generic path
-                c = f.astype(np.int64)
-            is_iso = g in q.isoweek_layers and env is not None
-            ints.append(_iso_key_of_raw(c, env.get_layer(g)) if is_iso else c)
-            keys.append((g, is_iso))
-        self.keys = keys
-        self.iso_out_names = {f"{g}__iso{p}" for g, iso in keys if iso for p in ("year", "week")}
+                if np.all(np.isfinite(f)) and np.array_equal(f, np.floor(f)):
+                    c = f.astype(np.int64)
+                else:
+                    c, integral = f, False
+            cols.append(c)
+            self.keys.append((g, is_iso))
+        self.iso_out_names = {f"{g}__iso{p}" for g, iso in self.keys if iso for p in ("year", "week")}
         self.out_group_names = [
-            n for g, iso in keys for n in ((f"{g}__isoyear", f"{g}__isoweek") if iso else (g,))
+            n for g, iso in self.keys for n in ((f"{g}__isoyear", f"{g}__isoweek") if iso else (g,))
         ]
-        # emits_iso only flips once the fast path is certain — a later
-        # bail-out (domain overflow) must leave the generic+pushdown flow
-        mins = [int(c.min()) for c in ints]
-        dims = [int(c.max()) - m + 1 for c, m in zip(ints, mins)]
-        total = 1
-        for d in dims:
-            total *= d
-        if total > (1 << 20):  # keep the per-AOI bincount table <= 8 MB
+        if not cols:
             return
-        packed = None
-        for c, m, d in zip(ints, mins, dims):
-            # offsets in the column's own width where it is small (8 and
-            # 16-bit rasters are the norm): a quarter of the int64 traffic
-            off = c.astype(np.int32 if c.dtype.itemsize <= 2 else np.int64) - m
-            packed = off if packed is None else packed * d + off
+        self.table = None
+        if integral:
+            self.mins = [int(c.min()) for c in cols]
+            self.dims = [int(c.max()) - m + 1 for c, m in zip(cols, self.mins)]
+            total = math.prod(self.dims)
+        if not integral or total > (1 << 20):
+            self.table, packed = np.unique(np.stack(cols, axis=1), axis=0, return_inverse=True)
+            total = len(self.table)
+        else:
+            packed = None
+            for c, m, d in zip(cols, self.mins, self.dims):
+                # offsets in the column's own width where it is small (8
+                # and 16-bit rasters are the norm): a quarter of the int64
+                # traffic
+                off = c.astype(np.int32 if c.dtype.itemsize <= 2 else np.int64) - m
+                packed = off if packed is None else packed * d + off
         # smallest dtype that fits: the per-AOI gather traffic scales with
         # the packed array's width (uint8 vs int64 = 8x less memory moved)
-        for dt in (np.uint8, np.uint16, np.uint32):
+        for dt in (np.uint8, np.uint16, np.uint32, np.int64):
             if total <= np.iinfo(dt).max + 1:
                 packed = packed.astype(dt)
                 break
-        self.packed, self.mins, self.dims, self.total = packed, mins, dims, total
-        self.fast = True
-        self.emits_iso = bool(self.iso_out_names)
+        self.packed, self.total = packed, total
+
+    def _group_columns(self, nz: np.ndarray) -> dict[str, np.ndarray]:
+        """The group columns of the packed keys ``nz``."""
+        if self.table is not None:
+            ucols = [self.table[nz, k] for k in range(len(self.keys))]
+        else:
+            ucols, rem = [], nz
+            for m, d in zip(reversed(self.mins), reversed(self.dims)):
+                ucols.append(rem % d + m)
+                rem = rem // d
+            ucols.reverse()
+        out: dict[str, np.ndarray] = {}
+        for c, (g, is_iso) in zip(ucols, self.keys):
+            if is_iso:
+                c = c.astype(np.int64)
+                out[f"{g}__isoyear"], out[f"{g}__isoweek"] = c >> 6, c & 63
+            else:
+                out[g] = c.astype(np.float64)
+        return out
 
     def run(self, mask: np.ndarray) -> dict[str, np.ndarray]:
         """Partial aggregate columns (raw group names) for one AOI mask."""
         q = self.query
-        if not self.fast:
-            return _aggregate(q, self.values, mask, self.mean_area)
         idx = np.flatnonzero(mask)
         n_masked = len(idx)
-        out: dict[str, np.ndarray] = {}
-
         if q.group_layers:
             if n_masked == 0:
                 return _empty_columns(q, self.out_group_names, self.iso_out_names)
@@ -819,69 +697,47 @@ class _CellAggContext:
             counts = np.bincount(pk, minlength=self.total)
             nz = np.flatnonzero(counts)
             counts_nz = counts[nz]
-            rem = nz
-            ucols: list[np.ndarray] = []
-            for m, d in zip(reversed(self.mins), reversed(self.dims)):
-                ucols.append(rem % d + m)
-                rem = rem // d
-            ucols.reverse()
-            for c, (g, is_iso) in zip(ucols, self.keys):
-                if is_iso:
-                    out[f"{g}__isoyear"], out[f"{g}__isoweek"] = c >> 6, c & 63
-                else:
-                    out[g] = c.astype(np.float64)
+            out = self._group_columns(nz)
         else:
-            pk = None
-            nz = np.array([0])
-            counts_nz = np.array([n_masked])
+            pk, nz, counts_nz = None, np.array([0]), np.array([n_masked])
+            out = {}
 
         for a in q.aggregates:
             if a.func == "count":
                 out[a.alias] = counts_nz.astype(np.int64)
                 continue
             if a.layer == AREA_HA:
-                if a.func == "sum":
-                    out[a.alias] = counts_nz * self.mean_area
-                elif a.func == "avg":
-                    if q.compat_avg:
-                        out[a.alias] = counts_nz * self.mean_area / max(n_masked, 1)
-                    else:
-                        out[f"{a.alias}__sum"] = counts_nz * self.mean_area
-                        out[f"{a.alias}__cnt"] = counts_nz.astype(np.int64)
-                continue
-            d = self.data[a.layer][idx]
-            if q.group_layers:
-                if a.func in ("sum", "avg"):
-                    sums = np.bincount(pk, weights=d, minlength=self.total)[nz]
-                if a.func == "sum":
-                    out[a.alias] = sums
-                elif a.func == "avg":
-                    if q.compat_avg:
-                        out[a.alias] = sums / max(n_masked, 1)
-                    else:
-                        out[f"{a.alias}__sum"] = sums
-                        out[f"{a.alias}__cnt"] = counts_nz.astype(np.int64)
-                elif a.func == "min":
-                    acc = np.full(self.total, np.inf)
-                    np.minimum.at(acc, pk, d)
-                    out[a.alias] = np.where(np.isfinite(acc[nz]), acc[nz], np.nan)
-                elif a.func == "max":
-                    acc = np.full(self.total, -np.inf)
-                    np.maximum.at(acc, pk, d)
-                    out[a.alias] = np.where(np.isfinite(acc[nz]), acc[nz], np.nan)
+                sums, cnt = counts_nz * self.mean_area, counts_nz
             else:
-                if a.func == "sum":
-                    out[a.alias] = np.array([d.sum()])
-                elif a.func == "avg":
-                    if q.compat_avg:
-                        out[a.alias] = np.array([d.sum() / max(n_masked, 1)])
+                d, pka, cnt = self.data[a.layer][idx], pk, counts_nz
+                keep = self.finite.get(a.layer)
+                if keep is not None:
+                    keep = keep[idx]
+                    d = d[keep]
+                    if pk is None:
+                        cnt = np.array([len(d)])
                     else:
-                        out[f"{a.alias}__sum"] = np.array([d.sum()])
-                        out[f"{a.alias}__cnt"] = np.array([n_masked], dtype=np.int64)
-                elif a.func == "min":
-                    out[a.alias] = np.array([d.min() if n_masked else np.nan])
-                elif a.func == "max":
-                    out[a.alias] = np.array([d.max() if n_masked else np.nan])
+                        pka = pk[keep]
+                        cnt = np.bincount(pka, minlength=self.total)[nz]
+                if a.func in ("min", "max"):
+                    if pka is None:
+                        out[a.alias] = np.array([(d.min() if a.func == "min" else d.max()) if len(d) else np.nan])
+                    else:
+                        acc = np.full(self.total, np.inf if a.func == "min" else -np.inf)
+                        (np.minimum if a.func == "min" else np.maximum).at(acc, pka, d)
+                        # NaN marks an empty group; the Arrow builder turns
+                        # it into a null (Spark treats NaN as the greatest
+                        # double, which would poison the final F.max/F.min)
+                        out[a.alias] = np.where(np.isfinite(acc[nz]), acc[nz], np.nan)
+                    continue
+                sums = np.array([d.sum()]) if pka is None else np.bincount(pka, weights=d, minlength=self.total)[nz]
+            if a.func == "sum":
+                out[a.alias] = sums
+            elif q.compat_avg:
+                # reference quirk (A3): divide by the tile's total masked count
+                out[a.alias] = sums / max(n_masked, 1)
+            else:
+                out[f"{a.alias}__sum"], out[f"{a.alias}__cnt"] = sums, cnt.astype(np.int64)
         return out
 
 
@@ -949,9 +805,8 @@ def _iso_year_week_of_raw(raw: np.ndarray, layer) -> tuple[np.ndarray, np.ndarra
     so the per-pixel path is two gathers through a cached decode LUT over
     ``0..max`` — no 65k-element sort per tile (np.unique's argsort was the
     kernel's top cost on alert-date queries). Values outside the LUT-able
-    domain fall back to unique+inverse. Serves the per-group pushdown
-    (_isoweek_pushdown); the per-pixel fast path gathers the same LUT's
-    packed key (:func:`_iso_key_of_raw`)."""
+    domain fall back to unique+inverse. :func:`_iso_key_of_raw` gathers
+    the same LUT's packed key."""
     raw = np.asarray(raw)
     decode_src = getattr(layer, "decode_expression", None)
     lut = _iso_lut(raw, decode_src)
@@ -960,114 +815,3 @@ def _iso_year_week_of_raw(raw: np.ndarray, layer) -> tuple[np.ndarray, np.ndarra
     uniq, inv = np.unique(raw, return_inverse=True)
     iy, iw = _iso_of_values(uniq.astype(np.int64), decode_src)
     return iy[inv], iw[inv]
-
-
-def _isoweek_pushdown(pdf: pd.DataFrame, query: ZonalQuery, env, id_cols: tuple = ()) -> pd.DataFrame:
-    """isoweek(date_layer) applied to the per-tile partial (F1, pushed
-    down): decode the raw group values (a few hundred uniques at most),
-    convert to ISO (year, week), and re-aggregate within the tile. The
-    reference runs this decode+regroup once at the coordinator over the
-    merged result (tiling.py:100-126); doing it per tile is equivalent —
-    decode is a pure per-value function and the coordinator re-*sums* —
-    and shrinks the shuffle from O(distinct dates) to O(distinct weeks)
-    rows per tile."""
-    new_groups: list[str] = list(id_cols)
-    for g in query.group_layers:
-        if g not in query.isoweek_layers:
-            new_groups.append(g)
-            continue
-        raw = pdf[g].to_numpy().astype(np.int64)
-        iso_year, iso_week = _iso_year_week_of_raw(raw, env.get_layer(g))
-        idx = pdf.columns.get_loc(g)
-        pdf = pdf.drop(columns=[g])
-        pdf.insert(idx, f"{g}__isoweek", iso_week)
-        pdf.insert(idx, f"{g}__isoyear", iso_year)
-        new_groups += [f"{g}__isoyear", f"{g}__isoweek"]
-    aggmap: dict[str, str] = {}
-    for a in query.aggregates:
-        if a.func in ("count", "sum") or (a.func == "avg" and query.compat_avg):
-            aggmap[a.alias] = "sum"
-        elif a.func == "avg":
-            aggmap[f"{a.alias}__sum"] = "sum"
-            aggmap[f"{a.alias}__cnt"] = "sum"
-        else:  # min / max
-            aggmap[a.alias] = a.func
-    return _regroup(pdf, new_groups, aggmap)
-
-
-def _regroup(pdf: pd.DataFrame, group_cols: list, aggmap: dict) -> pd.DataFrame:
-    """Vectorized replacement for ``pdf.groupby(group_cols).agg(aggmap)``
-    in the per-cell hot path: factorize each key column, offset-pack into
-    one int64, and bincount/fmin/fmax per aggregate. The pandas groupby
-    machinery costs ~10 ms per call regardless of size — half the cell
-    kernel's wall time on isoweek queries; this is ~10x cheaper on the
-    small frames the kernel emits. Falls back to pandas if the packed key
-    domain would overflow int64. NaN semantics match pandas (fmin/fmax
-    skip NaN; all-NaN groups stay NaN -> NA for nullable columns)."""
-    n = len(pdf)
-    if n == 0:
-        return pdf.groupby(group_cols, as_index=False).agg(aggmap)
-    packed = np.zeros(n, dtype=np.int64)
-    for c in group_cols:
-        # use_na_sentinel=False: a NaN key becomes its own group code
-        # instead of -1 (the sentinel would collide with the previous
-        # group's last code under offset packing). The kernel masks NaN
-        # group pixels out long before this point, so the branch is
-        # defensive, but a collision would silently merge groups.
-        codes, uniques = pd.factorize(
-            pdf[c].to_numpy(), sort=False, use_na_sentinel=False
-        )
-        if len(uniques) and packed.max() > (1 << 62) // len(uniques):
-            return pdf.groupby(group_cols, as_index=False).agg(aggmap)
-        packed = packed * max(len(uniques), 1) + codes
-    uniq, first_idx, inv = np.unique(packed, return_index=True, return_inverse=True)
-    out: dict[str, np.ndarray] = {}
-    for c in group_cols:
-        out[c] = pdf[c].to_numpy()[first_idx]
-    ngroups = len(uniq)
-    for c, how in aggmap.items():
-        col = pdf[c]
-        nullable = str(col.dtype) == "Float64"
-        v = (
-            col.to_numpy(dtype="float64", na_value=np.nan)
-            if nullable
-            else col.to_numpy()
-        )
-        if how == "sum":
-            # skip-NaN like pandas sum (partial sums are NaN-free by
-            # construction, but the fallback path would skip, so match it)
-            w = v.astype(np.float64)
-            if w.dtype.kind == "f" and np.isnan(w).any():
-                w = np.nan_to_num(w)
-            acc = np.bincount(inv, weights=w, minlength=ngroups)
-            if v.dtype.kind in "iu":
-                acc = acc.astype(np.int64)  # counts stay integral (< 2^53)
-        elif how == "min":
-            acc = np.full(ngroups, np.nan)
-            np.fmin.at(acc, inv, v.astype(np.float64))
-        elif how == "max":
-            acc = np.full(ngroups, np.nan)
-            np.fmax.at(acc, inv, v.astype(np.float64))
-        else:
-            return pdf.groupby(group_cols, as_index=False).agg(aggmap)
-        out[c] = pd.array(acc, dtype="Float64") if nullable else acc
-    return pd.DataFrame(out)
-
-
-# ---------------------------------------------------------------------------
-# Fused multi-query cell kernel (batch request shape: one AOI list, many
-# analyses — the reference runs its query set serially per request;
-# fusing shares the scan, decode, and per-(aoi, cell) rasterize across
-# every query in the set)
-# ---------------------------------------------------------------------------
-
-def make_multi_cell_kernel(queries: list, env_json: str, grid_name: str, aoi_lookup=None):
-    """Per-cell kernel evaluating EVERY query of a batch in one pass (the
-    shared body, :func:`_cell_body`, over all of them) and emitting the
-    narrow ``_q``/``vals`` rows of :func:`kernel_schema` as one record
-    batch. ``kernel(tiles, aois=None)`` takes its input as
-    :func:`make_cell_kernel` does. Aggregate-mode queries only (no
-    select_pixels)."""
-    if any(q.select_pixels for q in queries):
-        raise ValueError("fused execution supports aggregate queries only")
-    return _make_kernel(queries, env_json, grid_name, aoi_lookup, packed=True)

@@ -62,5 +62,7 @@ def local_frame(spark: SparkSession, columns, schema=None) -> DataFrame:
     is given; a value the cast would change raises instead of falling back
     to a pickled-row frame. The table goes over as one record batch:
     PySpark 4.1.2's ``createDataFrame`` drops every row after a zero-row
-    batch that follows a non-empty one."""
-    return spark.createDataFrame(pa.table(columns).combine_chunks(), schema)
+    batch that follows a non-empty one, and fails on a list column with no
+    batch at all."""
+    table = pa.table(columns).combine_chunks()
+    return spark.createDataFrame(table if table.num_rows else table.schema.empty_table(), schema)

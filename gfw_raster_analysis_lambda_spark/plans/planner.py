@@ -9,15 +9,20 @@ plan:
       -> pruned tile scan clustered by cell_id      [partition-pruned scan]
       -> per-cell kernel over the cell's AOIs       [operators.zonal]
       -> groupBy(aoi_id, group cols).sum            [A6 final merge, Catalyst]
-      -> decode / isoweek regroup / order / limit   [P11, F1, O1, O2]
+      -> decode / order / limit                     [P11, O1, O2]
 
-Every route below runs the same per-cell kernel and emits the same
-partial rows; they differ only in where the AOI-cell list lives and how
-the tile rows reach the kernel.
+One executor, :func:`run_zonal_queries`, runs every request: a single
+query (:func:`run_zonal_query`) is a one-member query set. Each target
+grid of the set gets one kernel pass whose rows carry every member's
+partials in one layout (``_q`` tags the query, ``vals`` packs its values,
+:data:`zonal.KERNEL_SCHEMA`); :func:`split_multi_partials` takes a
+member's rows back out for its finalize. Every route below runs that
+kernel; they differ only in where the AOI-cell list lives and how the
+tile rows reach the kernel.
 
-Reading the AOI batch. The frame is scanned ONCE per request: one bounded
-query (:func:`plans.driver.read_bounded`) returns either all its rows or
-the verdict that the batch is over the driver bounds
+Reading the AOI batch. The frame is scanned ONCE per target grid: one
+bounded query (:func:`plans.driver.read_bounded`) returns either all its
+rows or the verdict that the batch is over the driver bounds
 (``DRIVER_ENUM_AOI_LIMIT`` rows, ``DRIVER_ENUM_WKB_BYTES`` geometry
 bytes); over-bound geometry never reaches the driver. Within the bounds
 the driver enumerates polygon->cells itself (aborting past
@@ -26,15 +31,17 @@ the result is small enough to be sorted in one task instead of through a
 range-partitioned global sort. The kernel stage is then the salted cell
 plan (one shuffle of tile rows by cell) or the colocated stream over a
 cell-sorted layout (no shuffle of tile bytes). Small frames the planner
-builds itself (cell lists, the salt dimension) are ``LocalRelation``s, so
-they never cost a Python job.
+builds itself (cell lists, the salt dimension, null tile rows) are
+``LocalRelation``s, so they never cost a Python job.
 
 Over the bounds (:func:`_build_partials_over_bound`). Nothing is
-collected: polygon->cells runs in a pandas UDF, the AOI-cell rows are
-salted per cell by a window count, the tile rows are replicated per salt
-of their cell, and ``groupBy(cell_id, _salt).cogroup(...)`` feeds each
-cell's tiles and AOI slice to the kernel. A cell with AOIs but no tiles
-arrives with an empty tile side, which FROM data queries zero-fill.
+collected: polygon->cells runs once for the whole query set in a pandas
+UDF (:func:`aoi_cells`), the AOI-cell rows are salted per cell by a
+window count, the tile rows are replicated per salt of their cell, and
+``groupBy(cell_id, _salt).cogroup(...)`` feeds each cell's tiles and AOI
+slice to the kernel. A cell with AOIs but no tiles arrives with an empty
+tile side, which FROM data queries zero-fill. The checkpoint layer runs
+its resume remainder through the same route.
 
 The driver route. A job of Python tasks costs ~0.2 s on a 4-core box
 whatever its input (a JVM-only job ~0.1 s), plus ~0.07 s of a core per
@@ -45,14 +52,17 @@ on the driver instead (:func:`_driver_cell_plan`): one JVM-only Arrow
 scan of the pruned tile rows, the kernel per cell, and the partials
 handed to the Catalyst finalize as a one-partition ``LocalRelation`` (no
 exchange, one job).
-The route is taken when the strategy is auto, the query aggregates, the
-AOI batch has an :class:`AoiIndex`, and the kernel work (AOI-cell pairs
-x cell pixels) is at most ``DRIVER_KERNEL_PX_LIMIT``. Explicit
-strategies, pixel selects and bigger batches keep the distributed kernel
-plans, and so do direct callers of the ``build_*_with_lookup`` builders.
+The route is taken when the strategy is auto, no query of the grid
+selects pixels, the AOI batch has an :class:`AoiIndex`, and the kernel
+work (AOI-cell pairs x cell pixels) is at most ``DRIVER_KERNEL_PX_LIMIT``.
+Explicit strategies, pixel selects and bigger batches keep the
+distributed kernel plans, and so do direct callers of
+:func:`build_partials_with_lookup`.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -60,7 +70,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 
 from ..functions import geometry as geo
 from ..functions import grid as G
@@ -123,88 +133,19 @@ def run_zonal_query(
     query: ZonalQuery,
     env: DataEnvironment,
     grid_name: str | None = None,
-    per_aoi: bool = True,
     strategy: str | None = None,
     aoi_index: "AoiIndex | None" = None,
 ) -> DataFrame:
-    """Execute a zonal query; returns the final result DataFrame with one
-    block of rows per AOI (column ``aoi_id`` first when ``per_aoi``).
-
-    Every route runs the one per-cell kernel (``operators.zonal``).
-    ``strategy`` picks its physical plan while the AOI batch is within
-    the driver bounds:
-
-    - ``"cell"``: one shuffle of the tile rows clustered by ``cell_id``;
-      each cell is decoded ONCE and its AOIs (from a broadcast lookup) are
-      looped in the kernel, with explicit salting (tile rows duplicated
-      per salt) for cells hotter than MAX_AOIS_PER_TASK AOIs.
-    - ``"colocated"``: ZERO shuffle of tile bytes — requires the images
-      input to be cell-sorted on disk (sources.images.write_images_cell_sorted);
-      the kernel streams over the scan with mapInArrow and regroups cells
-      within each partition. Only partial-aggregate rows ever shuffle.
-      Hot cells are diverted to the salted cell plan.
-    - ``None``/``"auto"``: ``"colocated"`` for a frame read off a
-      cell-sorted layout, ``"cell"`` otherwise; a small aggregate request
-      runs the kernel on the driver instead (module docstring, "The
-      driver route").
-
-    A multigrid query always takes the cell plan. A batch over any driver
-    bound takes the cogroup route whatever the strategy (module
-    docstring, "Over the bounds").
-    """
-    if strategy not in (None, "auto", "cell", "colocated"):
-        raise ValueError(f"unknown strategy {strategy!r}; use auto, cell or colocated")
-    grid_name = resolve_target_grid(query, env, grid_name)
-    if any(a.func in VALUE_ROLLUP_FUNCS for a in query.aggregates):
-        return _run_value_rollup_query(
-            spark, images, aoi_df, query, env, grid_name,
-            strategy=strategy, aoi_index=aoi_index,
-        )
-    auto = strategy in (None, "auto")
-    # frames read straight off a cell-sorted layout (sources.images
-    # sidecar) default to the zero-shuffle colocated scan
-    colocated = strategy == "colocated" or (auto and getattr(images, "_gfw_cell_sorted", False))
-    needed = env.source_layer_names(query.layer_names())
-    if any(env.get_layer(n).grid != grid_name for n in needed):
-        colocated = False  # multi-grid co-registration needs the remapped plan
-    if aoi_index is not None and aoi_index.grid_name != grid_name:
-        raise ValueError(
-            f"aoi_index was prepared on grid {aoi_index.grid_name!r} but the "
-            f"query resolves to {grid_name!r}; prepare one per target grid"
-        )
-    if aoi_index is None:
-        aoi_index = prepare_aoi_index(spark, aoi_df, grid_name)
-    if aoi_index is not None:
-        on_driver = (
-            auto and not query.select_pixels and _fits_driver_kernel(aoi_index, grid_name)
-        )
-        out = build_partials_with_lookup(
-            images, aoi_index.lookup, aoi_index.salted, query, env, grid_name, colocated,
-            on_driver=on_driver,
-        )
-    else:
-        out = _build_partials_over_bound(images, aoi_df, query, env, grid_name)
-    if query.select_pixels:
-        return _finalize_pixels(out, query)
-    return finalize_partials(out, query, env, bounded=aoi_index is not None)
+    """Execute one zonal query; returns the final result DataFrame with
+    one block of rows per AOI (column ``aoi_id`` first). The query runs as
+    a one-member set of :func:`run_zonal_queries`, which documents
+    ``strategy`` and ``aoi_index``."""
+    return run_zonal_queries(
+        spark, images, aoi_df, {"q": query}, env, grid_name, strategy=strategy, aoi_index=aoi_index
+    )["q"]
 
 
 VALUE_ROLLUP_FUNCS = ("percentile", "mode", "count_distinct", "variance", "stddev")
-
-
-def _run_value_rollup_query(
-    spark, images, aoi_df, query: ZonalQuery, env, grid_name,
-    strategy=None, aoi_index=None,
-) -> DataFrame:
-    """Single-query entry for the value-rollup rewrite (see
-    :func:`_rollup_plan`): run the inner group-by-value count query
-    through the normal kernel path, then apply the relational finisher."""
-    inner, finish = _rollup_plan(query, env)
-    counts = run_zonal_query(
-        spark, images, aoi_df, inner, env, grid_name,
-        per_aoi=True, strategy=strategy, aoi_index=aoi_index,
-    )
-    return finish(counts)
 
 
 def _rollup_plan(query: ZonalQuery, env):
@@ -455,6 +396,11 @@ def _aoi_lookup_from_aois(spark: SparkSession, rows: list, grid_name: str,
     path remains for larger batches. ``rows`` are collected
     (aoi_id, geom_wkb) rows.
 
+    Returns ``(lookup, salted)``: a broadcast ``{cell_id: (n_salt,
+    [(aoi_id, wkb), ...])}`` with each cell's AOIs sorted by id, and the
+    ``{cell_id: n_salt}`` of the hot cells (``n_salt > 1``) whose AOI loop
+    the planner splits across salted replicas.
+
     With ``cell_limit`` set, enumeration aborts as soon as the total
     aoi-cell count exceeds it and returns ``(None, None)`` — the caller
     must route to the distributed cogroup plan instead of holding an
@@ -471,22 +417,6 @@ def _aoi_lookup_from_aois(spark: SparkSession, rows: list, grid_name: str,
             return None, None
         for c in cells:
             by_cell.setdefault(c, []).append((r["aoi_id"], wkb))
-    return _lookup_from_by_cell(spark, by_cell, max_aois_per_task)
-
-
-def _aoi_lookup(spark: SparkSession, cells: DataFrame, max_aois_per_task: int):
-    """Collect a (small, broadcastable) AOI-cell list to a dict
-    {cell_id: (n_salt, [(aoi_id, wkb)...])} and ship it as a Spark
-    broadcast variable. n_salt > 1 flags hot cells whose AOI loop the
-    planner splits across salted replicas."""
-    rows = cells.select("cell_id", "aoi_id", "geom_wkb").collect()
-    by_cell: dict[int, list] = {}
-    for r in rows:
-        by_cell.setdefault(r["cell_id"], []).append((r["aoi_id"], bytes(r["geom_wkb"])))
-    return _lookup_from_by_cell(spark, by_cell, max_aois_per_task)
-
-
-def _lookup_from_by_cell(spark: SparkSession, by_cell: dict, max_aois_per_task: int):
     lookup: dict[int, tuple] = {}
     salted: dict[int, int] = {}
     for c, lst in by_cell.items():
@@ -526,9 +456,8 @@ def prepare_aoi_index(
     max_aois_per_task: int = MAX_AOIS_PER_TASK,
 ) -> AoiIndex | None:
     """Build an :class:`AoiIndex` for ``aoi_df`` on ``grid_name``; returns
-    ``None`` when the batch exceeds the broadcast bound (callers then run
-    the normal per-query path, which routes to the distributed
-    cogroup plan).
+    ``None`` when the batch exceeds a driver bound (the executor then
+    takes the distributed cogroup route, :func:`_build_partials_over_bound`).
 
     The AOI frame is read once: one bounded query decides the row-count
     AND total WKB-bytes bounds and returns the rows, so a batch of
@@ -548,14 +477,15 @@ def prepare_aoi_index(
     return AoiIndex(grid_name, lookup, salted)
 
 
-def _salted_aoi_cells(aoi_df: DataFrame, grid_name: str) -> DataFrame:
-    """(aoi_id, geom_wkb, cell_id, _n_salt, _salt), computed distributed:
-    ``n_salt = ceil(AOIs of the cell / MAX_AOIS_PER_TASK)`` by a window
-    count, and each AOI's slot is the one ``aois[s::n_salt]`` gives it in
-    the broadcast lookup (the cell's AOIs sorted by id)."""
+def _salted_aoi_cells(cells: DataFrame) -> DataFrame:
+    """An AOI-cell frame ``(aoi_id, geom_wkb, cell_id)`` (:func:`aoi_cells`)
+    with ``_n_salt`` and ``_salt``, computed distributed: ``n_salt =
+    ceil(AOIs of the cell / MAX_AOIS_PER_TASK)`` by a window count, and
+    each AOI's slot is the one ``aois[s::n_salt]`` gives it in the
+    broadcast lookup (the cell's AOIs sorted by id)."""
     w = Window.partitionBy("cell_id")
     return (
-        aoi_cells(aoi_df, grid_name)
+        cells
         .withColumn("_n_salt", F.ceil(F.count("*").over(w) / MAX_AOIS_PER_TASK).cast("int"))
         .withColumn(
             "_salt", ((F.row_number().over(w.orderBy("aoi_id")) - 1) % F.col("_n_salt")).cast("int")
@@ -565,26 +495,27 @@ def _salted_aoi_cells(aoi_df: DataFrame, grid_name: str) -> DataFrame:
 
 def _build_partials_over_bound(
     images: DataFrame,
-    aoi_df: DataFrame,
-    query: ZonalQuery,
+    cells: DataFrame,
+    queries: list,
     env: DataEnvironment,
     grid_name: str,
 ) -> DataFrame:
-    """The route for an AOI batch over any driver bound (module docstring,
-    "Over the bounds"); nothing is collected to the driver. The AOI-cell
-    rows are salted (:func:`_salted_aoi_cells`), the tile rows are
-    replicated once per salt of their cell (cells with no AOI drop out
-    here), and a cogroup on (cell_id, _salt) hands each cell's tiles and
-    AOI slice to the same cell kernel as every other route."""
+    """The kernel stage for an AOI-cell frame ``cells`` (:func:`aoi_cells`,
+    or what a checkpoint resume leaves of it) that is not collected to the
+    driver (module docstring, "Over the bounds"). The AOI-cell rows are
+    salted (:func:`_salted_aoi_cells`), the tile rows are replicated once
+    per salt of their cell (cells with no AOI drop out here), and a
+    cogroup on (cell_id, _salt) hands each cell's tiles and AOI slice to
+    the kernel of the whole query set, as on every other route."""
     spark = images.sparkSession
-    cells = _salted_aoi_cells(aoi_df, grid_name)
+    cells = _salted_aoi_cells(cells)
     tiles = (
-        _tile_rows(images, env, env.source_layer_names(query.layer_names()), grid_name)
+        _tile_rows(images, env, _source_layers(queries, env), grid_name)
         .join(cells.select("cell_id", "_n_salt").distinct(), "cell_id")
         .withColumn("_salt", F.explode(F.sequence(F.lit(0), F.col("_n_salt") - 1)))
         .drop("_n_salt")
     )
-    kernel, schema = _cell_kernel(query, env, grid_name)
+    kernel = zonal.make_multi_cell_kernel(queries, env.to_json(), grid_name)
 
     def run(tiles, aois):
         aoi_list = list(zip(aois.column("aoi_id").to_pylist(), aois.column("geom_wkb").to_pylist()))
@@ -600,7 +531,7 @@ def _build_partials_over_bound(
     return (
         tiles.repartition(n, *keys).groupBy(*keys)
         .cogroup(aoi_side.groupBy(*keys))
-        .applyInArrow(run, schema)
+        .applyInArrow(run, from_arrow_schema(kernel.schema))
     )
 
 
@@ -716,16 +647,8 @@ def _with_missing_cells(spark, imgs: DataFrame, cell_ids: list) -> DataFrame:
     missing = np.setdiff1d(np.asarray(cell_ids, dtype=np.int64), present)
     if not missing.size:
         return imgs
-    rows = local_frame(spark, {"cell_id": missing}).coalesce(1).select(
-        F.lit(None).cast("string").alias("layer"),
-        F.col("cell_id"),
-        F.lit(None).cast("binary").alias("bytes"),
-        F.lit(None).cast("int").alias("w"),
-        F.lit(None).cast("int").alias("h"),
-        F.lit(None).cast("string").alias("fmt"),
-        F.col("cell_id").alias("src_cell_id"),
-    )
-    return imgs.unionByName(rows)
+    rows = _null_tile_rows(to_arrow_schema(imgs.schema), missing)
+    return imgs.unionByName(local_frame(spark, rows, imgs.schema).coalesce(1))
 
 
 def _null_tile_rows(schema: pa.Schema, cell_ids) -> pa.Table:
@@ -766,62 +689,58 @@ def _driver_cell_plan(spark, imgs: DataFrame, fill_cells, kernel, schema) -> Dat
     return local_frame(spark, pa.Table.from_batches(batches, kernel.schema), schema).coalesce(1)
 
 
-def _dispatch_cell_plan(spark, imgs: DataFrame, fill_cells, salted: dict, kernel,
-                        schema, colocated: bool, on_driver: bool) -> DataFrame:
-    """Kernel-stage dispatch shared by the single and fused builders: the
-    driver route, the colocated zero-shuffle stream (with hot-cell
-    diversion — a cell shared by thousands of AOIs would be ONE serial
-    AOI loop in one colocated task, so cells hotter than MAX_AOIS_PER_TASK
-    take the salted cell plan while everything else streams shuffle-free)
-    or the salted cell-clustered shuffle plan. ``fill_cells`` (FROM data
-    queries) are the AOI cells that get a null tile row when no tile of
-    theirs is stored."""
-    if on_driver:
-        return _driver_cell_plan(spark, imgs, fill_cells, kernel, schema)
-    if fill_cells is not None:
-        imgs = _with_missing_cells(spark, imgs, fill_cells)
-    if colocated:
-        if salted:
-            hot = [int(c) for c in salted]
-            cold_part = imgs.filter(~_in_long_set("cell_id", hot)).mapInArrow(
-                _streaming_cells(kernel), schema
-            )
-            hot_part = _salted_cell_plan(
-                spark, imgs.filter(_in_long_set("cell_id", hot)), salted, kernel, schema
-            )
-            return cold_part.unionByName(hot_part)
-        return imgs.mapInArrow(_streaming_cells(kernel), schema)
-    return _salted_cell_plan(spark, imgs, salted, kernel, schema)
-
-
 def build_partials_with_lookup(
     images: DataFrame,
     lookup,  # Broadcast[{cell_id: (n_salt, [(aoi_id, wkb)...])}]
     salted: dict,
-    query: ZonalQuery,
+    queries: list,  # [ZonalQuery] sharing the target grid ``grid_name``
     env: DataEnvironment,
     grid_name: str,
     colocated: bool = False,
     on_driver: bool = False,
 ) -> DataFrame:
-    """Cell-kernel plan over an explicit AOI-cell lookup (used directly by
-    the checkpoint layer, whose resume anti-join simply removes committed
-    (aoi, cell) pairs from the lookup). ``on_driver`` runs the kernel now,
-    on the driver (see :func:`_driver_cell_plan`); otherwise the plan is
-    lazy."""
+    """The kernel stage over an explicit AOI-cell lookup: one scan, decode
+    and per-(aoi, cell) rasterize serving every query of ``queries``
+    (:func:`zonal.make_multi_cell_kernel`). Output rows are NARROW: ``_q``
+    tags the owning query and ``vals`` packs exactly that query's values;
+    split per query with :func:`split_multi_partials`.
+
+    The plan is the driver route (``on_driver``: the kernel runs now, see
+    :func:`_driver_cell_plan`), the colocated zero-shuffle stream with
+    hot-cell diversion (a cell shared by thousands of AOIs would be ONE
+    serial AOI loop in one colocated task, so cells hotter than
+    MAX_AOIS_PER_TASK take the salted cell plan while everything else
+    streams shuffle-free) or the salted cell-clustered shuffle plan.
+    FROM data queries give every AOI cell without a stored tile a null
+    tile row."""
+    spark = images.sparkSession
     cell_ids = list(lookup.value.keys())
-    needed = env.source_layer_names(query.layer_names())
+    needed = _source_layers(queries, env)
     if colocated and any(env.get_layer(n).grid != grid_name for n in needed):
         raise ValueError(
             "colocated strategy requires a single-grid query (coarse-layer "
             "rows live at other cells' file positions); use strategy='cell'"
         )
     imgs = _prune_cells(_tile_rows(images, env, needed, grid_name), cell_ids)
-    fill_cells = cell_ids if query.base_layer == FROM_DATA else None
-    kernel, schema = _cell_kernel(query, env, grid_name, lookup)
-    return _dispatch_cell_plan(
-        images.sparkSession, imgs, fill_cells, salted, kernel, schema, colocated, on_driver
-    )
+    fill_cells = cell_ids if any(q.base_layer == FROM_DATA for q in queries) else None
+    kernel = zonal.make_multi_cell_kernel(queries, env.to_json(), grid_name, lookup)
+    schema = from_arrow_schema(kernel.schema)
+    if on_driver:
+        return _driver_cell_plan(spark, imgs, fill_cells, kernel, schema)
+    if fill_cells is not None:
+        imgs = _with_missing_cells(spark, imgs, fill_cells)
+    if colocated and salted:
+        hot = _in_long_set("cell_id", [int(c) for c in salted])
+        cold_part = imgs.filter(~hot).mapInArrow(_streaming_cells(kernel), schema)
+        return cold_part.unionByName(_salted_cell_plan(spark, imgs.filter(hot), salted, kernel, schema))
+    if colocated:
+        return imgs.mapInArrow(_streaming_cells(kernel), schema)
+    return _salted_cell_plan(spark, imgs, salted, kernel, schema)
+
+
+def _source_layers(queries: list, env: DataEnvironment) -> list:
+    """The source layers ``queries`` read, each once, in first-use order."""
+    return list(dict.fromkeys(n for q in queries for n in env.source_layer_names(q.layer_names())))
 
 
 def _tile_rows(images: DataFrame, env: DataEnvironment, layers: list, grid_name: str) -> DataFrame:
@@ -837,79 +756,31 @@ def _tile_rows(images: DataFrame, env: DataEnvironment, layers: list, grid_name:
     return imgs.withColumn("src_cell_id", F.col("cell_id"))
 
 
-def _cell_kernel(query: ZonalQuery, env: DataEnvironment, grid_name: str, lookup=None):
-    """(one-query cell kernel, its output schema as a Spark ``StructType``):
-    wide partial rows, or pixel rows, after ``aoi_id``, ``cell_id`` and
-    ``_ms``."""
-    kernel = zonal.make_cell_kernel(query, env.to_json(), grid_name, lookup)
-    return kernel, from_arrow_schema(kernel.schema)
-
-
-def build_multi_partials_with_lookup(
-    images: DataFrame,
-    lookup,
-    salted: dict,
-    queries: list,  # [ZonalQuery] — aggregate-mode, single-grid
-    env: DataEnvironment,
-    grid_name: str,
-    colocated: bool = False,
-    on_driver: bool = False,
-) -> DataFrame:
-    """FUSED cell-kernel plan: one scan + decode + per-(aoi, cell)
-    rasterize serving every query of a batch (zonal.make_multi_cell_kernel).
-    Output rows are NARROW: ``_q`` tags the owning query and ``vals``
-    packs exactly that query's partial values (``partial_columns``
-    order) as one array<double>; split per query with
-    :func:`split_multi_partials`."""
-    spark = images.sparkSession
-    cell_ids = list(lookup.value.keys())
-    union_layers: list = []
-    for q in queries:
-        for n in env.source_layer_names(q.layer_names()):
-            if n not in union_layers:
-                union_layers.append(n)
-    if any(env.get_layer(n).grid != grid_name for n in union_layers):
-        raise ValueError("fused execution requires a single-grid query set")
-
-    imgs = _prune_cells(_tile_rows(images, env, union_layers, grid_name), cell_ids)
-    fill_cells = cell_ids if any(q.base_layer == FROM_DATA for q in queries) else None
-
-    kernel = zonal.make_multi_cell_kernel(queries, env.to_json(), grid_name, lookup)
-    return _dispatch_cell_plan(
-        spark, imgs, fill_cells, salted, kernel, from_arrow_schema(kernel.schema),
-        colocated, on_driver,
-    )
-
-
 def split_multi_partials(partials: DataFrame, qi: int, query: ZonalQuery) -> DataFrame:
-    """Project query ``qi``'s rows and columns back out of the fused
-    narrow partial frame: filter on the ``_q`` tag, then unpack the
-    ``vals`` array positionally into the query's named partial columns
-    (the result feeds :func:`finalize_partials` unchanged). Packed
-    values are all-double; the cast restores each column's single-path
-    type (count partials are integral doubles, the cast is exact; null
-    elements — empty-group min/max — stay NULL)."""
-    cols = [F.col("aoi_id"), F.col("cell_id"), F.col("_ms")] + [
-        F.col("vals").getItem(j).cast(t).alias(n)
-        for j, (n, t) in enumerate(zonal.partial_columns(query))
-    ]
-    return partials.filter(F.col("_q") == qi).select(*cols)
+    """Project query ``qi``'s rows and columns back out of the narrow
+    kernel frame: filter on the ``_q`` tag, then unpack the ``vals`` array
+    positionally into the query's named columns (its partial columns,
+    which :func:`finalize_partials` takes, or its pixel columns). Packed
+    values are all-double; the cast restores each partial column's type
+    (count partials are integral doubles, the cast is exact; null
+    elements — empty-group min/max — stay NULL). SQL strings keep it to
+    one py4j round trip per call (see :func:`_in_long_set`)."""
+    cols = [f"CAST(vals[{j}] AS {t}) AS `{n}`" for j, (n, t) in enumerate(zonal._out_columns(query))]
+    return partials.filter(f"_q = {int(qi)}").selectExpr("aoi_id", "cell_id", "_ms", *cols)
 
 
 class ZonalResultSet(dict):
     """{name: result DataFrame} plus an EXPLICIT cleanup handle for the
-    fused execution's shared state (the persisted partial frame and, when
-    this call built it, the AOI-index broadcast). DataFrame-attribute
-    stamping is fragile — the attribute vanishes after any further
-    transformation — so the handle lives on the returned mapping itself.
-    Use as a context manager, or call :meth:`close` after materializing
-    the results; on the non-fused fallback close() is a no-op."""
+    query set's shared state (the persisted partial frame and the
+    AOI-index broadcasts this call built). DataFrame-attribute stamping is
+    fragile — the attribute vanishes after any further transformation —
+    so the handle lives on the returned mapping itself. Use as a context
+    manager, or call :meth:`close` after materializing the results."""
 
-    def __init__(self, results, partials=None, aoi_index=None, owns_index=False):
+    def __init__(self, results, partials=None, indexes=()):
         super().__init__(results)
         self._partials = partials
-        self._aoi_index = aoi_index
-        self._owns_index = owns_index
+        self._indexes = list(indexes)
 
     def materialize(self, writer=None, parallel: bool = True) -> None:
         """Drive every member's final aggregation, CONCURRENTLY by
@@ -946,9 +817,9 @@ class ZonalResultSet(dict):
         if self._partials is not None:
             self._partials.unpersist()
             self._partials = None
-        if self._owns_index and self._aoi_index is not None:
-            self._aoi_index.unpersist()
-        self._aoi_index = None
+        for idx in self._indexes:
+            idx.unpersist()
+        self._indexes = []
 
     def __enter__(self) -> "ZonalResultSet":
         return self
@@ -967,93 +838,109 @@ def run_zonal_queries(
     strategy: str | None = None,
     aoi_index: "AoiIndex | None" = None,
 ) -> "dict[str, DataFrame]":
-    """Execute a WHOLE query set over one AOI batch in ONE fused pass —
-    the reference's request shape (each analysis request runs several
-    canned queries over the same geostore list, reference lambdas run
-    them serially). The scan, tile decode, and per-(aoi, cell) rasterize
-    are shared across the set; the fused partial frame is cached so each
-    query's final aggregation reads it without re-running the kernel.
+    """Execute a WHOLE query set over one AOI batch — the reference's
+    request shape (each analysis request runs several canned queries over
+    the same geostore list, reference lambdas run them serially) — and
+    the engine's one zonal executor (:func:`run_zonal_query` runs a
+    one-member set).
 
-    Falls back to per-query :func:`run_zonal_query` when the set cannot
-    fuse (pixel-select queries, multigrid layers, or an AOI batch over
-    the broadcast bound). Returns a :class:`ZonalResultSet` — a plain
-    {name: result DataFrame} mapping whose ``close()`` (or context-manager
-    exit) releases the fused partial cache and, when this call built it,
-    the AOI-index broadcast."""
-    qlist = list(queries.values())
-    names = list(queries.keys())
-    # value-rollup members (percentile/median/mode/count_distinct) fuse
+    The set runs one kernel pass per target grid
+    (:func:`resolve_target_grid`): the AOI batch is read and enumerated
+    once per grid, and the scan, tile decode and per-(aoi, cell)
+    rasterize are shared by the grid's queries. Within the driver bounds
+    the AOI-cell lookup is ``aoi_index`` when it was prepared on the grid
+    (:func:`prepare_aoi_index` otherwise); over them one
+    :func:`aoi_cells` frame feeds one salted cogroup for the grid's
+    queries (module docstring, "Over the bounds"). The partial frame is
+    persisted when two or more members read it off a distributed plan, so
+    each member's final aggregation reads it without re-running the
+    kernel.
+
+    ``strategy`` picks the kernel stage's physical plan while the AOI
+    batch is within the driver bounds:
+
+    - ``"cell"``: one shuffle of the tile rows clustered by ``cell_id``;
+      each cell is decoded ONCE and its AOIs (from a broadcast lookup) are
+      looped in the kernel, with explicit salting (tile rows duplicated
+      per salt) for cells hotter than MAX_AOIS_PER_TASK AOIs.
+    - ``"colocated"``: ZERO shuffle of tile bytes — requires the images
+      input to be cell-sorted on disk (sources.images.write_images_cell_sorted);
+      the kernel streams over the scan with mapInArrow and regroups cells
+      within each partition. Only partial-aggregate rows ever shuffle.
+      Hot cells are diverted to the salted cell plan.
+    - ``None``/``"auto"``: ``"colocated"`` for a frame read off a
+      cell-sorted layout, ``"cell"`` otherwise; a small aggregate set
+      runs the kernel on the driver instead (module docstring, "The
+      driver route").
+
+    A grid whose queries read layers stored on another grid always takes
+    the cell plan. Returns a :class:`ZonalResultSet` — a plain {name:
+    result DataFrame} mapping whose ``close()`` (or context-manager exit)
+    releases the persisted partial frame and the AOI-index broadcasts this
+    call built."""
+    if strategy not in (None, "auto", "cell", "colocated"):
+        raise ValueError(f"unknown strategy {strategy!r}; use auto, cell or colocated")
+    # value-rollup members (percentile/median/mode/count_distinct) run
     # through their PLAN REWRITE: the inner group-by-value count query
     # joins the shared kernel pass (its partials are the same bincount
-    # rows the fused kernel already produces) and the relational finisher
-    # runs on that member's finalized frame afterwards
+    # rows the kernel already produces) and the relational finisher runs
+    # on that member's finalized frame afterwards
     finishers: "dict[str, object]" = {}
     exec_list: "list[ZonalQuery]" = []
-    for name, q in zip(names, qlist):
+    for name, q in queries.items():
         if any(a.func in VALUE_ROLLUP_FUNCS for a in q.aggregates):
-            inner, fin = _rollup_plan(q, env)
-            finishers[name] = fin
-            exec_list.append(inner)
-        else:
-            exec_list.append(q)
-    grids = {resolve_target_grid(q, env, grid_name) for q in exec_list}
-    fusable = (
-        len(grids) == 1
-        and not any(q.select_pixels for q in exec_list)
-        and strategy in (None, "auto", "cell", "colocated")
-    )
-    target = grids.pop() if len(grids) == 1 else None
-    if fusable:
-        union_layers = {
-            n for q in exec_list for n in env.source_layer_names(q.layer_names())
-        }
-        fusable = all(env.get_layer(n).grid == target for n in union_layers)
-    idx = aoi_index
-    if fusable and idx is not None and idx.grid_name != target:
+            q, finishers[name] = _rollup_plan(q, env)
+        exec_list.append(q)
+    by_grid: "dict[str, list[int]]" = {}
+    for i, q in enumerate(exec_list):
+        by_grid.setdefault(resolve_target_grid(q, env, grid_name), []).append(i)
+    if aoi_index is not None and aoi_index.grid_name not in by_grid:
         raise ValueError(
-            f"aoi_index was prepared on grid {idx.grid_name!r} but the query "
-            f"set resolves to {target!r}; prepare one per target grid"
+            f"aoi_index was prepared on grid {aoi_index.grid_name!r} but the "
+            f"queries resolve to {', '.join(map(repr, by_grid))}; prepare one per target grid"
         )
-    if fusable and idx is None:
-        idx = prepare_aoi_index(spark, aoi_df, target)
-        fusable = idx is not None
-    if not fusable:
-        # per-query fallback: forward the caller's index only to queries
-        # whose resolved grid matches it (mixed-grid sets would otherwise
-        # crash on the single-path grid check)
-        return ZonalResultSet({
-            name: run_zonal_query(
-                spark, images, aoi_df, q, env, grid_name,
-                strategy=strategy,
-                aoi_index=(
-                    aoi_index
-                    if aoi_index is not None
-                    and resolve_target_grid(q, env, grid_name) == aoi_index.grid_name
-                    else None
-                ),
-            )
-            for name, q in queries.items()
-        })
     auto = strategy in (None, "auto")
-    if auto:
-        colocated = bool(getattr(images, "_gfw_cell_sorted", False))
-    else:
-        colocated = strategy == "colocated"
-    on_driver = auto and _fits_driver_kernel(idx, target)
-    partials = build_multi_partials_with_lookup(
-        images, idx.lookup, idx.salted, exec_list, env, target,
-        colocated=colocated, on_driver=on_driver,
-    )
-    if not on_driver:  # a driver-built frame is already local
+    # frames read straight off a cell-sorted layout (sources.images
+    # sidecar) default to the zero-shuffle colocated scan
+    colocated = strategy == "colocated" or (auto and getattr(images, "_gfw_cell_sorted", False))
+    frames, built, n_distributed = [], [], 0
+    place: "dict[int, tuple[int, bool]]" = {}  # exec_list index -> (_q tag, bounded)
+    for target, qis in by_grid.items():
+        grid_queries = [exec_list[i] for i in qis]
+        idx = aoi_index
+        if idx is None or idx.grid_name != target:
+            idx = prepare_aoi_index(spark, aoi_df, target)
+            if idx is not None:
+                built.append(idx)
+        if idx is None:
+            part = _build_partials_over_bound(images, aoi_cells(aoi_df, target), grid_queries, env, target)
+            on_driver = False
+        else:
+            single_grid = all(env.get_layer(n).grid == target for n in _source_layers(grid_queries, env))
+            on_driver = (
+                auto and not any(q.select_pixels for q in grid_queries)
+                and _fits_driver_kernel(idx, target)
+            )
+            part = build_partials_with_lookup(
+                images, idx.lookup, idx.salted, grid_queries, env, target,
+                colocated=colocated and single_grid, on_driver=on_driver,
+            )
+        # a grid's kernel tags its queries 0.., shifted past earlier grids'
+        offset = len(place)
+        frames.append(part.withColumn("_q", F.col("_q") + offset) if offset else part)
+        place.update({i: (offset + j, idx is not None) for j, i in enumerate(qis)})
+        n_distributed += 0 if on_driver else len(qis)
+    partials = reduce(DataFrame.unionByName, frames)
+    persisted = n_distributed >= 2
+    if persisted:
         partials = partials.persist()
     out: "dict[str, DataFrame]" = {}
-    for qi, (name, q) in enumerate(zip(names, exec_list)):
-        res = finalize_partials(split_multi_partials(partials, qi, q), q, env, bounded=True)
+    for i, (name, q) in enumerate(zip(queries, exec_list)):
+        k, bounded = place[i]
+        part = split_multi_partials(partials, k, q)
+        res = _finalize_pixels(part, q) if q.select_pixels else finalize_partials(part, q, env, bounded)
         out[name] = finishers[name](res) if name in finishers else res
-    return ZonalResultSet(
-        out, partials=None if on_driver else partials, aoi_index=idx,
-        owns_index=aoi_index is None,
-    )
+    return ZonalResultSet(out, partials=partials if persisted else None, indexes=built)
 
 
 def _salted_cell_plan(spark, imgs: DataFrame, salted: dict, kernel, schema) -> DataFrame:
@@ -1132,8 +1019,9 @@ def _finalize_aggregates(
     group_cols = ["aoi_id"]
     for g in query.group_layers:
         if g in query.isoweek_layers:
-            # isoweek is pushed down into the kernel (zonal._isoweek_pushdown);
-            # partials already carry the (isoyear, isoweek) key columns
+            # isoweek is folded into the kernel's group key
+            # (zonal._CellAggContext); partials already carry the
+            # (isoyear, isoweek) key columns
             group_cols += [f"{g}__isoyear", f"{g}__isoweek"]
         else:
             group_cols.append(g)

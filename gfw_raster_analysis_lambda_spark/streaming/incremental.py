@@ -88,6 +88,16 @@ def _aoi_lookup(spark: SparkSession, aoi_df: DataFrame, grid_name: str):
     return idx.lookup, idx.salted
 
 
+def _partials(images: DataFrame, lookup, salted: dict, query: ZonalQuery,
+              env: DataEnvironment, grid_name: str) -> DataFrame:
+    """The query's kernel partials over ``lookup``, in its wide partial
+    columns (the stream's on-disk layout)."""
+    return planner.split_multi_partials(
+        planner.build_partials_with_lookup(images, lookup, salted, [query], env, grid_name),
+        0, query,
+    )
+
+
 def _touched_target_cells(touched: list, grid_name: str) -> set:
     """Map the micro-batch's touched cell ids onto the QUERY grid.
 
@@ -172,7 +182,7 @@ def incremental_zonal(
         imgs = with_derived_keys(
             spark.read.schema(IMAGES_SCHEMA_DDL).parquet(images_dir)
         )
-        partials = planner.build_partials_with_lookup(
+        partials = _partials(
             imgs, sub_lookup, sub_salted, query, env, grid_name
         ).withColumn("_pcell", F.col("cell_id"))
         # sentinel row per recomputed cell: guarantees the cell's partition
@@ -245,7 +255,7 @@ def read_incremental_result(
         # any AOI): the current result is empty — or, FROM data, entirely
         # the synthesized missing-cell rows below
         empty = with_derived_keys(spark.createDataFrame([], IMAGES_SCHEMA_DDL))
-        stored = planner.build_partials_with_lookup(
+        stored = _partials(
             empty, spark.sparkContext.broadcast({}), {}, query, env, grid_name
         ).withColumn("_pcell", F.col("cell_id"))
     partials = stored.filter(F.col("aoi_id").isNotNull()).drop("_pcell")
@@ -265,7 +275,7 @@ def read_incremental_result(
             empty = with_derived_keys(
                 spark.createDataFrame([], IMAGES_SCHEMA_DDL)
             )
-            synth = planner.build_partials_with_lookup(
+            synth = _partials(
                 empty, spark.sparkContext.broadcast(missing), {},
                 query, env, grid_name,
             )

@@ -43,7 +43,8 @@ def main() -> None:
                          "of writing --output")
     ap.add_argument("--format", default="parquet", choices=["parquet", "csv", "json"])
     ap.add_argument("--strategy", default=None, choices=["auto", "cell", "colocated"],
-                    help="kernel-stage plan; default: the planner's auto choice")
+                    help="kernel-stage plan; default: the planner's auto choice "
+                         "(a --checkpoint-dir run resumes through the cogroup route)")
     ap.add_argument("--checkpoint-dir", default=None)
     ap.add_argument("--csv-output", default=None,
                     help="also write a CSV copy (reference %%.5f float format)")
@@ -58,10 +59,7 @@ def main() -> None:
     from gfw_raster_analysis_lambda_spark.checkpoint import run_zonal_checkpointed
     from gfw_raster_analysis_lambda_spark.plans.sql_frontend import parse_raster_sql
     from gfw_raster_analysis_lambda_spark.sources.catalog import DataEnvironment
-    from gfw_raster_analysis_lambda_spark.sources.images import (
-        images_cell_sorted,
-        read_images,
-    )
+    from gfw_raster_analysis_lambda_spark.sources.images import read_images
 
     spark = SparkSession.builder.appName("zonal_submit").getOrCreate()
     with open(args.env) as f:
@@ -97,11 +95,7 @@ def main() -> None:
     if args.checkpoint_dir:
         query = parse_raster_sql(args.sql, env)
         result = run_zonal_checkpointed(
-            spark, images, aoi, query, env, args.grid, args.checkpoint_dir,
-            colocated=(
-                args.strategy == "colocated"
-                or (args.strategy in (None, "auto") and images_cell_sorted(args.images))
-            ),
+            spark, images, aoi, query, env, args.grid, args.checkpoint_dir
         )
     else:
         result = zonal_statistics(

@@ -108,47 +108,104 @@ def test_upsample_to_cell_value_mapping(seed, xf, yf):
     assert fine[i, j] == coarse[(yf % 2) * 32 + i // 2, (xf % 2) * 32 + j // 2]
 
 
-@given(seed=st.integers(0, 2**31 - 1), n=st.integers(0, 300))
-@settings(max_examples=40, deadline=None)
-def test_regroup_matches_pandas_groupby(seed, n):
-    """zonal._regroup (factorize+bincount/fmin/fmax) must agree with pandas
-    groupby().agg for every agg kind it claims, including Float64 NaN
-    min/max semantics (skip-NaN, all-NaN -> NA)."""
+class _Env:
+    """The one environment lookup the aggregation context makes: an
+    isoweek layer whose raw values are days since 1970-01-01."""
+
+    def get_layer(self, name):
+        return object()
+
+
+@given(
+    seed=st.integers(0, 2**31 - 1),
+    n=st.integers(2, 300),
+    groups=st.sampled_from(["none", "int", "float", "wide", "isoweek"]),
+    density=st.sampled_from([0.0, 0.4, 1.0]),
+    compat_avg=st.booleans(),
+)
+@settings(max_examples=60, deadline=None)
+def test_cell_agg_context_matches_pandas_groupby(seed, n, groups, density, compat_avg):
+    """zonal._CellAggContext.run — the kernel's one aggregation path —
+    equals pandas groupby over the masked pixels for every partial it
+    emits: NaN in the float aggregate layer skipped per aggregate (a
+    group whose values are all NaN has NULL MIN/MAX and a zero AVG
+    count), integer, non-integer and isoweek group keys, a packed key
+    domain over 2^20 (dictionary-encoded), empty masks and compat AVG."""
     import pandas as pd
 
     from gfw_raster_analysis_lambda_spark.operators import zonal
+    from gfw_raster_analysis_lambda_spark.plans.ir import Aggregate, ZonalQuery
 
     rng = np.random.default_rng(seed)
-    df = pd.DataFrame({
-        "aoi_id": rng.choice(["a", "b", "c", "d"], n),
-        "y": rng.integers(2014, 2018, n),
-        "w": rng.integers(1, 54, n),
-        "s": rng.normal(size=n),
-        "cnt": rng.integers(0, 9, n).astype(np.int64),
-        "mn": pd.array(
-            np.where(rng.random(n) < 0.3, np.nan, rng.normal(size=n)),
-            dtype="Float64",
+    values = {"v": np.where(rng.random(n) < 0.3, np.nan, rng.normal(size=n))}
+    group_layers, iso = (), ()
+    if groups == "int":
+        values["g"] = rng.integers(0, 4, n).astype(np.uint8)
+        values["v"][values["g"] == 3] = np.nan  # an all-NaN group
+        group_layers = ("g",)
+    elif groups == "float":
+        values["g"] = rng.choice([0.5, 1.25, -2.75, 3.0], n)
+        group_layers = ("g",)
+    elif groups == "wide":
+        values["g"] = rng.integers(0, 2000, n).astype(np.int32)
+        values["h"] = rng.integers(0, 1000, n).astype(np.int32)
+        values["g"][0], values["h"][0], values["g"][-1], values["h"][-1] = 0, 0, 1999, 999
+        group_layers = ("g", "h")
+    elif groups == "isoweek":
+        values["d"] = rng.integers(18000, 19500, n).astype(np.uint16)
+        group_layers = iso = ("d",)
+    q = ZonalQuery(
+        base_layer="v",
+        group_layers=group_layers,
+        aggregates=(
+            Aggregate("count", None, "n"),
+            Aggregate("sum", "v", "s"),
+            Aggregate("avg", "v", "a"),
+            Aggregate("min", "v", "lo"),
+            Aggregate("max", "v", "hi"),
+            Aggregate("sum", "area__ha", "ha"),
         ),
-        "mx": pd.array(
-            np.where(rng.random(n) < 0.95, np.nan, rng.normal(size=n)),
-            dtype="Float64",
-        ),
-    })
-    gc = ["aoi_id", "y", "w"]
-    am = {"s": "sum", "cnt": "sum", "mn": "min", "mx": "max"}
-    got = zonal._regroup(df, gc, am).sort_values(gc).reset_index(drop=True)
-    exp = df.groupby(gc, as_index=False).agg(am).sort_values(gc).reset_index(drop=True)
-    assert len(got) == len(exp)
-    for c in gc:
-        assert got[c].tolist() == exp[c].tolist()
-    np.testing.assert_allclose(
-        got["s"].to_numpy(float), exp["s"].to_numpy(float), rtol=1e-12
+        isoweek_layers=iso,
+        compat_avg=compat_avg,
     )
-    assert got["cnt"].tolist() == exp["cnt"].tolist()
-    for c in ("mn", "mx"):
-        g = got[c].to_numpy(dtype="float64", na_value=np.nan)
-        e = exp[c].to_numpy(dtype="float64", na_value=np.nan)
-        np.testing.assert_allclose(g, e, rtol=1e-12, equal_nan=True)
+    mean_area = 0.37
+    ctx = zonal._CellAggContext(q, values, mean_area, _Env())
+    if groups == "wide":
+        assert ctx.table is not None  # 2000 x 1000 keys: dictionary-encoded
+    mask = rng.random(n) < density
+    got = pd.DataFrame(ctx.run(mask))
+
+    df = pd.DataFrame({k: v[mask] for k, v in values.items()})
+    keys = list(group_layers)
+    if iso:
+        cal = pd.to_datetime(df.pop("d").astype(np.int64), unit="D").dt.isocalendar()
+        df["d__isoyear"], df["d__isoweek"] = cal.year.astype(np.int64), cal.week.astype(np.int64)
+        keys = ["d__isoyear", "d__isoweek"]
+    n_masked = int(mask.sum())
+    if keys:
+        grp = df.groupby(keys)["v"]
+        exp = pd.DataFrame({"n": grp.size(), "s": grp.sum(), "sum": grp.sum(), "cnt": grp.count(),
+                            "lo": grp.min(), "hi": grp.max()}).reset_index()
+    else:
+        v = df["v"]
+        exp = pd.DataFrame({"n": [n_masked], "s": [v.sum()], "sum": [v.sum()], "cnt": [v.count()],
+                            "lo": [v.min()], "hi": [v.max()]})
+    exp["ha"] = exp["n"] * mean_area
+    if compat_avg:
+        exp["a"] = exp.pop("sum") / max(n_masked, 1)
+        exp.pop("cnt")
+    else:
+        exp = exp.rename(columns={"sum": "a__sum", "cnt": "a__cnt"})
+    assert sorted(got.columns) == sorted(exp.columns)
+    assert len(got) == len(exp)
+    if not len(exp):
+        return
+    got = got.sort_values(keys).reset_index(drop=True) if keys else got
+    for c in exp.columns:
+        np.testing.assert_allclose(
+            got[c].to_numpy(dtype=float), exp[c].to_numpy(dtype=float),
+            rtol=1e-12, atol=1e-12, equal_nan=True, err_msg=c,
+        )
 
 
 @given(

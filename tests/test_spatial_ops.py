@@ -197,21 +197,77 @@ def test_checkpoint_resume_colocated(spark, corpus, tmp_path):
     )
     ck = str(tmp_path / "ck")
     first = run_zonal_checkpointed(
-        spark, images, aoi_all.limit(2), q, env, fixtures.GRID.name, ck, colocated=True
+        spark, images, aoi_all.limit(2), q, env, fixtures.GRID.name, ck
     ).toPandas()
     # resume over the full AOI set: committed pairs must not recompute or
     # double-count; the result covers all AOIs
     full = run_zonal_checkpointed(
-        spark, images, aoi_all, q, env, fixtures.GRID.name, ck, colocated=True
+        spark, images, aoi_all, q, env, fixtures.GRID.name, ck
     ).toPandas()
     assert set(first["aoi_id"]).issubset(set(full["aoi_id"]))
     direct = run_zonal_checkpointed(
         spark, images, aoi_all, q, env, fixtures.GRID.name, str(tmp_path / "ck2"),
-        colocated=True,
     ).toPandas()
     a = full.sort_values(["aoi_id", "tcl_year"]).reset_index(drop=True)
     b = direct.sort_values(["aoi_id", "tcl_year"]).reset_index(drop=True)
     assert a["n"].tolist() == b["n"].tolist()
+
+
+@pytest.mark.parametrize("fn", ["run_zonal_checkpointed", "run_zonal_checkpointed_snapshot"])
+def test_checkpoint_collects_no_aoi_cells(spark, corpus, tmp_path, monkeypatch, fn):
+    """Both checkpoint functions run their resume remainder through the
+    cogroup route: no bounded AOI read, no driver-side enumeration and no
+    collect of a frame holding geometry, so an AOI batch over every driver
+    bound resumes too. Committed pairs are still skipped and the results
+    equal the oracle."""
+    from pyspark.sql import DataFrame
+
+    from gfw_raster_analysis_lambda_spark.plans import planner
+
+    images = read_images(spark, corpus["images"])
+    env = fixtures.fixture_environment()
+    aois = fixtures.fixture_aois()[:2]
+    q = ZonalQuery(
+        base_layer="tcl_year",
+        group_layers=("tcl_year",),
+        aggregates=(Aggregate("sum", "area__ha", "a"), Aggregate("count", None, "n")),
+    )
+
+    def refuse(*a, **k):
+        raise AssertionError("checkpoint run read or enumerated the AOI batch on the driver")
+
+    for name in ("read_bounded", "prepare_aoi_index", "_aoi_lookup_from_aois"):
+        monkeypatch.setattr(planner, name, refuse)
+    orig_collect = DataFrame.collect
+
+    def collect(self):
+        assert "geom_wkb" not in self.columns, "collected a frame holding geometry"
+        return orig_collect(self)
+
+    monkeypatch.setattr(DataFrame, "collect", collect)
+    todo = []
+    orig_over = planner._build_partials_over_bound
+
+    def spy(images_, cells, *a, **k):
+        todo.append(cells)
+        return orig_over(images_, cells, *a, **k)
+
+    monkeypatch.setattr(planner, "_build_partials_over_bound", spy)
+    run = getattr(checkpoint, fn)
+    ck = str(tmp_path / "ck")
+    for i, batch in enumerate((aois[:1], aois, aois)):
+        aoi_df = spark.createDataFrame(batch, "aoi_id string, geom_wkb binary")
+        got = run(spark, images, aoi_df, q, env, GRID_NAME, ck, run_id=f"r{i}").toPandas()
+        exp = oracle.run_oracle(q, env, batch)
+        assert_frames_match(
+            got.sort_values(["aoi_id", "tcl_year"]).reset_index(drop=True),
+            exp.sort_values(["aoi_id", "tcl_year"]).reset_index(drop=True),
+        )
+    # run r1 computed only the new AOI's pairs; run r2 computed nothing
+    assert len(todo) == 2
+    pairs = todo[1].select("aoi_id", "cell_id").collect()
+    n_cells = len(G.polygon_to_cells(fixtures.GRID, geo.wkb_loads(aois[1][1])))
+    assert {r["aoi_id"] for r in pairs} == {aois[1][0]} and len(pairs) == n_cells
 
 
 @pytest.mark.slow

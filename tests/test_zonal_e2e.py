@@ -403,15 +403,28 @@ def test_strategy_parity_pixel_mode(spark, tables, env):
     )
 
 
-def test_lookup_paths_agree(spark, tables):
-    from gfw_raster_analysis_lambda_spark.plans import planner
-
+def test_lookup_paths_agree(spark, tables, monkeypatch):
+    """The driver's broadcast lookup (prepare_aoi_index) and the cogroup
+    route's salted AOI-cell frame (_salted_aoi_cells) agree per cell on
+    the AOI list, n_salt and each AOI's salt slot (aois[s::n_salt]). One
+    AOI per task salts every cell shared by several AOIs."""
     _, aoi_df = tables
-    rows = aoi_df.select("aoi_id", "geom_wkb").collect()
-    b1, s1 = planner._aoi_lookup_from_aois(spark, rows, GRID_NAME, 64)
-    b2, s2 = planner._aoi_lookup(spark, planner.aoi_cells(aoi_df, GRID_NAME), 64)
-    assert s1 == s2
-    assert b1.value == b2.value
+    monkeypatch.setattr(planner, "MAX_AOIS_PER_TASK", 1)
+    idx = planner.prepare_aoi_index(spark, aoi_df, GRID_NAME, max_aois_per_task=1)
+    frame = planner._salted_aoi_cells(planner.aoi_cells(aoi_df, GRID_NAME))
+    by_cell: dict = {}
+    for r in frame.select("cell_id", "aoi_id", "_n_salt", "_salt").collect():
+        by_cell.setdefault(r["cell_id"], []).append((r["aoi_id"], r["_n_salt"], r["_salt"]))
+    lookup = idx.lookup.value
+    assert set(by_cell) == set(lookup)
+    assert max(n for n, _ in lookup.values()) > 1
+    for cell, (n_salt, aois) in lookup.items():
+        ids = [a for a, _ in aois]
+        rows = sorted(by_cell[cell])
+        assert [a for a, _, _ in rows] == ids, cell
+        assert {n for _, n, _ in rows} == {n_salt}, cell
+        for a, _, slot in rows:
+            assert a in [x for x, _ in aois[slot::n_salt]], (cell, a)
 
 
 # 15. finest-grid co-registration: biomass lives on 4/512 (2x coarser);
@@ -549,9 +562,9 @@ def test_geom_cache_concurrent_requests(monkeypatch):
     assert zonal._GEOM_CACHE_BYTES == held
 
 
-# 16. generic-kernel path (NaN aggregate layer) + isoweek groups + a
-# zero-masked AOI sharing a cell with a nonzero AOI: the empty AOI's
-# column set must match the raw group names the nonzero AOIs emit
+# 16. NaN aggregate layer (once the kernel's generic path) + isoweek
+# groups + a zero-masked AOI sharing a cell with a nonzero AOI: the empty
+# AOI's column set must match the group names the nonzero AOIs emit
 # (regression: mixed g vs g__isoyear/g__isoweek keys crashed the task)
 def test_generic_path_isoweek_zero_masked_aoi(spark, tables, env):
     from gfw_raster_analysis_lambda_spark.functions import geometry as geo
@@ -559,7 +572,7 @@ def test_generic_path_isoweek_zero_masked_aoi(spark, tables, env):
     q = ZonalQuery(
         base_layer="alert_date_conf",
         group_layers=("alert_date",),
-        aggregates=(Aggregate("sum", "emissions", "em_sum"),),  # NaN -> generic
+        aggregates=(Aggregate("sum", "emissions", "em_sum"),),  # NaN aggregate layer
         isoweek_layers=("alert_date",),
     )
     # both AOIs intersect the same fixture cell (lon 10..10.25, lat 20.75..21);
@@ -678,7 +691,7 @@ def test_auto_fallback_over_broadcast_limit(spark, tables, env, monkeypatch):
     def no_collect(*a, **k):
         raise AssertionError("over-bound batch collected the cell map to the driver")
 
-    for name in ("_aoi_lookup", "_with_missing_cells", "_driver_cell_plan"):
+    for name in ("_with_missing_cells", "_driver_cell_plan"):
         monkeypatch.setattr(planner, name, no_collect)
     df = run_zonal_query(spark, images, aoi_df, q, env, GRID_NAME, strategy="cell")
     got = df.toPandas().reset_index(drop=True)
@@ -914,9 +927,9 @@ def test_minmax_empty_groups_are_null(spark, tables, sorted_images, env, monkeyp
     exp = oracle.run_oracle(q, genv, aois)
     assert exp["top"].isna().any() and exp["top"].notna().any()
     idx = planner.prepare_aoi_index(spark, aoi_df, GRID_NAME)
-    lo = [r["lo"] for r in planner.build_partials_with_lookup(
-        images, idx.lookup, idx.salted, q, genv, GRID_NAME
-    ).collect()]
+    lo = [r["lo"] for r in planner.split_multi_partials(planner.build_partials_with_lookup(
+        images, idx.lookup, idx.salted, [q], genv, GRID_NAME
+    ), 0, q).collect()]
     # em_north's groups are empty in some cells only: NULL partials, no NaN
     assert None in lo and any(v is not None for v in lo)
     assert not any(isinstance(v, float) and np.isnan(v) for v in lo)
@@ -982,9 +995,9 @@ def test_fused_set_with_rollups_shares_kernel(spark, tables, env, monkeypatch):
         for name, q in qs.items()
     }
     # spy the kernel entrypoints: the whole set must run ONE fused kernel
-    # pass — no per-query single-path kernel builds behind the scenes
+    # pass — no per-query kernel builds behind the scenes
     calls = {"multi": 0, "single": 0}
-    orig_multi = planner.build_multi_partials_with_lookup
+    orig_multi = planner.build_partials_with_lookup
 
     def spy_multi(*a, **k):
         calls["multi"] += 1
@@ -992,10 +1005,9 @@ def test_fused_set_with_rollups_shares_kernel(spark, tables, env, monkeypatch):
 
     def spy_single(*a, **k):
         calls["single"] += 1
-        raise AssertionError("single-path kernel build inside fused run")
+        raise AssertionError("over-bound kernel build inside a within-bound run")
 
-    monkeypatch.setattr(planner, "build_multi_partials_with_lookup", spy_multi)
-    monkeypatch.setattr(planner, "build_partials_with_lookup", spy_single)
+    monkeypatch.setattr(planner, "build_partials_with_lookup", spy_multi)
     monkeypatch.setattr(planner, "_build_partials_over_bound", spy_single)
     # the distributed kernel stage, whose partial frame is cached and shared
     monkeypatch.setattr(planner, "DRIVER_KERNEL_PX_LIMIT", 0)
@@ -1010,6 +1022,50 @@ def test_fused_set_with_rollups_shares_kernel(spark, tables, env, monkeypatch):
     n_kernel_rows = fused._partials.count()
     assert n_kernel_rows > 0
     fused.close()
+
+
+def test_over_bound_set_enumerates_aois_once(spark, tables, env, monkeypatch):
+    """Over the driver bounds a query set of grouped, FROM data, isoweek
+    and rollup members runs polygon->cells once (one aoi_cells frame feeds
+    one salted cogroup) and every member, finalized from the one persisted
+    partial frame, equals the oracle."""
+    from gfw_raster_analysis_lambda_spark.plans.planner import run_zonal_queries
+
+    images, aoi_df = tables
+    aois = fixtures.fixture_aois()[:3]
+    aoi_df = aoi_df.filter(aoi_df.aoi_id.isin([a[0] for a in aois]))
+    qs = {
+        "grouped": _parity_query(),
+        "from_data": ZonalQuery(
+            base_layer="data",
+            aggregates=(Aggregate("sum", "area__ha", "area_ha"), Aggregate("count", None, "n")),
+        ),
+        "isoweek": ZonalQuery(
+            base_layer="alert_date_conf",
+            group_layers=("alert_date",),
+            aggregates=(Aggregate("count", None, "alert_count"),),
+            isoweek_layers=("alert_date",),
+        ),
+        "p50": ZonalQuery(
+            base_layer="ttc_percent",
+            aggregates=(Aggregate("percentile", "ttc_percent", "p50", param=0.5),),
+        ),
+    }
+    calls = []
+    orig = planner.aoi_cells
+
+    def spy(*a, **k):
+        calls.append(a)
+        return orig(*a, **k)
+
+    monkeypatch.setattr(planner, "aoi_cells", spy)
+    monkeypatch.setattr(planner, "BROADCAST_CELL_LIMIT", 0)
+    with run_zonal_queries(spark, images, aoi_df, qs, env, GRID_NAME) as res:
+        assert len(calls) == 1
+        assert res._partials is not None and res._partials.storageLevel.useMemory
+        for name, q in qs.items():
+            assert_frames_match(res[name].toPandas(), oracle.run_oracle(q, env, aois))
+    assert len(calls) == 1
 
 
 def test_fused_disjoint_layer_cells_parity(spark, env):
@@ -1252,7 +1308,6 @@ def test_wkb_bytes_cap_routes_distributed(spark, tables, env, monkeypatch):
         raise AssertionError("over-bound WKB batch was enumerated on the driver")
 
     monkeypatch.setattr(planner, "_aoi_lookup_from_aois", no_enum)
-    monkeypatch.setattr(planner, "_aoi_lookup", no_enum)  # cells-collect path too
     got = (
         run_zonal_query(spark, images, aoi_df, q, env, GRID_NAME, strategy="cell")
         .toPandas().reset_index(drop=True)
