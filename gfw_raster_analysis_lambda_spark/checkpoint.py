@@ -90,6 +90,10 @@ def run_zonal_checkpointed(
         if done is not None
         else cells
     )
+    # the emptiness check, the cogroup route's salting count and kernel
+    # stage and the done markers all read the remainder: as a local
+    # checkpoint, polygon->cells runs once for all of them
+    todo = todo.localCheckpoint(eager=False)
 
     if not todo.isEmpty():
         new_partials = _new_partials(images, todo, query, env, grid_name, run_id)
@@ -183,7 +187,7 @@ def run_zonal_checkpointed_snapshot(
         )
         if committed is not None
         else cells
-    )
+    ).localCheckpoint(eager=False)  # read 3-4 times, evaluated once
 
     if not todo.isEmpty():
         new_partials = _new_partials(images, todo, query, env, grid_name, run_id)

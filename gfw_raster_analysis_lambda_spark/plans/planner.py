@@ -5,7 +5,7 @@ merge — reference tiling.py + results_store.py) is replaced by one Spark
 plan:
 
   aoi -> polygon_to_cells                           [J1: theta -> equi join]
-      -> AOI-cell lookup per cell, salted when hot  [skew, MAX_AOIS_PER_TASK]
+      -> AOI-cell lookup per cell, salted when hot  [skew, _aois_per_slice]
       -> pruned tile scan clustered by cell_id      [partition-pruned scan]
       -> per-cell kernel over the cell's AOIs       [operators.zonal]
       -> groupBy(aoi_id, group cols).sum            [A6 final merge, Catalyst]
@@ -36,8 +36,9 @@ builds itself (cell lists, the salt dimension, null tile rows) are
 
 Over the bounds (:func:`_build_partials_over_bound`). Nothing is
 collected: polygon->cells runs once for the whole query set in a pandas
-UDF (:func:`aoi_cells`), the AOI-cell rows are salted per cell by a
-window count, the tile rows are replicated per salt of their cell, and
+UDF (:func:`aoi_cells`) whose frame is a local checkpoint, evaluated
+once; the AOI-cell rows are salted per cell by a window count, the tile
+rows are replicated per salt of their cell, and
 ``groupBy(cell_id, _salt).cogroup(...)`` feeds each cell's tiles and AOI
 slice to the kernel. A cell with AOIs but no tiles arrives with an empty
 tile side, which FROM data queries zero-fill. The checkpoint layer runs
@@ -62,6 +63,7 @@ distributed kernel plans, and so do direct callers of
 
 from __future__ import annotations
 
+import math
 from functools import reduce
 
 import numpy as np
@@ -87,7 +89,6 @@ from .driver import local_frame, read_bounded
 from .ir import Aggregate, ZonalQuery
 
 BROADCAST_CELL_LIMIT = 2_000_000  # aoi-cell rows we are happy to broadcast
-MAX_AOIS_PER_TASK = 64  # hot-cell salting threshold (cell kernel AOI loop)
 
 
 def _in_long_set(col: str, ids) -> "F.Column":
@@ -387,8 +388,34 @@ def _fits_driver_kernel(idx: "AoiIndex", grid_name: str) -> bool:
     return True
 
 
+# Hot-cell salting. A cell's kernel work is ``1 + its AOIs`` full-tile
+# passes: every AOI that does not cover the cell rasterizes and aggregates
+# a full mask (tools/profile_kernel.py on the batch workload, seed 1, two
+# runs on a 4-core VM: 1.7-1.9 ms per cell + 0.9-1.1 ms per AOI, r^2
+# 0.96-0.97 over 323 cells). A cell is split only when it would be the
+# kernel stage's straggler; the floor keeps a slice worth a Python task
+# (64 AOIs at ~1.1 ms is about the ~0.07 s one costs).
+MIN_SALT_TARGET = 64
+
+
+def _salt_target(work: int, parallelism: int) -> float:
+    """The most kernel work one slice of a cell may hold: one core's fair
+    share of the stage (``work`` = the batch's cells + AOI-cells, over
+    ``parallelism`` cores), and at least ``MIN_SALT_TARGET``."""
+    return max(MIN_SALT_TARGET, work / parallelism)
+
+
+def _aois_per_slice(work: int, parallelism: int) -> int:
+    """The salting rule of every route: a cell of ``a`` AOIs runs as
+    ``n_salt = ceil(a / per)`` slices ``aois[s::n_salt]``, ``per`` being
+    the value returned here, so that each slice's cost (1 + its AOIs) is
+    within :func:`_salt_target`. A cell whose cost is within the target is
+    never split; a slice holds at least one AOI."""
+    return max(1, math.floor(_salt_target(work, parallelism)) - 1)
+
+
 def _aoi_lookup_from_aois(spark: SparkSession, rows: list, grid_name: str,
-                          max_aois_per_task: int, cell_limit: int | None = None):
+                          cell_limit: int | None = None):
     """Driver-side polygon->cells enumeration — the reference's coordinator
     does exactly this (tiling.py:220-237 enumerates tiles in-process). For
     AOI batches within the broadcast bound this avoids a whole Spark job
@@ -398,8 +425,10 @@ def _aoi_lookup_from_aois(spark: SparkSession, rows: list, grid_name: str,
 
     Returns ``(lookup, salted)``: a broadcast ``{cell_id: (n_salt,
     [(aoi_id, wkb), ...])}`` with each cell's AOIs sorted by id, and the
-    ``{cell_id: n_salt}`` of the hot cells (``n_salt > 1``) whose AOI loop
-    the planner splits across salted replicas.
+    ``{cell_id: n_salt}`` of the hot cells (``n_salt > 1``, by
+    :func:`_aois_per_slice` over the batch's cells + AOI-cells and the
+    session's default parallelism) whose AOI loop the planner splits
+    across salted replicas.
 
     With ``cell_limit`` set, enumeration aborts as soon as the total
     aoi-cell count exceeds it and returns ``(None, None)`` — the caller
@@ -417,11 +446,12 @@ def _aoi_lookup_from_aois(spark: SparkSession, rows: list, grid_name: str,
             return None, None
         for c in cells:
             by_cell.setdefault(c, []).append((r["aoi_id"], wkb))
+    per = _aois_per_slice(len(by_cell) + total, spark.sparkContext.defaultParallelism)
     lookup: dict[int, tuple] = {}
     salted: dict[int, int] = {}
     for c, lst in by_cell.items():
         lst.sort(key=lambda t: t[0])
-        n_salt = max(1, -(-len(lst) // max_aois_per_task))
+        n_salt = -(-len(lst) // per)
         lookup[c] = (n_salt, lst)
         if n_salt > 1:
             salted[c] = n_salt
@@ -453,7 +483,6 @@ def prepare_aoi_index(
     spark: SparkSession,
     aoi_df: DataFrame,
     grid_name: str,
-    max_aois_per_task: int = MAX_AOIS_PER_TASK,
 ) -> AoiIndex | None:
     """Build an :class:`AoiIndex` for ``aoi_df`` on ``grid_name``; returns
     ``None`` when the batch exceeds a driver bound (the executor then
@@ -469,9 +498,7 @@ def prepare_aoi_index(
     )
     if rows is None:
         return None
-    lookup, salted = _aoi_lookup_from_aois(
-        spark, rows, grid_name, max_aois_per_task, cell_limit=BROADCAST_CELL_LIMIT
-    )
+    lookup, salted = _aoi_lookup_from_aois(spark, rows, grid_name, cell_limit=BROADCAST_CELL_LIMIT)
     if lookup is None:
         return None
     return AoiIndex(grid_name, lookup, salted)
@@ -479,14 +506,18 @@ def prepare_aoi_index(
 
 def _salted_aoi_cells(cells: DataFrame) -> DataFrame:
     """An AOI-cell frame ``(aoi_id, geom_wkb, cell_id)`` (:func:`aoi_cells`)
-    with ``_n_salt`` and ``_salt``, computed distributed: ``n_salt =
-    ceil(AOIs of the cell / MAX_AOIS_PER_TASK)`` by a window count, and
-    each AOI's slot is the one ``aois[s::n_salt]`` gives it in the
-    broadcast lookup (the cell's AOIs sorted by id)."""
+    with ``_n_salt`` and ``_salt``, computed distributed: one aggregate job
+    counts the frame's AOI-cells and cells for :func:`_aois_per_slice`,
+    ``n_salt = ceil(AOIs of the cell / per)`` by a window count, and each
+    AOI's slot is the one ``aois[s::n_salt]`` gives it in the broadcast
+    lookup (the cell's AOIs sorted by id). ``cells`` is read by that job
+    and again by the plan, so callers hand in an evaluated-once frame."""
+    pairs, n_cells = cells.agg(F.count(F.lit(1)), F.countDistinct("cell_id")).first()
+    per = _aois_per_slice(pairs + n_cells, cells.sparkSession.sparkContext.defaultParallelism)
     w = Window.partitionBy("cell_id")
     return (
         cells
-        .withColumn("_n_salt", F.ceil(F.count("*").over(w) / MAX_AOIS_PER_TASK).cast("int"))
+        .withColumn("_n_salt", F.ceil(F.count("*").over(w) / per).cast("int"))
         .withColumn(
             "_salt", ((F.row_number().over(w.orderBy("aoi_id")) - 1) % F.col("_n_salt")).cast("int")
         )
@@ -502,7 +533,9 @@ def _build_partials_over_bound(
 ) -> DataFrame:
     """The kernel stage for an AOI-cell frame ``cells`` (:func:`aoi_cells`,
     or what a checkpoint resume leaves of it) that is not collected to the
-    driver (module docstring, "Over the bounds"). The AOI-cell rows are
+    driver (module docstring, "Over the bounds"). ``cells`` is read three
+    times (the salting count, the tile join and the cogroup's AOI side),
+    so callers hand in a checkpointed frame. The AOI-cell rows are
     salted (:func:`_salted_aoi_cells`), the tile rows are replicated once
     per salt of their cell (cells with no AOI drop out here), and a
     cogroup on (cell_id, _salt) hands each cell's tiles and AOI slice to
@@ -708,8 +741,8 @@ def build_partials_with_lookup(
     The plan is the driver route (``on_driver``: the kernel runs now, see
     :func:`_driver_cell_plan`), the colocated zero-shuffle stream with
     hot-cell diversion (a cell shared by thousands of AOIs would be ONE
-    serial AOI loop in one colocated task, so cells hotter than
-    MAX_AOIS_PER_TASK take the salted cell plan while everything else
+    serial AOI loop in one colocated task, so the cells the salting rule
+    splits, ``salted``, take the salted cell plan while everything else
     streams shuffle-free) or the salted cell-clustered shuffle plan.
     FROM data queries give every AOI cell without a stored tile a null
     tile row."""
@@ -794,8 +827,9 @@ class ZonalResultSet(dict):
         the separate count() pass this used to spend, r6), and only then
         do the remaining members run concurrently, so nothing ever races
         to build a not-yet-materialized persisted frame (which can be
-        computed twice under concurrent actions). ``writer`` defaults to
-        a noop-format write (materialize-only); pass e.g.
+        computed twice under concurrent actions). The pool's jobs carry
+        the caller's job group and other local properties. ``writer``
+        defaults to a noop-format write (materialize-only); pass e.g.
         ``lambda df: df.write.parquet(...)`` to land results."""
         w = writer or (
             lambda df: df.write.format("noop").mode("overwrite").save()
@@ -804,11 +838,18 @@ class ZonalResultSet(dict):
         if parallel and len(vals) > 1:
             from concurrent.futures import ThreadPoolExecutor
 
+            from pyspark import inheritable_thread_target
+
             first = 1 if self._partials is not None else 0
             if first:
                 w(vals[0])
+            spark = vals[0].sparkSession
             with ThreadPoolExecutor(max_workers=min(len(vals), 8)) as ex:
-                list(ex.map(w, vals[first:]))
+                # one wrap per member: each gets its own copy of the
+                # properties, which its SQL execution then sets
+                futures = [ex.submit(inheritable_thread_target(spark)(w), df) for df in vals[first:]]
+                for f in futures:
+                    f.result()
         else:
             for df in vals:
                 w(df)
@@ -862,7 +903,8 @@ def run_zonal_queries(
     - ``"cell"``: one shuffle of the tile rows clustered by ``cell_id``;
       each cell is decoded ONCE and its AOIs (from a broadcast lookup) are
       looped in the kernel, with explicit salting (tile rows duplicated
-      per salt) for cells hotter than MAX_AOIS_PER_TASK AOIs.
+      per salt) for a cell whose kernel work would make it the stage's
+      straggler (:func:`_aois_per_slice`).
     - ``"colocated"``: ZERO shuffle of tile bytes — requires the images
       input to be cell-sorted on disk (sources.images.write_images_cell_sorted);
       the kernel streams over the scan with mapInArrow and regroups cells
@@ -913,7 +955,10 @@ def run_zonal_queries(
             if idx is not None:
                 built.append(idx)
         if idx is None:
-            part = _build_partials_over_bound(images, aoi_cells(aoi_df, target), grid_queries, env, target)
+            # a local checkpoint: polygon->cells runs once, in the salting
+            # count's job, and its blocks go when the frame does
+            cells = aoi_cells(aoi_df, target).localCheckpoint(eager=False)
+            part = _build_partials_over_bound(images, cells, grid_queries, env, target)
             on_driver = False
         else:
             single_grid = all(env.get_layer(n).grid == target for n in _source_layers(grid_queries, env))
@@ -945,8 +990,9 @@ def run_zonal_queries(
 
 def _salted_cell_plan(spark, imgs: DataFrame, salted: dict, kernel, schema) -> DataFrame:
     """The shuffle-clustered cell-kernel stage: tile rows repartitioned by
-    cell (plus a salt replica per MAX_AOIS_PER_TASK-sized AOI slice of hot
-    cells) and fed to the kernel via applyInArrow."""
+    cell (plus a salt replica per AOI slice of the hot cells in
+    ``salted``, :func:`_aois_per_slice`) and fed to the kernel via
+    applyInArrow."""
     group_keys = ["cell_id"]
     if salted:
         salt_dim = local_frame(spark, {

@@ -13,6 +13,8 @@ from unittest import mock
 import numpy as np
 import pandas as pd
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 
 from gfw_raster_analysis_lambda_spark import oracle
 from gfw_raster_analysis_lambda_spark.plans import planner
@@ -358,8 +360,9 @@ def test_strategy_parity_salted(spark, tables, env):
     images, aoi_df = tables
     q = _parity_query()
     ref = run_zonal_query(spark, images, aoi_df, q, env, GRID_NAME, strategy="cell").toPandas()
-    # max_aois_per_task=1 -> every multi-AOI cell gets salted replicas
-    idx = planner.prepare_aoi_index(spark, aoi_df, GRID_NAME, max_aois_per_task=1)
+    # a salting target of 1 -> every multi-AOI cell gets salted replicas
+    with mock.patch.object(planner, "_salt_target", lambda work, parallelism: 1):
+        idx = planner.prepare_aoi_index(spark, aoi_df, GRID_NAME)
     assert idx.salted
     salted = run_zonal_query(
         spark, images, aoi_df, q, env, GRID_NAME, strategy="cell", aoi_index=idx
@@ -406,18 +409,24 @@ def test_strategy_parity_pixel_mode(spark, tables, env):
 def test_lookup_paths_agree(spark, tables, monkeypatch):
     """The driver's broadcast lookup (prepare_aoi_index) and the cogroup
     route's salted AOI-cell frame (_salted_aoi_cells) agree per cell on
-    the AOI list, n_salt and each AOI's salt slot (aois[s::n_salt]). One
-    AOI per task salts every cell shared by several AOIs."""
+    the AOI list, n_salt and each AOI's salt slot (aois[s::n_salt]). A
+    salting target of 1 salts every cell shared by several AOIs."""
     _, aoi_df = tables
-    monkeypatch.setattr(planner, "MAX_AOIS_PER_TASK", 1)
-    idx = planner.prepare_aoi_index(spark, aoi_df, GRID_NAME, max_aois_per_task=1)
+    monkeypatch.setattr(planner, "_salt_target", lambda work, parallelism: 1)
+    idx = planner.prepare_aoi_index(spark, aoi_df, GRID_NAME)
     frame = planner._salted_aoi_cells(planner.aoi_cells(aoi_df, GRID_NAME))
+    assert max(n for n, _ in idx.lookup.value.values()) > 1
+    _assert_lookup_matches_frame(idx.lookup.value, frame)
+
+
+def _assert_lookup_matches_frame(lookup, frame):
+    """The broadcast lookup ``{cell: (n_salt, [(aoi, wkb)...])}`` and the
+    salted AOI-cell frame hold the same AOIs per cell, the same n_salt
+    and each AOI in the slot aois[s::n_salt] gives it."""
     by_cell: dict = {}
     for r in frame.select("cell_id", "aoi_id", "_n_salt", "_salt").collect():
         by_cell.setdefault(r["cell_id"], []).append((r["aoi_id"], r["_n_salt"], r["_salt"]))
-    lookup = idx.lookup.value
     assert set(by_cell) == set(lookup)
-    assert max(n for n, _ in lookup.values()) > 1
     for cell, (n_salt, aois) in lookup.items():
         ids = [a for a, _ in aois]
         rows = sorted(by_cell[cell])
@@ -425,6 +434,72 @@ def test_lookup_paths_agree(spark, tables, monkeypatch):
         assert {n for _, n, _ in rows} == {n_salt}, cell
         for a, _, slot in rows:
             assert a in [x for x, _ in aois[slot::n_salt]], (cell, a)
+
+
+@settings(max_examples=300, deadline=None)
+@given(
+    aois=st.lists(st.integers(1, 5000), min_size=1, max_size=40),
+    parallelism=st.integers(1, 256),
+)
+def test_salting_rule_bounds_every_slice(aois, parallelism):
+    """For cells of ``aois`` AOIs each: a cell whose cost (1 + its AOIs)
+    is within the target max(64, (cells + AOI-cells) / parallelism) is
+    never split, no slice aois[s::n_salt] costs more than the target,
+    every slice holds an AOI, and one slice fewer would overrun."""
+    work = len(aois) + sum(aois)
+    target = planner._salt_target(work, parallelism)
+    assert target == max(64, work / parallelism)
+    per = planner._aois_per_slice(work, parallelism)
+    for a in aois:
+        n = -(-a // per)
+        slices = [len(range(s, a, n)) for s in range(n)]
+        assert min(slices) >= 1 and 1 + max(slices) <= target, (a, n, target)
+        if 1 + a <= target:
+            assert n == 1
+        if n > 1:
+            assert 1 + -(-a // (n - 1)) > target
+
+
+def _stacks(stacks, wide_cells):
+    """AOI rows: per ``(cell index, k)`` of ``stacks``, k tiny AOIs inside
+    that fixture cell; plus, with ``wide_cells`` > 0, one box of that many
+    cells a side over the corpus."""
+    from gfw_raster_analysis_lambda_spark.functions import geometry as geo
+
+    rows = []
+    for j, (c, k) in enumerate(stacks):
+        lon0, lat0 = 10.0 + (c % 4) * 0.25, 20.0 + (c // 4) * 0.25
+        for i in range(k):
+            lon = lon0 + 0.01 + (i % 20) * 0.011
+            lat = lat0 + 0.01 + (i // 20) * 0.02
+            rows.append((f"s{j}_{i:03d}", geo.wkb_dumps(geo.box(lon, lat, lon + 0.009, lat + 0.012))))
+    if wide_cells:
+        h = wide_cells * 0.25 / 2
+        rows.append(("wide", geo.wkb_dumps(geo.box(10.5 - h, 20.5 - h, 10.5 + h, 20.5 + h))))
+    return rows
+
+
+@settings(max_examples=6, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+@given(
+    stacks=st.lists(st.tuples(st.integers(0, 15), st.integers(1, 220)), min_size=1, max_size=3),
+    wide_cells=st.sampled_from([0, 8, 20]),
+)
+def test_salting_rule_routes_agree(spark, stacks, wide_cells):
+    """On random stacked AOI batches the driver lookup salts each cell as
+    the rule's definition says (:func:`_rule_salts`), and the cogroup
+    route's salted frame agrees with it cell by cell and slot by slot."""
+    rows = _stacks(stacks, wide_cells)
+    lookup, salted = planner._aoi_lookup_from_aois(
+        spark, [{"aoi_id": a, "geom_wkb": w} for a, w in rows], GRID_NAME
+    )
+    try:
+        rule = _rule_salts(spark, rows)
+        assert {c: n for c, (n, _) in lookup.value.items()} == rule
+        assert salted == {c: n for c, n in rule.items() if n > 1}
+        aoi_df = spark.createDataFrame(rows, "aoi_id string, geom_wkb binary")
+        _assert_lookup_matches_frame(lookup.value, planner._salted_aoi_cells(planner.aoi_cells(aoi_df, GRID_NAME)))
+    finally:
+        lookup.unpersist()
 
 
 # 15. finest-grid co-registration: biomass lives on 4/512 (2x coarser);
@@ -704,18 +779,46 @@ def test_auto_fallback_over_broadcast_limit(spark, tables, env, monkeypatch):
 # must not serialize into one colocated task — it takes the salted cell
 # plan while cold cells keep the zero-shuffle stream; results must match
 # the oracle
-def _hot_cell_aois():
-    """300 tiny AOIs stacked inside ONE cell (lon 10..10.25, lat
-    20.75..21) -> n_salt = ceil(300/64) = 5 salted slices; plus two
-    normal AOIs."""
+def _stacked_aois(n):
+    """``n`` (at most 300) tiny AOIs stacked inside ONE cell (lon
+    10..10.25, lat 20.75..21)."""
     from gfw_raster_analysis_lambda_spark.functions import geometry as geo
 
     rows = []
-    for i in range(300):
+    for i in range(n):
         lon = 10.01 + (i % 20) * 0.011
         lat = 20.76 + (i // 20) * 0.015
         rows.append((f"hot_{i:03d}", geo.wkb_dumps(geo.box(lon, lat, lon + 0.009, lat + 0.012))))
-    return rows + [(a, w) for a, w in fixtures.fixture_aois()[:2]]
+    return rows
+
+
+def _hot_cell_aois():
+    """300 stacked AOIs, a cell the salting rule splits (into 5 slices
+    at the floor target of 64), plus two normal AOIs."""
+    return _stacked_aois(300) + [(a, w) for a, w in fixtures.fixture_aois()[:2]]
+
+
+def _rule_salts(spark, rows):
+    """{cell: n_salt} the salting rule gives the AOI batch ``rows`` on
+    this session, worked out here from its definition: a cell costs 1 +
+    its AOIs, the target is max(64, (cells + AOI-cells) / default
+    parallelism), and a cell takes the fewest slices aois[s::n] whose
+    cost is within the target."""
+    from gfw_raster_analysis_lambda_spark.functions import geometry as geo
+    from gfw_raster_analysis_lambda_spark.functions import grid as G
+
+    counts: dict = {}
+    for _, wkb in rows:
+        for c in G.polygon_to_cells(fixtures.GRID, geo.wkb_loads(wkb)).tolist():
+            counts[c] = counts.get(c, 0) + 1
+    target = max(64, (len(counts) + sum(counts.values())) / spark.sparkContext.defaultParallelism)
+    out = {}
+    for c, a in counts.items():
+        n = 1
+        while 1 + -(-a // n) > target:
+            n += 1
+        out[c] = n
+    return out
 
 
 def test_colocated_hot_cell_diversion(spark, corpus, env, tmp_path, monkeypatch):
@@ -750,7 +853,9 @@ def test_colocated_hot_cell_diversion(spark, corpus, env, tmp_path, monkeypatch)
         run_zonal_query(spark, images, aoi_df, q, env, GRID_NAME, strategy="colocated")
         .toPandas().reset_index(drop=True)
     )
-    assert took["salted"] and max(took["salted"].values()) >= 5  # diverted + salted
+    # the hot cell is diverted and split as the rule says
+    rule = {c: n for c, n in _rule_salts(spark, rows).items() if n > 1}
+    assert took["salted"] == rule and min(rule.values()) >= 2
     assert_frames_match(got, oracle.run_oracle(q, env, rows))
 
 
@@ -789,9 +894,37 @@ def test_hot_cell_over_bound_salting(spark, tables, env, monkeypatch):
         .toPandas().sort_values("aoi_id")
     )
     n_salt = int(slots["_n_salt"].iloc[0])
-    assert n_salt >= 5 and slots["_salt"].nunique() == n_salt
+    assert n_salt == _rule_salts(spark, rows)[hot] >= 2 and slots["_salt"].nunique() == n_salt
     assert slots["_salt"].tolist() == [i % n_salt for i in range(len(slots))]
     assert_frames_match(got.reset_index(drop=True), oracle.run_oracle(q, env, rows))
+
+
+# 19c. a hot cell whose kernel work stays within one core's share of the
+# kernel stage is not split: 68 stacked AOIs (the batch workload's
+# hotspot, which a 64-AOI count rule salted) among a wide AOI's cells
+# stream in the one colocated mapInArrow stage
+def test_hot_cell_within_stage_share_streams(spark, sorted_images, env, monkeypatch):
+    from gfw_raster_analysis_lambda_spark.functions import geometry as geo
+    from gfw_raster_analysis_lambda_spark.functions import grid as G
+
+    rows = _stacked_aois(68) + [("wide", geo.wkb_dumps(geo.box(7.5, 17.5, 12.5, 22.5)))]
+    (hot,) = G.polygon_to_cells(fixtures.GRID, geo.wkb_loads(rows[0][1])).tolist()
+    assert set(_rule_salts(spark, rows).values()) == {1}
+    aoi_df = spark.createDataFrame(rows, "aoi_id string, geom_wkb binary")
+    idx = planner.prepare_aoi_index(spark, aoi_df, GRID_NAME)
+    assert len(idx.lookup.value[hot][1]) == 69
+    assert idx.salted == {}
+    q = ZonalQuery(
+        base_layer="tcl_year",
+        group_layers=("tcl_year",),
+        aggregates=(Aggregate("count", None, "n"),),
+    )
+    monkeypatch.setattr(planner, "DRIVER_KERNEL_PX_LIMIT", 0)
+    df = run_zonal_query(spark, sorted_images, aoi_df, q, env, GRID_NAME, aoi_index=idx)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan and "FlatMapGroupsInArrow" not in plan
+    assert_frames_match(df.toPandas().reset_index(drop=True), oracle.run_oracle(q, env, rows))
+    idx.unpersist()
 
 
 def test_auto_strategy_prefers_colocated_on_sorted_layout(
@@ -1066,6 +1199,56 @@ def test_over_bound_set_enumerates_aois_once(spark, tables, env, monkeypatch):
         for name, q in qs.items():
             assert_frames_match(res[name].toPandas(), oracle.run_oracle(q, env, aois))
     assert len(calls) == 1
+
+
+@pytest.mark.parametrize(
+    "route", ["run_zonal_queries", "run_zonal_checkpointed", "run_zonal_checkpointed_snapshot"]
+)
+def test_over_bound_evaluates_aoi_cells_once(spark, tables, env, tmp_path, monkeypatch, route):
+    """Over the driver bounds the AOI-cell frame is evaluated once, though
+    the salting count, the tile join, the cogroup's AOI side and (in the
+    checkpoint functions) the emptiness check and the done markers all
+    read it: a counting UDF on the AOI frame sees each AOI once after the
+    bounded read (which the checkpoint functions do not make)."""
+    from pyspark.sql import functions as F
+
+    from gfw_raster_analysis_lambda_spark import checkpoint
+
+    images, _ = tables
+    aois = fixtures.fixture_aois()[:3]
+    acc = spark.sparkContext.accumulator(0)
+
+    @F.pandas_udf("binary")
+    def counted(wkb: pd.Series) -> pd.Series:
+        acc.add(len(wkb))
+        return wkb
+
+    aoi_df = spark.createDataFrame(aois, "aoi_id string, geom_wkb binary").select(
+        "aoi_id", counted("geom_wkb").alias("geom_wkb")
+    )
+    q = ZonalQuery(
+        base_layer="tcl_year",
+        group_layers=("tcl_year",),
+        aggregates=(Aggregate("count", None, "n"),),
+    )
+    read = {"evaluations": 0}
+    if route == "run_zonal_queries":
+        orig = planner.prepare_aoi_index
+
+        def spy(*a, **k):
+            out = orig(*a, **k)
+            read["evaluations"] = acc.value
+            return out
+
+        monkeypatch.setattr(planner, "prepare_aoi_index", spy)
+        monkeypatch.setattr(planner, "BROADCAST_CELL_LIMIT", 0)
+        with planner.run_zonal_queries(spark, images, aoi_df, {"q": q}, env, GRID_NAME) as res:
+            got = res["q"].toPandas()
+    else:
+        run = getattr(checkpoint, route)
+        got = run(spark, images, aoi_df, q, env, GRID_NAME, str(tmp_path / "ck")).toPandas()
+    assert acc.value - read["evaluations"] == len(aois)
+    assert_frames_match(got.reset_index(drop=True), oracle.run_oracle(q, env, aois))
 
 
 def test_fused_disjoint_layer_cells_parity(spark, env):
@@ -1684,6 +1867,27 @@ def test_resultset_materialize_parallel_parity(spark, tables, env):
     for name, exp in serial.items():
         assert_frames_match(by_cols[tuple(sorted(exp.columns))], exp)
     fused.close()
+
+
+def test_materialize_jobs_carry_callers_job_group(spark, tables, env, monkeypatch):
+    """Every job of a fused set's materialize, the pool's finalizes
+    included, carries the caller's job group."""
+    from gfw_raster_analysis_lambda_spark.plans.planner import run_zonal_queries
+
+    images, aoi_df = tables
+    qs = {
+        "grouped": _parity_query(),
+        "area": ZonalQuery(base_layer="data", aggregates=(Aggregate("sum", "area__ha", "area_ha"),)),
+        "n": ZonalQuery(base_layer="tcl_year", aggregates=(Aggregate("count", None, "n"),)),
+    }
+    monkeypatch.setattr(planner, "DRIVER_KERNEL_PX_LIMIT", 0)
+    tracker = spark.sparkContext.statusTracker()
+    with run_zonal_queries(spark, images, aoi_df, qs, env, GRID_NAME) as fused:
+        assert fused._partials is not None  # the first member runs alone, the rest in the pool
+        ungrouped = set(tracker.getJobIdsForGroup())
+        _, n_grouped = _count_jobs(spark, fused.materialize)
+        stray = set(tracker.getJobIdsForGroup()) - ungrouped
+    assert not stray and n_grouped >= len(qs)
 
 
 # ---------------------------------------------------------------------------
