@@ -83,40 +83,43 @@ def run_zonal_checkpointed(
     ddir = f"{checkpoint_dir}/done/q={fp}"
     ldir = f"{checkpoint_dir}/lineage"
 
-    cells = planner.aoi_cells(aoi_df, grid_name)
+    # the emptiness check, the cogroup route's two reads and the done
+    # markers all read the remainder: with the AOI-cell frame persisted,
+    # polygon->cells runs once for all of them. (Caching the remainder
+    # itself would tie it to the done table, which Spark re-lists into
+    # every cached plan that reads it after the markers land.)
+    cells = planner.aoi_cells(aoi_df, grid_name).persist()
     done = _try_read(spark, ddir)
     todo = (
         cells.join(F.broadcast(done.select("aoi_id", "cell_id")), ["aoi_id", "cell_id"], "left_anti")
         if done is not None
         else cells
     )
-    # the emptiness check, the cogroup route's salting count and kernel
-    # stage and the done markers all read the remainder: as a local
-    # checkpoint, polygon->cells runs once for all of them
-    todo = todo.localCheckpoint(eager=False)
-
-    if not todo.isEmpty():
-        new_partials = _new_partials(images, todo, query, env, grid_name, run_id)
-        new_partials.write.mode("append").parquet(pdir)
-        # done markers AFTER the partials commit (see module docstring)
-        todo.select("aoi_id", "cell_id").withColumn("run_id", F.lit(run_id)).write.mode(
-            "append"
-        ).parquet(ddir)
-        # lineage: one row per Spark partition of this run
-        (
-            spark.read.parquet(pdir)
-            .filter(F.col("run_id") == run_id)
-            .groupBy("run_id", "_pid")
-            .agg(
-                F.countDistinct("cell_id").alias("n_cells"),
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum("_ms").alias("kernel_ms"),
+    try:
+        if not todo.isEmpty():
+            new_partials = _new_partials(images, todo, query, env, grid_name, run_id)
+            new_partials.write.mode("append").parquet(pdir)
+            # done markers AFTER the partials commit (see module docstring)
+            todo.select("aoi_id", "cell_id").withColumn("run_id", F.lit(run_id)).write.mode(
+                "append"
+            ).parquet(ddir)
+            # lineage: one row per Spark partition of this run
+            (
+                spark.read.parquet(pdir)
+                .filter(F.col("run_id") == run_id)
+                .groupBy("run_id", "_pid")
+                .agg(
+                    F.countDistinct("cell_id").alias("n_cells"),
+                    F.count(F.lit(1)).alias("n_rows"),
+                    F.sum("_ms").alias("kernel_ms"),
+                )
+                .withColumn("query_fp", F.lit(fp))
+                .withColumn("committed_at", F.current_timestamp())
+                .write.mode("append")
+                .parquet(ldir)
             )
-            .withColumn("query_fp", F.lit(fp))
-            .withColumn("committed_at", F.current_timestamp())
-            .write.mode("append")
-            .parquet(ldir)
-        )
+    finally:
+        cells.unpersist()
 
     # authoritative run per (aoi, cell) = first committed marker
     done_now = spark.read.parquet(ddir)
@@ -177,7 +180,7 @@ def run_zonal_checkpointed_snapshot(
         spark, f"{table_dir}/lineage", partition_by=["run_id"]
     )
 
-    cells = planner.aoi_cells(aoi_df, grid_name)
+    cells = planner.aoi_cells(aoi_df, grid_name).persist()  # read 3-4 times, evaluated once
     committed = pt.read() if pt.current_snapshot_id() else None
     todo = (
         cells.join(
@@ -187,34 +190,36 @@ def run_zonal_checkpointed_snapshot(
         )
         if committed is not None
         else cells
-    ).localCheckpoint(eager=False)  # read 3-4 times, evaluated once
-
-    if not todo.isEmpty():
-        new_partials = _new_partials(images, todo, query, env, grid_name, run_id)
-        markers = (
-            todo.select("aoi_id", "cell_id")
-            .withColumn("run_id", F.lit(run_id))
-            .withColumn("_marker", F.lit(True))
-        )
-        commit_df = new_partials.withColumn("_marker", F.lit(False)).unionByName(
-            markers, allowMissingColumns=True
-        )
-        # ONE atomic commit (partials + done markers); a replayed run_id
-        # overwrites its own partition instead of duplicating partials
-        pt.overwrite_partitions(commit_df)
-        lineage = (
-            pt.read(partition_filter={"run_id": run_id})
-            .filter(~F.col("_marker"))
-            .groupBy("run_id", "_pid")
-            .agg(
-                F.countDistinct("cell_id").alias("n_cells"),
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum("_ms").alias("kernel_ms"),
+    )
+    try:
+        if not todo.isEmpty():
+            new_partials = _new_partials(images, todo, query, env, grid_name, run_id)
+            markers = (
+                todo.select("aoi_id", "cell_id")
+                .withColumn("run_id", F.lit(run_id))
+                .withColumn("_marker", F.lit(True))
             )
-            .withColumn("query_fp", F.lit(fp))
-            .withColumn("committed_at", F.current_timestamp())
-        )
-        lt.overwrite_partitions(lineage)
+            commit_df = new_partials.withColumn("_marker", F.lit(False)).unionByName(
+                markers, allowMissingColumns=True
+            )
+            # ONE atomic commit (partials + done markers); a replayed run_id
+            # overwrites its own partition instead of duplicating partials
+            pt.overwrite_partitions(commit_df)
+            lineage = (
+                pt.read(partition_filter={"run_id": run_id})
+                .filter(~F.col("_marker"))
+                .groupBy("run_id", "_pid")
+                .agg(
+                    F.countDistinct("cell_id").alias("n_cells"),
+                    F.count(F.lit(1)).alias("n_rows"),
+                    F.sum("_ms").alias("kernel_ms"),
+                )
+                .withColumn("query_fp", F.lit(fp))
+                .withColumn("committed_at", F.current_timestamp())
+            )
+            lt.overwrite_partitions(lineage)
+    finally:
+        cells.unpersist()
 
     full = pt.read().filter(~F.col("_marker")).drop("_marker")
     # first-committed-wins across racing run_ids (same rule as the

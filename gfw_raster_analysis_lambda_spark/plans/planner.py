@@ -36,9 +36,9 @@ builds itself (cell lists, the salt dimension, null tile rows) are
 
 Over the bounds (:func:`_build_partials_over_bound`). Nothing is
 collected: polygon->cells runs once for the whole query set in a pandas
-UDF (:func:`aoi_cells`) whose frame is a local checkpoint, evaluated
-once; the AOI-cell rows are salted per cell by a window count, the tile
-rows are replicated per salt of their cell, and
+UDF (:func:`aoi_cells`) whose frame a held query set persists (see
+:func:`run_zonal_query`); the AOI-cell rows are salted per cell by a
+window count, the tile rows are replicated per salt of their cell, and
 ``groupBy(cell_id, _salt).cogroup(...)`` feeds each cell's tiles and AOI
 slice to the kernel. A cell with AOIs but no tiles arrives with an empty
 tile side, which FROM data queries zero-fill. The checkpoint layer runs
@@ -63,7 +63,6 @@ distributed kernel plans, and so do direct callers of
 
 from __future__ import annotations
 
-import math
 from functools import reduce
 
 import numpy as np
@@ -140,10 +139,11 @@ def run_zonal_query(
     """Execute one zonal query; returns the final result DataFrame with
     one block of rows per AOI (column ``aoi_id`` first). The query runs as
     a one-member set of :func:`run_zonal_queries`, which documents
-    ``strategy`` and ``aoi_index``."""
-    return run_zonal_queries(
-        spark, images, aoi_df, {"q": query}, env, grid_name, strategy=strategy, aoi_index=aoi_index
-    )["q"]
+    ``strategy`` and ``aoi_index``. The caller gets no handle to release
+    a cache with, so nothing is left persisted: over the driver bounds the
+    AOI-cell frame is not cached, and its two reads in the kernel stage
+    each run polygon->cells."""
+    return _run_set(spark, images, aoi_df, {"q": query}, env, grid_name, strategy, aoi_index, held=False)["q"]
 
 
 VALUE_ROLLUP_FUNCS = ("percentile", "mode", "count_distinct", "variance", "stddev")
@@ -388,30 +388,27 @@ def _fits_driver_kernel(idx: "AoiIndex", grid_name: str) -> bool:
     return True
 
 
-# Hot-cell salting. A cell's kernel work is ``1 + its AOIs`` full-tile
+# Hot-cell salting, one rule on every route (the driver lookup and
+# _salted_aoi_cells). A cell's kernel work is ``1 + its AOIs`` full-tile
 # passes: every AOI that does not cover the cell rasterizes and aggregates
-# a full mask (tools/profile_kernel.py on the batch workload, seed 1, two
-# runs on a 4-core VM: 1.7-1.9 ms per cell + 0.9-1.1 ms per AOI, r^2
-# 0.96-0.97 over 323 cells). A cell is split only when it would be the
-# kernel stage's straggler; the floor keeps a slice worth a Python task
-# (64 AOIs at ~1.1 ms is about the ~0.07 s one costs).
-MIN_SALT_TARGET = 64
+# a full mask (tools/profile_kernel.py on the batch workload, seed 1, three
+# runs on a 4-core VM: 1.6-1.9 ms per cell + 0.9-1.2 ms per AOI, r^2
+# 0.96-0.97 over 323 cells). A cell whose work is over SALT_TARGET passes
+# is split into the fewest slices within it. The 64-AOI count rule this
+# replaced split the batch workload's 68-AOI hot cell (69 passes, ~76 ms),
+# and the salted plan cost more than the split saved: traced, one request
+# ran 10 Spark jobs instead of 8 and 0.4-0.7 s longer. 256 passes (~0.28 s
+# of a core, about four Python tasks' fixed cost) keeps such cells whole;
+# no cell between 69 and 256 passes has been measured.
+SALT_TARGET = 256
 
 
-def _salt_target(work: int, parallelism: int) -> float:
-    """The most kernel work one slice of a cell may hold: one core's fair
-    share of the stage (``work`` = the batch's cells + AOI-cells, over
-    ``parallelism`` cores), and at least ``MIN_SALT_TARGET``."""
-    return max(MIN_SALT_TARGET, work / parallelism)
-
-
-def _aois_per_slice(work: int, parallelism: int) -> int:
-    """The salting rule of every route: a cell of ``a`` AOIs runs as
-    ``n_salt = ceil(a / per)`` slices ``aois[s::n_salt]``, ``per`` being
-    the value returned here, so that each slice's cost (1 + its AOIs) is
-    within :func:`_salt_target`. A cell whose cost is within the target is
-    never split; a slice holds at least one AOI."""
-    return max(1, math.floor(_salt_target(work, parallelism)) - 1)
+def _aois_per_slice() -> int:
+    """The most AOIs one slice of a hot cell holds: a cell of ``a`` AOIs
+    runs as ``n_salt = ceil(a / per)`` slices ``aois[s::n_salt]``, so each
+    slice's work (1 + its AOIs) is within ``SALT_TARGET``, a cell within
+    it is never split and a slice holds at least one AOI."""
+    return max(1, SALT_TARGET - 1)
 
 
 def _aoi_lookup_from_aois(spark: SparkSession, rows: list, grid_name: str,
@@ -425,10 +422,9 @@ def _aoi_lookup_from_aois(spark: SparkSession, rows: list, grid_name: str,
 
     Returns ``(lookup, salted)``: a broadcast ``{cell_id: (n_salt,
     [(aoi_id, wkb), ...])}`` with each cell's AOIs sorted by id, and the
-    ``{cell_id: n_salt}`` of the hot cells (``n_salt > 1``, by
-    :func:`_aois_per_slice` over the batch's cells + AOI-cells and the
-    session's default parallelism) whose AOI loop the planner splits
-    across salted replicas.
+    ``{cell_id: n_salt}`` of the hot cells (``n_salt > 1``,
+    :func:`_aois_per_slice`) whose AOI loop the planner splits across
+    salted replicas.
 
     With ``cell_limit`` set, enumeration aborts as soon as the total
     aoi-cell count exceeds it and returns ``(None, None)`` — the caller
@@ -446,7 +442,7 @@ def _aoi_lookup_from_aois(spark: SparkSession, rows: list, grid_name: str,
             return None, None
         for c in cells:
             by_cell.setdefault(c, []).append((r["aoi_id"], wkb))
-    per = _aois_per_slice(len(by_cell) + total, spark.sparkContext.defaultParallelism)
+    per = _aois_per_slice()
     lookup: dict[int, tuple] = {}
     salted: dict[int, int] = {}
     for c, lst in by_cell.items():
@@ -506,14 +502,11 @@ def prepare_aoi_index(
 
 def _salted_aoi_cells(cells: DataFrame) -> DataFrame:
     """An AOI-cell frame ``(aoi_id, geom_wkb, cell_id)`` (:func:`aoi_cells`)
-    with ``_n_salt`` and ``_salt``, computed distributed: one aggregate job
-    counts the frame's AOI-cells and cells for :func:`_aois_per_slice`,
-    ``n_salt = ceil(AOIs of the cell / per)`` by a window count, and each
-    AOI's slot is the one ``aois[s::n_salt]`` gives it in the broadcast
-    lookup (the cell's AOIs sorted by id). ``cells`` is read by that job
-    and again by the plan, so callers hand in an evaluated-once frame."""
-    pairs, n_cells = cells.agg(F.count(F.lit(1)), F.countDistinct("cell_id")).first()
-    per = _aois_per_slice(pairs + n_cells, cells.sparkSession.sparkContext.defaultParallelism)
+    with ``_n_salt`` and ``_salt``, computed distributed: ``n_salt =
+    ceil(AOIs of the cell / per)`` (:func:`_aois_per_slice`) by a window
+    count, and each AOI's slot is the one ``aois[s::n_salt]`` gives it in
+    the broadcast lookup (the cell's AOIs sorted by id)."""
+    per = _aois_per_slice()
     w = Window.partitionBy("cell_id")
     return (
         cells
@@ -533,13 +526,14 @@ def _build_partials_over_bound(
 ) -> DataFrame:
     """The kernel stage for an AOI-cell frame ``cells`` (:func:`aoi_cells`,
     or what a checkpoint resume leaves of it) that is not collected to the
-    driver (module docstring, "Over the bounds"). ``cells`` is read three
-    times (the salting count, the tile join and the cogroup's AOI side),
-    so callers hand in a checkpointed frame. The AOI-cell rows are
-    salted (:func:`_salted_aoi_cells`), the tile rows are replicated once
-    per salt of their cell (cells with no AOI drop out here), and a
-    cogroup on (cell_id, _salt) hands each cell's tiles and AOI slice to
-    the kernel of the whole query set, as on every other route."""
+    driver (module docstring, "Over the bounds"). ``cells`` is read twice
+    (the tile join and the cogroup's AOI side): a persisted
+    :func:`aoi_cells` frame, or a frame over one, evaluates polygon->cells
+    once. The AOI-cell rows are salted (:func:`_salted_aoi_cells`),
+    the tile rows are replicated once per salt of their cell (cells with
+    no AOI drop out here), and a cogroup on (cell_id, _salt) hands each
+    cell's tiles and AOI slice to the kernel of the whole query set, as
+    on every other route."""
     spark = images.sparkSession
     cells = _salted_aoi_cells(cells)
     tiles = (
@@ -804,16 +798,18 @@ def split_multi_partials(partials: DataFrame, qi: int, query: ZonalQuery) -> Dat
 
 class ZonalResultSet(dict):
     """{name: result DataFrame} plus an EXPLICIT cleanup handle for the
-    query set's shared state (the persisted partial frame and the
-    AOI-index broadcasts this call built). DataFrame-attribute stamping is
-    fragile — the attribute vanishes after any further transformation —
-    so the handle lives on the returned mapping itself. Use as a context
-    manager, or call :meth:`close` after materializing the results."""
+    query set's shared state (the persisted partial and AOI-cell frames
+    and the AOI-index broadcasts this call built). DataFrame-attribute
+    stamping is fragile — the attribute vanishes after any further
+    transformation — so the handle lives on the returned mapping itself.
+    Use as a context manager, or call :meth:`close` after materializing
+    the results."""
 
-    def __init__(self, results, partials=None, indexes=()):
+    def __init__(self, results, partials=None, indexes=(), cells=()):
         super().__init__(results)
         self._partials = partials
         self._indexes = list(indexes)
+        self._cells = list(cells)
 
     def materialize(self, writer=None, parallel: bool = True) -> None:
         """Drive every member's final aggregation, CONCURRENTLY by
@@ -861,6 +857,9 @@ class ZonalResultSet(dict):
         for idx in self._indexes:
             idx.unpersist()
         self._indexes = []
+        for cells in self._cells:
+            cells.unpersist()
+        self._cells = []
 
     def __enter__(self) -> "ZonalResultSet":
         return self
@@ -903,8 +902,8 @@ def run_zonal_queries(
     - ``"cell"``: one shuffle of the tile rows clustered by ``cell_id``;
       each cell is decoded ONCE and its AOIs (from a broadcast lookup) are
       looped in the kernel, with explicit salting (tile rows duplicated
-      per salt) for a cell whose kernel work would make it the stage's
-      straggler (:func:`_aois_per_slice`).
+      per salt) for a cell whose kernel work is over ``SALT_TARGET``
+      full-tile passes (:func:`_aois_per_slice`).
     - ``"colocated"``: ZERO shuffle of tile bytes — requires the images
       input to be cell-sorted on disk (sources.images.write_images_cell_sorted);
       the kernel streams over the scan with mapInArrow and regroups cells
@@ -918,8 +917,15 @@ def run_zonal_queries(
     A grid whose queries read layers stored on another grid always takes
     the cell plan. Returns a :class:`ZonalResultSet` — a plain {name:
     result DataFrame} mapping whose ``close()`` (or context-manager exit)
-    releases the persisted partial frame and the AOI-index broadcasts this
-    call built."""
+    releases the persisted partial and AOI-cell frames and the AOI-index
+    broadcasts this call built."""
+    return _run_set(spark, images, aoi_df, queries, env, grid_name, strategy, aoi_index, held=True)
+
+
+def _run_set(spark, images, aoi_df, queries, env, grid_name, strategy, aoi_index, held: bool):
+    """:func:`run_zonal_queries`; ``held`` says whether the caller gets the
+    :class:`ZonalResultSet` to close, which an over-bound AOI-cell frame
+    is persisted only for."""
     if strategy not in (None, "auto", "cell", "colocated"):
         raise ValueError(f"unknown strategy {strategy!r}; use auto, cell or colocated")
     # value-rollup members (percentile/median/mode/count_distinct) run
@@ -945,7 +951,7 @@ def run_zonal_queries(
     # frames read straight off a cell-sorted layout (sources.images
     # sidecar) default to the zero-shuffle colocated scan
     colocated = strategy == "colocated" or (auto and getattr(images, "_gfw_cell_sorted", False))
-    frames, built, n_distributed = [], [], 0
+    frames, built, cached, n_distributed = [], [], [], 0
     place: "dict[int, tuple[int, bool]]" = {}  # exec_list index -> (_q tag, bounded)
     for target, qis in by_grid.items():
         grid_queries = [exec_list[i] for i in qis]
@@ -955,9 +961,12 @@ def run_zonal_queries(
             if idx is not None:
                 built.append(idx)
         if idx is None:
-            # a local checkpoint: polygon->cells runs once, in the salting
-            # count's job, and its blocks go when the frame does
-            cells = aoi_cells(aoi_df, target).localCheckpoint(eager=False)
+            # persisted for a held set: polygon->cells runs once for both
+            # reads of the frame, and close() releases it
+            cells = aoi_cells(aoi_df, target)
+            if held:
+                cells = cells.persist()
+                cached.append(cells)
             part = _build_partials_over_bound(images, cells, grid_queries, env, target)
             on_driver = False
         else:
@@ -985,7 +994,7 @@ def run_zonal_queries(
         part = split_multi_partials(partials, k, q)
         res = _finalize_pixels(part, q) if q.select_pixels else finalize_partials(part, q, env, bounded)
         out[name] = finishers[name](res) if name in finishers else res
-    return ZonalResultSet(out, partials=partials if persisted else None, indexes=built)
+    return ZonalResultSet(out, partials=partials if persisted else None, indexes=built, cells=cached)
 
 
 def _salted_cell_plan(spark, imgs: DataFrame, salted: dict, kernel, schema) -> DataFrame:

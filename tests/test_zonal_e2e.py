@@ -360,8 +360,9 @@ def test_strategy_parity_salted(spark, tables, env):
     images, aoi_df = tables
     q = _parity_query()
     ref = run_zonal_query(spark, images, aoi_df, q, env, GRID_NAME, strategy="cell").toPandas()
-    # a salting target of 1 -> every multi-AOI cell gets salted replicas
-    with mock.patch.object(planner, "_salt_target", lambda work, parallelism: 1):
+    # a salting target of 2 passes -> one AOI per slice: every multi-AOI
+    # cell gets salted replicas
+    with mock.patch.object(planner, "SALT_TARGET", 2):
         idx = planner.prepare_aoi_index(spark, aoi_df, GRID_NAME)
     assert idx.salted
     salted = run_zonal_query(
@@ -410,9 +411,9 @@ def test_lookup_paths_agree(spark, tables, monkeypatch):
     """The driver's broadcast lookup (prepare_aoi_index) and the cogroup
     route's salted AOI-cell frame (_salted_aoi_cells) agree per cell on
     the AOI list, n_salt and each AOI's salt slot (aois[s::n_salt]). A
-    salting target of 1 salts every cell shared by several AOIs."""
+    salting target of 2 passes salts every cell shared by several AOIs."""
     _, aoi_df = tables
-    monkeypatch.setattr(planner, "_salt_target", lambda work, parallelism: 1)
+    monkeypatch.setattr(planner, "SALT_TARGET", 2)
     idx = planner.prepare_aoi_index(spark, aoi_df, GRID_NAME)
     frame = planner._salted_aoi_cells(planner.aoi_cells(aoi_df, GRID_NAME))
     assert max(n for n, _ in idx.lookup.value.values()) > 1
@@ -437,33 +438,30 @@ def _assert_lookup_matches_frame(lookup, frame):
 
 
 @settings(max_examples=300, deadline=None)
-@given(
-    aois=st.lists(st.integers(1, 5000), min_size=1, max_size=40),
-    parallelism=st.integers(1, 256),
-)
-def test_salting_rule_bounds_every_slice(aois, parallelism):
-    """For cells of ``aois`` AOIs each: a cell whose cost (1 + its AOIs)
-    is within the target max(64, (cells + AOI-cells) / parallelism) is
-    never split, no slice aois[s::n_salt] costs more than the target,
-    every slice holds an AOI, and one slice fewer would overrun."""
-    work = len(aois) + sum(aois)
-    target = planner._salt_target(work, parallelism)
-    assert target == max(64, work / parallelism)
-    per = planner._aois_per_slice(work, parallelism)
+@given(aois=st.lists(st.integers(1, 5000), min_size=1, max_size=40), target=st.integers(1, 600))
+def test_salting_rule_bounds_every_slice(aois, target):
+    """For cells of ``aois`` AOIs each and a salting target of ``target``
+    passes: a cell whose cost (1 + its AOIs) is within the target is never
+    split, no slice aois[s::n_salt] costs more than the target (a target
+    below 2 passes still leaves one AOI per slice), every slice holds an
+    AOI, and one slice fewer would overrun."""
+    assert planner.SALT_TARGET == 256
+    with mock.patch.object(planner, "SALT_TARGET", target):
+        per = planner._aois_per_slice()
+    bound = max(target, 2)
     for a in aois:
         n = -(-a // per)
         slices = [len(range(s, a, n)) for s in range(n)]
-        assert min(slices) >= 1 and 1 + max(slices) <= target, (a, n, target)
+        assert min(slices) >= 1 and 1 + max(slices) <= bound, (a, n, target)
         if 1 + a <= target:
             assert n == 1
         if n > 1:
-            assert 1 + -(-a // (n - 1)) > target
+            assert 1 + -(-a // (n - 1)) > bound
 
 
-def _stacks(stacks, wide_cells):
+def _stacks(stacks):
     """AOI rows: per ``(cell index, k)`` of ``stacks``, k tiny AOIs inside
-    that fixture cell; plus, with ``wide_cells`` > 0, one box of that many
-    cells a side over the corpus."""
+    that fixture cell."""
     from gfw_raster_analysis_lambda_spark.functions import geometry as geo
 
     rows = []
@@ -473,33 +471,32 @@ def _stacks(stacks, wide_cells):
             lon = lon0 + 0.01 + (i % 20) * 0.011
             lat = lat0 + 0.01 + (i // 20) * 0.02
             rows.append((f"s{j}_{i:03d}", geo.wkb_dumps(geo.box(lon, lat, lon + 0.009, lat + 0.012))))
-    if wide_cells:
-        h = wide_cells * 0.25 / 2
-        rows.append(("wide", geo.wkb_dumps(geo.box(10.5 - h, 20.5 - h, 10.5 + h, 20.5 + h))))
     return rows
 
 
 @settings(max_examples=6, deadline=None, suppress_health_check=[HealthCheck.too_slow])
 @given(
     stacks=st.lists(st.tuples(st.integers(0, 15), st.integers(1, 220)), min_size=1, max_size=3),
-    wide_cells=st.sampled_from([0, 8, 20]),
+    target=st.sampled_from([2, 17, 64, 256]),
 )
-def test_salting_rule_routes_agree(spark, stacks, wide_cells):
+def test_salting_rule_routes_agree(spark, stacks, target):
     """On random stacked AOI batches the driver lookup salts each cell as
     the rule's definition says (:func:`_rule_salts`), and the cogroup
     route's salted frame agrees with it cell by cell and slot by slot."""
-    rows = _stacks(stacks, wide_cells)
-    lookup, salted = planner._aoi_lookup_from_aois(
-        spark, [{"aoi_id": a, "geom_wkb": w} for a, w in rows], GRID_NAME
-    )
-    try:
-        rule = _rule_salts(spark, rows)
-        assert {c: n for c, (n, _) in lookup.value.items()} == rule
-        assert salted == {c: n for c, n in rule.items() if n > 1}
-        aoi_df = spark.createDataFrame(rows, "aoi_id string, geom_wkb binary")
-        _assert_lookup_matches_frame(lookup.value, planner._salted_aoi_cells(planner.aoi_cells(aoi_df, GRID_NAME)))
-    finally:
-        lookup.unpersist()
+    rows = _stacks(stacks)
+    with mock.patch.object(planner, "SALT_TARGET", target):
+        lookup, salted = planner._aoi_lookup_from_aois(
+            spark, [{"aoi_id": a, "geom_wkb": w} for a, w in rows], GRID_NAME
+        )
+        try:
+            rule = _rule_salts(rows)
+            assert {c: n for c, (n, _) in lookup.value.items()} == rule
+            assert salted == {c: n for c, n in rule.items() if n > 1}
+            aoi_df = spark.createDataFrame(rows, "aoi_id string, geom_wkb binary")
+            frame = planner._salted_aoi_cells(planner.aoi_cells(aoi_df, GRID_NAME))
+            _assert_lookup_matches_frame(lookup.value, frame)
+        finally:
+            lookup.unpersist()
 
 
 # 15. finest-grid co-registration: biomass lives on 4/512 (2x coarser);
@@ -793,17 +790,16 @@ def _stacked_aois(n):
 
 
 def _hot_cell_aois():
-    """300 stacked AOIs, a cell the salting rule splits (into 5 slices
-    at the floor target of 64), plus two normal AOIs."""
+    """300 stacked AOIs, a cell the salting rule splits (into 2 slices at
+    its target of 256 passes), plus two normal AOIs."""
     return _stacked_aois(300) + [(a, w) for a, w in fixtures.fixture_aois()[:2]]
 
 
-def _rule_salts(spark, rows):
-    """{cell: n_salt} the salting rule gives the AOI batch ``rows`` on
-    this session, worked out here from its definition: a cell costs 1 +
-    its AOIs, the target is max(64, (cells + AOI-cells) / default
-    parallelism), and a cell takes the fewest slices aois[s::n] whose
-    cost is within the target."""
+def _rule_salts(rows):
+    """{cell: n_salt} the salting rule gives the AOI batch ``rows``, worked
+    out here from its definition: a cell costs 1 + its AOIs and takes the
+    fewest slices aois[s::n] whose cost is within ``planner.SALT_TARGET``
+    (one AOI per slice when the target is below 2)."""
     from gfw_raster_analysis_lambda_spark.functions import geometry as geo
     from gfw_raster_analysis_lambda_spark.functions import grid as G
 
@@ -811,7 +807,7 @@ def _rule_salts(spark, rows):
     for _, wkb in rows:
         for c in G.polygon_to_cells(fixtures.GRID, geo.wkb_loads(wkb)).tolist():
             counts[c] = counts.get(c, 0) + 1
-    target = max(64, (len(counts) + sum(counts.values())) / spark.sparkContext.defaultParallelism)
+    target = max(planner.SALT_TARGET, 2)
     out = {}
     for c, a in counts.items():
         n = 1
@@ -854,7 +850,7 @@ def test_colocated_hot_cell_diversion(spark, corpus, env, tmp_path, monkeypatch)
         .toPandas().reset_index(drop=True)
     )
     # the hot cell is diverted and split as the rule says
-    rule = {c: n for c, n in _rule_salts(spark, rows).items() if n > 1}
+    rule = {c: n for c, n in _rule_salts(rows).items() if n > 1}
     assert took["salted"] == rule and min(rule.values()) >= 2
     assert_frames_match(got, oracle.run_oracle(q, env, rows))
 
@@ -894,25 +890,24 @@ def test_hot_cell_over_bound_salting(spark, tables, env, monkeypatch):
         .toPandas().sort_values("aoi_id")
     )
     n_salt = int(slots["_n_salt"].iloc[0])
-    assert n_salt == _rule_salts(spark, rows)[hot] >= 2 and slots["_salt"].nunique() == n_salt
+    assert n_salt == _rule_salts(rows)[hot] >= 2 and slots["_salt"].nunique() == n_salt
     assert slots["_salt"].tolist() == [i % n_salt for i in range(len(slots))]
     assert_frames_match(got.reset_index(drop=True), oracle.run_oracle(q, env, rows))
 
 
-# 19c. a hot cell whose kernel work stays within one core's share of the
-# kernel stage is not split: 68 stacked AOIs (the batch workload's
-# hotspot, which a 64-AOI count rule salted) among a wide AOI's cells
-# stream in the one colocated mapInArrow stage
-def test_hot_cell_within_stage_share_streams(spark, sorted_images, env, monkeypatch):
+# 19c. a hot cell whose kernel work is within the salting target is not
+# split: 68 stacked AOIs (the batch workload's hotspot, which a 64-AOI
+# count rule salted) stream in the one colocated mapInArrow stage
+def test_hot_cell_within_salt_target_streams(spark, sorted_images, env, monkeypatch):
     from gfw_raster_analysis_lambda_spark.functions import geometry as geo
     from gfw_raster_analysis_lambda_spark.functions import grid as G
 
-    rows = _stacked_aois(68) + [("wide", geo.wkb_dumps(geo.box(7.5, 17.5, 12.5, 22.5)))]
+    rows = _stacked_aois(68) + [(a, w) for a, w in fixtures.fixture_aois()[:2]]
     (hot,) = G.polygon_to_cells(fixtures.GRID, geo.wkb_loads(rows[0][1])).tolist()
-    assert set(_rule_salts(spark, rows).values()) == {1}
+    assert set(_rule_salts(rows).values()) == {1}
     aoi_df = spark.createDataFrame(rows, "aoi_id string, geom_wkb binary")
     idx = planner.prepare_aoi_index(spark, aoi_df, GRID_NAME)
-    assert len(idx.lookup.value[hot][1]) == 69
+    assert len(idx.lookup.value[hot][1]) >= 68
     assert idx.salted == {}
     q = ZonalQuery(
         base_layer="tcl_year",
@@ -1206,10 +1201,12 @@ def test_over_bound_set_enumerates_aois_once(spark, tables, env, monkeypatch):
 )
 def test_over_bound_evaluates_aoi_cells_once(spark, tables, env, tmp_path, monkeypatch, route):
     """Over the driver bounds the AOI-cell frame is evaluated once, though
-    the salting count, the tile join, the cogroup's AOI side and (in the
-    checkpoint functions) the emptiness check and the done markers all
-    read it: a counting UDF on the AOI frame sees each AOI once after the
-    bounded read (which the checkpoint functions do not make)."""
+    the tile join, the cogroup's AOI side and (in the checkpoint
+    functions) the emptiness check and the done markers all read it: a
+    counting UDF on the AOI frame sees each AOI once after the bounded
+    read (which the checkpoint functions do not make). The frame's cache
+    is released by ``close()`` or when the checkpoint function returns:
+    no persisted RDD outlives the call."""
     from pyspark.sql import functions as F
 
     from gfw_raster_analysis_lambda_spark import checkpoint
@@ -1232,6 +1229,7 @@ def test_over_bound_evaluates_aoi_cells_once(spark, tables, env, tmp_path, monke
         aggregates=(Aggregate("count", None, "n"),),
     )
     read = {"evaluations": 0}
+    before = _persisted_rdds(spark)
     if route == "run_zonal_queries":
         orig = planner.prepare_aoi_index
 
@@ -1248,6 +1246,33 @@ def test_over_bound_evaluates_aoi_cells_once(spark, tables, env, tmp_path, monke
         run = getattr(checkpoint, route)
         got = run(spark, images, aoi_df, q, env, GRID_NAME, str(tmp_path / "ck")).toPandas()
     assert acc.value - read["evaluations"] == len(aois)
+    assert not _persisted_rdds(spark) - before
+    assert_frames_match(got.reset_index(drop=True), oracle.run_oracle(q, env, aois))
+
+
+def _persisted_rdds(spark):
+    """The ids of the session's persisted RDDs, cached frames included."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs())
+
+
+def test_run_zonal_query_over_bound_leaves_no_cache(spark, tables, env, monkeypatch):
+    """run_zonal_query returns a bare DataFrame, so its caller has no
+    ``close()`` to call: over the driver bounds it persists nothing (a
+    cached AOI-cell frame would stay in the cache manager for the rest of
+    the session and serve later requests over the same AOI plan)."""
+    images, aoi_df = tables
+    aois = fixtures.fixture_aois()[:3]
+    aoi_df = aoi_df.filter(aoi_df.aoi_id.isin([a[0] for a in aois]))
+    q = ZonalQuery(
+        base_layer="tcl_year",
+        group_layers=("tcl_year",),
+        aggregates=(Aggregate("count", None, "n"),),
+    )
+    monkeypatch.setattr(planner, "BROADCAST_CELL_LIMIT", 0)
+    before = _persisted_rdds(spark)
+    got = run_zonal_query(spark, images, aoi_df, q, env, GRID_NAME).toPandas()
+    assert not _persisted_rdds(spark) - before
+    assert planner.aoi_cells(aoi_df, GRID_NAME).storageLevel.useMemory is False
     assert_frames_match(got.reset_index(drop=True), oracle.run_oracle(q, env, aois))
 
 

@@ -11,10 +11,9 @@ call it. Prints ms per cell, split between the cell body (decode, masks,
 aggregation: ``zonal._cell_body``) and the output assembly (the Arrow
 record batch), ms per AOI-cell, the slowest cell, the least-squares fit
 of ms per cell against AOIs per cell (the planner's salting rule costs a
-cell 1 + its AOIs full-tile passes), the rule's decision for the batch
-at this machine's parallelism (the work W = cells + AOI-cells, the
-target T and the hottest cell's number of slices), then the cProfile
-listing of a second pass.
+cell 1 + its AOIs full-tile passes), the rule's decision for the
+hottest cell (its cost against ``planner.SALT_TARGET`` and its number
+of slices), then the cProfile listing of a second pass.
 
 Usage: python tools/profile_kernel.py [--seed N] [--cells N] [--top N]
 """
@@ -43,7 +42,6 @@ from gfw_raster_analysis_lambda_spark.functions import grid as G  # noqa: E402
 from gfw_raster_analysis_lambda_spark.operators import zonal  # noqa: E402
 from gfw_raster_analysis_lambda_spark.plans import planner  # noqa: E402
 from gfw_raster_analysis_lambda_spark.plans.sql_frontend import parse_raster_sql  # noqa: E402
-from gfw_raster_analysis_lambda_spark.session import _machine_cpus  # noqa: E402
 from gfw_raster_analysis_lambda_spark.sources import fixtures  # noqa: E402
 
 
@@ -55,10 +53,9 @@ class _Lookup:
 
 
 def kernel_input(seed: int, max_cells: int | None):
-    """(kernel, body, [(cell_id, n_aois, tile frame)], work) for the
-    batch workload's AOI batch of ``seed``, hottest cells first.
-    ``body(frame)`` runs only the kernel's cell body on the frame's cell;
-    ``work`` is the whole batch's cells + AOI-cells, the salting rule's W."""
+    """(kernel, body, [(cell_id, n_aois, tile frame)]) for the batch
+    workload's AOI batch of ``seed``, hottest cells first. ``body(frame)``
+    runs only the kernel's cell body on the frame's cell."""
     env = fixtures.fixture_environment(grid=corpus.GRID_NAME)
     grid = G.get_grid(corpus.GRID_NAME)
     lo, hi = inputs.BATCH_SIDES
@@ -67,13 +64,8 @@ def kernel_input(seed: int, max_cells: int | None):
     )
     x0, y0, nx, ny = corpus.extent()
     by_cell: dict = {}
-    all_cells: set = set()
-    pairs = 0
     for aoi_id, wkb in aois:
-        cells_of = G.polygon_to_cells(grid, geo.wkb_loads(wkb)).tolist()
-        all_cells.update(cells_of)
-        pairs += len(cells_of)
-        for c in cells_of:
+        for c in G.polygon_to_cells(grid, geo.wkb_loads(wkb)).tolist():
             cx, cy = (int(v) for v in G.cell_to_xy(c))
             if x0 <= cx < x0 + nx and y0 <= cy < y0 + ny:
                 by_cell.setdefault(c, []).append((aoi_id, wkb))
@@ -98,7 +90,7 @@ def kernel_input(seed: int, max_cells: int | None):
         frames.append((c, len(by_cell[c]), pd.DataFrame(
             rows, columns=["layer", "cell_id", "bytes", "w", "h", "fmt", "src_cell_id"]
         )))
-    return kernel, body, frames, len(all_cells) + pairs
+    return kernel, body, frames
 
 
 def main():
@@ -108,7 +100,7 @@ def main():
     ap.add_argument("--top", type=int, default=30, help="profile rows to print")
     args = ap.parse_args()
 
-    kernel, body, frames, work = kernel_input(args.seed, args.cells)
+    kernel, body, frames = kernel_input(args.seed, args.cells)
     n_pairs = sum(n for _, n, _ in frames)
     kernel(frames[0][2])  # first call pays the imports and lookup tables
     times = []
@@ -141,11 +133,10 @@ def main():
     per_aoi, per_cell = np.polyfit(n_aois, ms, 1)
     r2 = 1 - ((ms - (per_cell + per_aoi * n_aois)) ** 2).sum() / max(((ms - ms.mean()) ** 2).sum(), 1e-12)
     print(f"  fit: {per_cell:.2f} ms/cell + {per_aoi:.2f} ms/AOI, r^2 {r2:.2f} over {n_cells} cells")
-    cpus = _machine_cpus()
     hot_c, hot_n = max(((c, n) for _, c, n in times), key=lambda t: t[1])
-    n_salt = -(-hot_n // planner._aois_per_slice(work, cpus))
+    n_salt = -(-hot_n // planner._aois_per_slice())
     print(
-        f"  salting rule at parallelism {cpus}: W = {work}, T = {planner._salt_target(work, cpus):.1f};"
+        f"  salting rule, target {planner.SALT_TARGET} passes:"
         f" hottest cell {hot_c}: cost {1 + hot_n}, n_salt {n_salt}"
     )
 
